@@ -54,11 +54,71 @@ _NATIVE_ALLOC_ENV = {
 }
 
 
+#: ceiling of the default driver heap (the r15 calibration heap)
+_MAX_DEFAULT_HEAP_MB = 16 * 1024
+#: share of the host's memory (or of the cgroup limit) the default heap
+#: takes: the heap is pre-touched below, and the Python workers, the
+#: JVM's off-heap and the OS page cache need the rest
+_HEAP_SHARE = 0.6
+
+#: Spark's generated-code cache (``CodeGenerator``'s LRU of compiled
+#: classes).  Spark's default of 100 entries is smaller than one pass of
+#: the six flagship/zscore/CUSUM plain+twin queries (191 classes), so
+#: every re-run of a plan in a session paid Janino and JIT compilation
+#: again.  Census (``tools/codegen_census.py``: all 142 registered
+#: queries at sf0.001, twice in one session; BASELINE.md "Generated-code
+#: census"): the working set is about 2,070 classes; the second sweep
+#: compiled 2,840 classes at the default size and 87 at this one, and
+#: Metaspace fell from 235 to 214 MB (evicted classes were generated and
+#: loaded again).  About 2x the working set leaves headroom for callers'
+#: own plans.  Static conf: it takes effect only in a new JVM.
+CODEGEN_CACHE_ENTRIES = 4096
+
+
+def _host_memory_bytes() -> int | None:
+    """Memory this process may use: MemTotal, capped by a cgroup (v2 or
+    v1) memory limit when one is set.  None when neither is readable."""
+    limits = []
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    limits.append(int(line.split()[1]) * 1024)
+                    break
+    except OSError:
+        pass
+    for path in (
+        "/sys/fs/cgroup/memory.max",
+        "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+    ):
+        try:
+            with open(path) as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():
+            limits.append(int(raw))
+    return min(limits) if limits else None
+
+
+def default_driver_memory(host_bytes: int | None = None) -> str:
+    """Driver heap when ``SPARK_DRIVER_MEMORY`` is unset: min(16g, 0.6 x
+    the host's memory or cgroup limit), in MiB.  The heap is pinned and
+    pre-touched at launch, so asking for more than the host has kills
+    the JVM before any work (``mmap ... failed``)."""
+    if host_bytes is None:
+        host_bytes = _host_memory_bytes()
+    if host_bytes is None:
+        return f"{_MAX_DEFAULT_HEAP_MB}m"
+    share_mb = int(host_bytes * _HEAP_SHARE) >> 20
+    return f"{min(_MAX_DEFAULT_HEAP_MB, share_mb)}m"
+
+
 def get_spark(app_name: str = "lookout_spark", cpus: int | None = None) -> SparkSession:
     """Return (or create) the engine's SparkSession."""
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or os.cpu_count() or 4
-    driver_mem = os.environ.get("SPARK_DRIVER_MEMORY", "16g")
+    driver_mem = os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory()
     for k, v in _NATIVE_ALLOC_ENV.items():
         os.environ.setdefault(k, v)
     builder = (
@@ -91,6 +151,7 @@ def get_spark(app_name: str = "lookout_spark", cpus: int | None = None) -> Spark
             f"-Xms{driver_mem} -XX:+AlwaysPreTouch",
         )
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
     # cluster twin of the os.environ defaults above (no-op in local mode:

@@ -452,8 +452,12 @@ class InferenceScheduler:
         branches = []
         for m in slots:
             slot, stamp, n_in = m["_slot"], m["_slot_str"], m["n_in"]
+            # select the metadata group by its stamp string, never by a
+            # timestamp literal: codegen inlines a timestamp literal into
+            # the generated Java (new classes on every slot), while a
+            # string literal is passed in as a reference object
             rows = parsed.filter(
-                (F.col("_slot") == F.lit(slot)) & in_slot_cond
+                (F.col("_slot_str") == F.lit(stamp)) & in_slot_cond
             ).drop("_file", "_component", "_slot_str", "_slot")
             if cfg.component_columns:
                 # per-component files carry disjoint sensor subsets at the

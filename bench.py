@@ -6,8 +6,14 @@ JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 
 Each query executes end-to-end (results drained through the noop sink —
 every output column materializes; nothing ships to the driver).  One
-warm-up pass on the smallest SF primes the JVM/codegen so the measured
-pass reflects steady-state.
+warm-up pass on the smallest SF warms the JIT and the parquet footer
+caches.  Generated code is cached per plan, and the session's codegen
+cache holds the engine's whole working set
+(``session.CODEGEN_CACHE_ENTRIES``), so the warm-up also compiles each
+query whose code is the same at both scales.  Under Spark's 100-entry
+default the queries evicted each other and the warm-up primed no
+codegen: first-rep ``runs`` values drop from that change on, while the
+min-of-3 ``queries`` stay comparable across it.
 """
 
 from __future__ import annotations
@@ -122,7 +128,8 @@ def main() -> None:
     # third run read start=5.6 purely from its own warmup)
     load_prelaunch = [round(x, 2) for x in os.getloadavg()]
     spark = get_spark("bench")
-    # warm-up at the smallest SF (JIT/codegen/parquet footer caches)
+    # warm-up at the smallest SF (JIT, parquet footer caches, and the
+    # generated code of every plan that is the same at both scales)
     for name in BENCH_QUERIES:
         try:
             run_one(spark, "/root/testdata/sf0.001", name)

@@ -16,6 +16,9 @@ from pyspark.sql import functions as F
 from amazon_lookout_for_equipment_python_sdk_spark.operators import (
     routing as rt,
 )
+from amazon_lookout_for_equipment_python_sdk_spark.session import (
+    default_driver_memory,
+)
 
 UNIFORM = "/root/testdata/sf0.1"
 SKEWED = os.path.join(
@@ -271,21 +274,35 @@ def test_per_task_exec_bytes_master_forms():
 
 
 def test_session_budget_reads_live_conf(spark):
-    """The derivation reads the REAL session conf: the test session is
-    local[8] with a 16 GiB heap -> 1.2 GiB/task, 4x the calibration
-    anchor, so the default window budget is 4e5 here (and explicit
-    budget_rows= still overrides, as every decision pin in this file
-    relies on)."""
-    import os as _os
-
-    if _os.environ.get("SPARK_DRIVER_MEMORY", "16g") != "16g":
-        pytest.skip("budget pin assumes the default 16g test heap")
+    """The derivation reads the REAL session conf: the live
+    ``spark.driver.memory`` (the heap ``get_spark`` chose: the
+    ``SPARK_DRIVER_MEMORY`` override, else its host-sized default) x 0.6
+    over the ``local[N]`` cores, and the default window budget scales
+    from that (explicit budget_rows= still overrides, as every decision
+    pin in this file relies on).  The heap is cross-checked against the
+    JVM's own max heap, so a conf string the JVM never received fails."""
+    heap = spark.conf.get("spark.driver.memory")
+    assert heap == (
+        os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory()
+    )
+    heap_bytes = rt._parse_mem(heap)
+    # the JVM rounds the heap up to its alignment (a G1 region: <= 32 MiB)
+    jvm_heap = spark._jvm.java.lang.Runtime.getRuntime().maxMemory()
+    assert 0 <= jvm_heap - heap_bytes < 32 << 20
     cores = int(spark.conf.get("spark.master").split("[")[1].rstrip("]"))
-    expect = int(16 * (1 << 30) * 0.6) // cores
+    expect = int(heap_bytes * 0.6) // cores
     assert rt.per_task_exec_bytes(spark) == expect
     assert rt.session_budget_rows(spark) == rt.derive_budget_rows(
         rt.WINDOW_BUDGET_ROWS, expect
     )
+
+
+def test_default_driver_memory_fits_the_host():
+    """min(16g, 0.6 x host memory): a heap the host can pre-touch."""
+    gib = 1 << 30
+    assert default_driver_memory(15 * gib) == "9216m"
+    assert default_driver_memory(8 * gib) == "4915m"
+    assert default_driver_memory(64 * gib) == "16384m"
 
 
 def test_shared_probe_skips_the_scan(spark, monkeypatch):
