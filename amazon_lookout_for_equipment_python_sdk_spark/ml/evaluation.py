@@ -86,6 +86,23 @@ class ModelEvaluation:
         self.scored = scored
         self.labels = labels
         self.rate = sampling_rate_s
+        self._timeline_df: DataFrame | None = None
+
+    def _timeline(self) -> DataFrame:
+        """``scored``'s (timestamp, prediction) columns, materialized on
+        first use.  Every range, stamp and ranking call reads them (a
+        ranking twice per histogram pass), and left lazy each read re-runs
+        the whole scoring plan (resample, ffill, pivot, projection) from
+        the raw readings.  localCheckpoint, not persist: the
+        lineage is cut so later plans stay small, no CacheManager entry
+        is registered, and the blocks go to the ContextCleaner with this
+        object.  Built lazily so constructing the evaluation stays
+        job-free."""
+        if self._timeline_df is None:
+            self._timeline_df = self.scored.select(
+                "timestamp", "prediction"
+            ).localCheckpoint(eager=True)
+        return self._timeline_df
 
     def predicted_ranges(self) -> DataFrame:
         # keyless compact_runs = one-partition window; acceptable here
@@ -93,7 +110,7 @@ class ModelEvaluation:
         # slots, e.g. ~105k/year at PT5M), not raw data.  Multi-asset
         # callers should compact per key via compact_runs(key_col=...).
         return compact_runs(
-            self.scored,
+            self._timeline(),
             F.col("prediction") == 1,
             ts_col="timestamp",
             step_seconds=self.rate,
@@ -105,7 +122,7 @@ class ModelEvaluation:
     def stamped_points(self) -> DataFrame:
         """0 = normal, 1 = inside predicted range, 2 = inside label range."""
         return stamp_points(
-            self.scored.select("timestamp"),
+            self._timeline().select("timestamp"),
             self.predicted_ranges().select("start", "end"),
             self.labels,
             ts_col="timestamp",

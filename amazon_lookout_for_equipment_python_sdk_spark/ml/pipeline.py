@@ -39,6 +39,10 @@ from ..functions.datetime_utils import iso8601_duration_to_seconds
 from ..operators.timeseries import resample_ffill
 
 
+#: training-score quantiles tried as thresholds by label calibration
+CALIBRATION_QUANTILES = (0.5, 0.75, 0.9, 0.95, 0.99, 0.995)
+
+
 @dataclass
 class ModelConfig:
     """Mirror of the reference's create_model request surface
@@ -185,6 +189,13 @@ class AnomalyDetector:
                 wide = wide.filter(
                     F.col("bucket_ts") < F.lit(cfg.training_end).cast("timestamp")
                 )
+            # the slot table feeds four actions (scaler fit, PCA fit, the
+            # quantile pass, the calibration F1 agg); left lazy, each
+            # re-runs resample + ffill + pivot from the raw readings.
+            # localCheckpoint (not persist) cuts the lineage so the later
+            # plans are small, registers no CacheManager entry, and its
+            # blocks go to the ContextCleaner with the frame
+            wide = wide.localCheckpoint(eager=True)
             assembler = VectorAssembler(inputCols=self.tags, outputCol="_feat")
             feats = assembler.transform(wide)
             scaler = StandardScaler(
@@ -204,34 +215,39 @@ class AnomalyDetector:
             self._std = std
             self._W = self.pca_model.pc.toArray()
             train_scored = self._score_columns(wide)
+            # one exact (relativeError=0) quantile pass serves p50, the
+            # threshold and the calibration candidates alike
             qs = train_scored.approxQuantile(
-                "anomaly_raw", [0.5, cfg.threshold_quantile], 0.0
+                "anomaly_raw",
+                [0.5, cfg.threshold_quantile, *CALIBRATION_QUANTILES],
+                0.0,
             )
             self._err_p50 = max(qs[0], 1e-12)
             self.threshold = qs[1]
             if labels is not None:
-                self._calibrate_threshold(train_scored, labels)
+                self._calibrate_threshold(train_scored, labels, qs[2:])
             cfg.status = "SUCCESS"
         except Exception:
             cfg.status = "FAILED"
             raise
         return self
 
-    def _calibrate_threshold(self, scored: DataFrame, labels: DataFrame) -> None:
-        """With label ranges, pick the candidate quantile threshold that
-        maximizes point-level F1 against label membership."""
-        from ..operators.intervals import range_join_bucketed
+    def _calibrate_threshold(
+        self, scored: DataFrame, labels: DataFrame, cands: list[float]
+    ) -> None:
+        """With label ranges, pick the candidate threshold (``cands``: the
+        training scores at :data:`CALIBRATION_QUANTILES`) that maximizes
+        point-level F1 against label membership."""
+        from ..operators.intervals import stamp_points
 
-        flagged = range_join_bucketed(
+        # label membership by row-local broadcast stamping (no point
+        # shuffle, no dedup): bucket_ts is unique per pivoted slot row, so
+        # one stamped row per slot is exactly one membership flag per slot
+        # (the labels stamp as code 1 in the ``prediction`` column)
+        flagged = stamp_points(
             scored.select("bucket_ts", "anomaly_raw"),
-            labels.select("start", "end"),
+            labels,
             ts_col="bucket_ts",
-        ).withColumn("is_anom", F.col("start").isNotNull().cast("int"))
-        flagged = flagged.groupBy("bucket_ts", "anomaly_raw").agg(
-            F.max("is_anom").alias("is_anom")
-        )
-        cands = scored.approxQuantile(
-            "anomaly_raw", [0.5, 0.75, 0.9, 0.95, 0.99, 0.995], 0.0
         )
         # F1 for every candidate in ONE distributed conditional aggregation
         # (a driver-side pandas sweep would cap out at slot counts that fit
@@ -239,7 +255,7 @@ class AnomalyDetector:
         aggs = []
         for i, t in enumerate(cands):
             pred = F.col("anomaly_raw") > F.lit(float(t))
-            is_anom = F.col("is_anom") == 1
+            is_anom = F.col("prediction") == 1
             aggs.append(
                 F.sum(F.when(pred & is_anom, 1).otherwise(0)).alias(f"_tp{i}")
             )

@@ -121,7 +121,13 @@ class Catalog:
             out = out.withColumn("ts_date", F.to_date("ts"))
             part_cols.append("ts_date")
         data_path = os.path.join(path, "data")
-        n_added = out.count()
+        # row counts come from the parquet footers (a metadata read), never
+        # from the CSVs, which would parse every file a second time
+        before = (
+            self.spark.read.parquet(data_path).count()
+            if mode == "append" and os.path.isdir(data_path)
+            else 0
+        )
         (
             out.repartition(*[F.col(c) for c in part_cols])
             .write.mode(mode)
@@ -132,7 +138,7 @@ class Catalog:
         self._update_meta(name, status="ACTIVE", rows=total)
         # rows_ingested = THIS job's rows (append accumulates; meta.rows
         # tracks the cumulative table size)
-        return {"status": "SUCCESS", "rows_ingested": n_added}
+        return {"status": "SUCCESS", "rows_ingested": total - before}
 
     def load_dataset(self, name: str) -> DataFrame:
         return self.spark.read.parquet(

@@ -13,15 +13,16 @@ from amazon_lookout_for_equipment_python_sdk_spark.operators import multimodal a
 from amazon_lookout_for_equipment_python_sdk_spark.sources import Catalog
 
 
-def _write_component_csvs(root, components):
+def _write_component_csvs(root, components, n_rows=10, first_minute=0):
     """Write the reference's per-component CSV directory layout
-    (dataset.py:154-167): one dir per component, Timestamp first column."""
+    (dataset.py:154-167): one dir per component, Timestamp first column,
+    ``n_rows`` one-minute rows from ``first_minute``."""
     for comp, tags in components.items():
         d = os.path.join(root, comp)
         os.makedirs(d)
         with open(os.path.join(d, f"{comp}.csv"), "w") as f:
             f.write("Timestamp," + ",".join(tags) + "\n")
-            for i in range(10):
+            for i in range(first_minute, first_minute + n_rows):
                 vals = ",".join(str(float(i + j)) for j in range(len(tags)))
                 f.write(f"2024-01-01T00:{i:02d}:00.000000,{vals}\n")
 
@@ -104,12 +105,22 @@ def test_catalog_ingest_append_mode(catalog, tmp_path):
     schema_json = sch.create_data_schema({"pump": ["Timestamp", "p1"]})
     catalog.create_dataset("inc", schema_json)
     assert catalog.ingest_data("inc", csv_root)["rows_ingested"] == 10
-    # append reports THIS job's rows; the table accumulates
+    # append reports THIS job's rows, not the table's or the first job's:
+    # the appended tree has a different row count
+    more_root = str(tmp_path / "csvs3b")
+    _write_component_csvs(more_root, {"pump": ["p1"]}, n_rows=4, first_minute=10)
     assert (
-        catalog.ingest_data("inc", csv_root, mode="append")["rows_ingested"]
-        == 10
+        catalog.ingest_data("inc", more_root, mode="append")["rows_ingested"]
+        == 4
     )
-    assert catalog.load_dataset("inc").count() == 20
+    assert catalog.load_dataset("inc").count() == 14
+    assert catalog.list_datasets(prefix="inc")[0][0]["rows"] == 14
+    # an append into a dataset with no data yet counts from zero
+    catalog.create_dataset("inc2", schema_json)
+    assert (
+        catalog.ingest_data("inc2", more_root, mode="append")["rows_ingested"]
+        == 4
+    )
     with pytest.raises(ValueError, match="mode"):
         catalog.ingest_data("inc", csv_root, mode="merge")
 

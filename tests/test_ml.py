@@ -35,6 +35,25 @@ def synthetic_long(spark):
     )
 
 
+def _window_labels(spark):
+    """The planted anomaly's label range (minutes 1500-1559)."""
+    return spark.createDataFrame(
+        [("2024-03-02 01:00:00", "2024-03-02 02:00:00")], "start string, end string"
+    ).select(
+        F.to_timestamp("start").alias("start"), F.to_timestamp("end").alias("end")
+    )
+
+
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "job census")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(f"{group}-after", "")
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_train_score_detects_anomaly(spark, synthetic_long):
     cfg = ModelConfig(
         model_name="m1",
@@ -118,14 +137,10 @@ def test_transform_is_fully_lazy(spark, synthetic_long):
     det = AnomalyDetector(cfg).fit(
         synthetic_long.filter(F.col("ts") < F.lit("2024-03-02 00:00:00"))
     )
-    sc = spark.sparkContext
-    sc.setJobGroup("transform-lazy-check", "must stay empty")
-    try:
-        scored = det.transform(synthetic_long)
-    finally:
-        sc.setJobGroup("transform-lazy-after", "actions ok")
-    jobs = sc.statusTracker().getJobIdsForGroup("transform-lazy-check")
-    assert list(jobs) == [], jobs
+    scored, jobs = _jobs_in_group(
+        spark, "transform-lazy-check", lambda: det.transform(synthetic_long)
+    )
+    assert jobs == [], jobs
     assert scored.count() > 0
 
 
@@ -228,11 +243,7 @@ def test_evaluation_chain(spark, synthetic_long):
         synthetic_long.filter(F.col("ts") < F.lit("2024-03-02 00:00:00"))
     )
     scored = det.transform(synthetic_long)
-    labels = spark.createDataFrame(
-        [("2024-03-02 01:00:00", "2024-03-02 02:00:00")], "start string, end string"
-    ).select(
-        F.to_timestamp("start").alias("start"), F.to_timestamp("end").alias("end")
-    )
+    labels = _window_labels(spark)
     ev = ModelEvaluation(scored, labels, sampling_rate_s=300)
     pr = ev.predicted_ranges().collect()
     assert pr, "no predicted ranges"
@@ -343,3 +354,151 @@ def test_quality_classifier_learns_and_scores_in_codegen(spark):
     plan = clf.score(test)._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert clf.filter_quality(test, 0.5).count() > 0
+
+
+# --- derived-once intermediates: fit's slot table, the evaluation timeline --
+
+
+def test_label_calibration_matches_numpy_oracle(spark, synthetic_long):
+    """fit(labels=) picks the threshold an independent NumPy sweep picks:
+    exact training-score quantiles (smallest score whose rank reaches q*n),
+    inclusive label membership per slot, first candidate with the best
+    point-level F1, and the plain quantile when no candidate scores F1 > 0."""
+    import numpy as np
+
+    from amazon_lookout_for_equipment_python_sdk_spark.ml.pipeline import (
+        CALIBRATION_QUANTILES,
+    )
+
+    # the training window holds the anomaly and stops before the off period
+    train = synthetic_long.filter(F.col("ts") < F.lit("2024-03-02 09:00:00"))
+    labels = _window_labels(spark)
+    det = AnomalyDetector(ModelConfig(model_name="cal", sampling_rate="PT5M")).fit(
+        train, labels=labels
+    )
+    rows = det._score_columns(det._prepare_wide(train)).select(
+        "bucket_ts", "anomaly_raw"
+    ).collect()
+    ts = np.array([r[0] for r in rows], dtype="datetime64[us]")
+    x = np.array([r[1] for r in rows])
+    assert len(np.unique(ts)) == len(ts)  # one row per slot
+    s = np.sort(x)
+
+    def quantile(q):
+        return s[max(math.ceil(q * len(s)) - 1, 0)]
+
+    member = np.zeros(len(ts), bool)
+    for r in labels.collect():
+        lo, hi = np.datetime64(r["start"], "us"), np.datetime64(r["end"], "us")
+        member |= (ts >= lo) & (ts <= hi)
+    best, best_f1 = quantile(0.99), 0.0
+    for t in (quantile(q) for q in CALIBRATION_QUANTILES):
+        pred = x > t
+        tp = int(np.sum(pred & member))
+        fp = int(np.sum(pred & ~member))
+        fn = int(np.sum(~pred & member))
+        f1 = 2 * tp / max(2 * tp + fp + fn, 1)
+        if f1 > best_f1:
+            best, best_f1 = t, f1
+    assert member.sum() == 13  # 01:00..02:00 inclusive, PT5M slots
+    assert best != quantile(0.99), "labels should move the threshold"
+    assert det.threshold == best
+    assert det._err_p50 == max(quantile(0.5), 1e-12)
+
+
+def test_fit_job_census(spark, synthetic_long):
+    """fit(labels=) derives its slot table once: before it was
+    materialized every consumer (scaler, PCA, two quantile passes, the
+    calibration join) re-ran resample + ffill + pivot, 41-47 jobs here;
+    now 20 at one core and 22 at eight."""
+    train = synthetic_long.filter(F.col("ts") < F.lit("2024-03-02 09:00:00"))
+    labels = _window_labels(spark)
+    det, jobs = _jobs_in_group(
+        spark,
+        "fit-job-census",
+        lambda: AnomalyDetector(
+            ModelConfig(model_name="census", sampling_rate="PT5M")
+        ).fit(train, labels=labels),
+    )
+    assert det.config.status == "SUCCESS"
+    assert len(jobs) <= 22, len(jobs)
+
+
+def test_fit_and_evaluation_add_no_cache_entry(spark, synthetic_long):
+    """The materialized intermediates are local checkpoints, not persisted
+    frames: fit and the evaluation's range and stamp calls leave Spark's
+    CacheManager empty, and constructing the evaluation runs no job."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    det = AnomalyDetector(ModelConfig(model_name="nocache", sampling_rate="PT5M")).fit(
+        synthetic_long.filter(F.col("ts") < F.lit("2024-03-02 09:00:00")),
+        labels=_window_labels(spark),
+    )
+    assert cache.isEmpty()
+    scored = det.transform(synthetic_long)
+    ev, jobs = _jobs_in_group(
+        spark,
+        "evaluation-construct",
+        lambda: ModelEvaluation(scored, _window_labels(spark), sampling_rate_s=300),
+    )
+    assert jobs == [], jobs
+    assert ev.predicted_ranges().count() > 0
+    assert ev.stamped_points().count() == scored.count()
+    assert cache.isEmpty()
+
+
+def test_evaluation_matches_direct_composition(spark, synthetic_long):
+    """The evaluation's materialized timeline changes no result: ranges,
+    stamps and the signal ranking equal the operators composed directly
+    on the lazy scored frame (ranges and stamps exactly; distances to
+    1e-12 relative, in the same order)."""
+    from amazon_lookout_for_equipment_python_sdk_spark.operators.intervals import (
+        compact_runs,
+        stamp_points,
+    )
+    from amazon_lookout_for_equipment_python_sdk_spark.operators.timeseries import (
+        bucket,
+    )
+    from amazon_lookout_for_equipment_python_sdk_spark.operators.wasserstein import (
+        rank_signals_by_shift,
+    )
+
+    det = AnomalyDetector(
+        ModelConfig(model_name="diff", sampling_rate="PT5M", threshold_quantile=0.995)
+    ).fit(synthetic_long.filter(F.col("ts") < F.lit("2024-03-02 00:00:00")))
+    scored = det.transform(synthetic_long)
+    labels = _window_labels(spark)
+    rank_input = synthetic_long.filter(F.col("ts") < F.lit("2024-03-02 09:00:00"))
+    ev = ModelEvaluation(scored, labels, sampling_rate_s=300)
+
+    ranges = compact_runs(
+        scored, F.col("prediction") == 1, ts_col="timestamp", step_seconds=300
+    ).select("start", "end", "n_points")
+    stamped = stamp_points(
+        scored.select("timestamp"),
+        ranges.select("start", "end"),
+        labels,
+        ts_col="timestamp",
+    )
+    tagged = (
+        rank_input.withColumn("_slot_ts", bucket(F.col("ts"), 300))
+        .join(stamped.withColumnRenamed("timestamp", "_slot_ts"), "_slot_ts")
+        .drop("_slot_ts")
+        .withColumn(
+            "subset",
+            F.when(F.col("prediction") == 0, "normal").otherwise("anomalous"),
+        )
+    )
+    ranked = rank_signals_by_shift(
+        tagged, "subset", "normal", "anomalous", key_col="tag", value_col="value"
+    ).collect()
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    assert rows(ev.predicted_ranges()) == rows(ranges)
+    assert rows(ev.stamped_points()) == rows(stamped)
+    got = ev.rank_signals(rank_input).collect()
+    assert [r["tag"] for r in got] == [r["tag"] for r in ranked]
+    for g, want in zip(got, ranked):
+        assert abs(g["distance"] - want["distance"]) <= 1e-12 * abs(want["distance"])
