@@ -501,7 +501,7 @@ def pack_documents_chunked(
 
     Cost: one (group, bucket) corpus exchange + the tiny aggregate and
     its broadcast — worth it once a group's rows exceed the per-task
-    window sort budget (``operators.routing.pack_documents_auto``
+    window sort budget (``operators.routing.route("pack_documents")``
     routes on a probe)."""
     # guard only the three columns the twin actually stages through the
     # prefix-sum join: the full-frame check spuriously rejected inputs

@@ -139,41 +139,6 @@ def _with_digests(docs: DataFrame, num_perm: int) -> DataFrame:
     return docs.withColumn("_h", _h48_col())
 
 
-def minhash_signatures(
-    df: DataFrame,
-    num_perm: int = 8,
-    shingle_n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """MinHash signature rows: (id, perm, minhash: long).
-
-    Permutation p's hash of shingle s is ``(A[p]*h48(s) + B[p]) mod P``
-    where ``h48(s)`` is the first 12 hex chars of md5(s) as a 48-bit int
-    and P is the largest prime < 2^32 — ONE md5 per shingle feeds all
-    permutations (md5 is the dominant pipeline cost; the multiply-add is
-    free), and every step is exact 63-bit-safe integer arithmetic, so the
-    DuckDB oracle reproduces it bit-for-bit.
-
-    Scale: entirely row-local — the per-perm minimum is ``array_min`` over
-    the doc's shingle array inside whole-stage codegen, so signatures cost
-    ZERO shuffles (the naive shape — explode doc x shingle x perm then
-    groupBy — shuffles num_perm x shingle-count rows per doc).
-    """
-    docs = _with_digests(_shingle_array(df, shingle_n, text_col, id_col), num_perm)
-    entries = F.array(
-        *[
-            F.struct(
-                F.lit(p).alias("perm"), _perm_min(p).alias("minhash")
-            )
-            for p in range(num_perm)
-        ]
-    )
-    return docs.select(id_col, F.explode(entries).alias("_e")).select(
-        id_col, F.col("_e.perm").alias("perm"), F.col("_e.minhash").alias("minhash")
-    )
-
-
 def _sig_col(num_perm: int) -> Column:
     """array<long> of the num_perm minhash values (from the ``_h`` base
     hashes)."""

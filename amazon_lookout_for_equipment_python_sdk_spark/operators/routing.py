@@ -1,43 +1,50 @@
-"""Auto-routing between plain operators and their skew-safe twins
+"""Routing between plain operators and their skew-safe twins
 (r9 verdict #5).
 
 Ten operator families ship both a PLAIN form (one per-key window —
 minimal overhead, but a key's whole history serializes onto one task)
 and a SKEW-SAFE twin (a (key, time-bucket) pre-split with exact
 boundary/carry merge — parallel under hot keys and long histories, at
-the cost of an extra tiny aggregate + broadcast join):
+the cost of an extra tiny aggregate + broadcast join).  :data:`FAMILIES`
+holds one row per plain/twin pair (the pack family has two: packing
+and assembly):
 
-==============================  ====================================  ==========
-plain                           twin                                  crossover
-==============================  ====================================  ==========
-timeseries.sessionize           sessionize(skew_buckets=N)            ~1e5 rows/key
-stats.rolling_zscore            stats.rolling_zscore_chunked          ~1e5 rows/key
-stats.cusum_reflected           stats.cusum_reflected_chunked         ~1.5e5 rows/key
-timeseries.asof_join            timeseries.asof_join_chunked          ~1.5e6 rows/key (union of both tables — r11)
-timeseries.lead_pairs           timeseries.lead_pairs_chunked         ~4e6 rows/key (r11)
-timeseries.restamp_positional   timeseries.restamp_positional_chunked ~6e5 rows/key (r11)
-timeseries.ffill                timeseries.ffill_chunked              ~2e6 rows/key (r11; flagship fill)
-timeseries.rolling_range        timeseries.rolling_range_chunked      rows x frame-rows product ~3e7 (r11; compute-bound, not sort-bound)
-stats.ewma                      stats.ewma_chunked                    ~1e5 rows/key (r11; fixed 64-row fold/row)
-corpus.pack_documents           corpus.pack_documents_chunked         ~2e6 rows/group (r12; prefix sum on the numeric doc-id axis)
-==============================  ====================================  ==========
+=============================  ====================================  ==========
+plain                          twin                                  crossover
+=============================  ====================================  ==========
+timeseries.sessionize          sessionize(skew_buckets=N)            ~1e5 rows/key
+stats.rolling_zscore           stats.rolling_zscore_chunked          ~1e5 rows/key
+stats.cusum_reflected          stats.cusum_reflected_chunked         ~1.5e5 rows/key
+timeseries.asof_join           timeseries.asof_join_chunked          ~1.5e6 rows/key (union of both tables — r11)
+timeseries.lead_pairs          timeseries.lead_pairs_chunked         ~4e6 rows/key (r11)
+timeseries.restamp_positional  timeseries.restamp_positional_chunked ~6e5 rows/key (r11)
+timeseries.ffill               timeseries.ffill_chunked              ~2e6 rows/key (r11; flagship fill)
+timeseries.rolling_range       timeseries.rolling_range_chunked      rows x frame-rows product ~3e7 (r11; compute-bound, not sort-bound)
+stats.ewma                     stats.ewma_chunked                    ~1e5 rows/key (r11; fixed 64-row fold/row)
+corpus.pack_documents          corpus.pack_documents_chunked         ~2e6 rows/group (r12; prefix sum on the numeric doc-id axis)
+corpus.assemble_packs          corpus.assemble_packs_chunked         the pack_documents budget
+=============================  ====================================  ==========
 
-The crossover statements used to live only in docstrings ("plain when
-keys >> cores, chunked when histories >> task sort budget") — a 100-TB
-user won't read them mid-incident.  This module turns them into an
-OPT-IN ``auto`` mode: one cheap probe (a single corpus scan whose
-map-side-combined output is one row per key, reduced to four scalars)
-and a documented routing rule.  The registered driver queries keep
-calling the explicit forms — those are the oracle shapes; ``auto`` is
-the deployment convenience.
+``route("<family>", *args, budget_rows=None, probe=None, **kwargs)``
+takes the plain form's own arguments and calls the plain form or the
+twin: one cheap probe (a single corpus scan whose map-side-combined
+output is one row per key, reduced to a few scalars), then the pure
+:func:`plan`.  Output is identical either way (every twin is
+property-pinned equal to its plain form); only the physical plan
+differs.  The registered driver queries keep calling the explicit
+forms — those are the oracle shapes; ``route`` is the deployment
+convenience.  ``tools/ab_twin.py <family>`` times the two forms at the
+bucket argument :func:`plan` returns, which is how the budgets below
+were calibrated.
 
 Routing rule: take the twin iff the probe's ``max_key_rows`` exceeds
-``budget_rows`` — the per-task serialized-sort budget.  Defaults are
-DERIVED FROM THE SESSION (r10 verdict #2): a per-key window's cost
-cliff is where one key's history outgrows a task's execution memory
-and the sort spills, so the budget scales linearly with per-task
-execution memory (``heap x spark.memory.fraction / cores``).  The
-measured calibration points anchor the line:
+``budget_rows`` — the per-task serialized-sort budget (the range row
+routes on a compute product instead, :func:`decide_range_twin`).
+Defaults are DERIVED FROM THE SESSION (r10 verdict #2): a per-key
+window's cost cliff is where one key's history outgrows a task's
+execution memory and the sort spills, so the budget scales linearly
+with per-task execution memory (``heap x spark.memory.fraction /
+cores``).  The measured calibration points anchor the line:
 
 - sessionize / rolling_zscore: ``100_000`` rows/key at this box's
   0.3 GiB/task (local[32], 16 GiB heap, fraction 0.6).  BASELINE.md
@@ -67,13 +74,12 @@ measured calibration points anchor the line:
 Pass ``budget_rows`` explicitly to pin a decision (tests do); pass a
 precomputed :class:`KeyProbe` via ``probe=`` to amortize the probe
 scan across several routed operators over the same frame (r10 verdict
-#4) — ALL the autos accept the same probe shape (as-of wants one
-built over the two tables' union; a keyless lead/restamp probe is the
-whole frame as one key, see :func:`_probe_maybe_keyless`).  Build a
-SHARED probe with ``ts_col=`` set: sessionize ignores the span
-fields, but every other auto falls back to the plain form when the
-probe carries no event-time span (a time-bucketed twin is meaningless
-without one).
+#4) — every row accepts the same probe shape (as-of wants one built
+over the two tables' union; a keyless call is the whole frame as one
+key).  Build a SHARED probe with ``ts_col=`` set: sessionize ignores
+the span fields, but every other row falls back to the plain form when
+the probe carries no event-time span (a time-bucketed twin is
+meaningless without one).
 
 Probe overhead, measured: 0.94 s on the sf10 events fixture (10M rows,
 local[32], warm cache) — under 4% of the cheaper branch of the
@@ -87,15 +93,19 @@ is part of the beyond-reference scale layer.
 
 from __future__ import annotations
 
+import inspect
 import os
 import re
 from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
-from . import stats as _stats
-from . import timeseries as _timeseries
+from . import corpus as _cp
+from . import stats as _st
+from . import timeseries as _ts
 
 #: per-task serialized-sort budget (rows of ONE key on one task) for the
 #: window-frame family AT THE CALIBRATION POINT below — see module doc
@@ -109,7 +119,7 @@ WINDOW_BUDGET_ROWS = 100_000
 CUSUM_BUDGET_ROWS = 150_000
 
 #: as-of join's crossover, r11-measured AT the calibration anchor on
-#: the gen_cusum_xl fixture family (tools/bench_asof_ab.py, noop
+#: the gen_cusum_xl fixture family (tools/ab_twin.py asof_join, noop
 #: drain, BASELINE.md r11 addendum 4): plain 1.3x faster at 100k-315k
 #: rows/key, a TIE at 1.05M (ratio 1.06), twin 1.7x at 5.25M and 3.2x
 #: at 21M.  The constant sits just above the tie so borderline keys
@@ -121,7 +131,7 @@ ASOF_BUDGET_ROWS = 1_500_000
 
 #: lead_pairs' crossover (one ``lead`` over the per-key sort — no
 #: frame aggregate, no second table), r11-measured AT the calibration
-#: anchor on the gen_cusum_xl fixtures (tools/bench_lead_ab.py, noop
+#: anchor on the gen_cusum_xl fixtures (tools/ab_twin.py lead_pairs, noop
 #: drain, BASELINE.md r11 addendum 5): plain ahead through 3M rows/key
 #: (twin 1.26x slower there), the twin ahead from 5M (1.84x faster)
 #: widening to 3.4x at both 10M and 30M.  4e6 is the 3M-5M bracket
@@ -143,7 +153,7 @@ RESTAMP_BUDGET_ROWS = 600_000
 
 #: forward-fill's crossover (one ``last ignorenulls`` over the per-key
 #: sort — the fill inside the flagship resample_ffill idiom), from the
-#: same r11 fixture series (tools/bench_ffill_ab.py, sparse 1-in-20
+#: same r11 fixture series (tools/ab_twin.py ffill, sparse 1-in-20
 #: non-null values, BASELINE.md r11 addendum 6): plain ahead at 300k
 #: (2.0x) and 1M (1.26x), the twin ahead from 3M (1.35x) through 30M
 #: (3.6x).  2e6 is the 1M-3M bracket midpoint — between restamp's and
@@ -156,7 +166,7 @@ FFILL_BUDGET_ROWS = 2_000_000
 #: a row budget: Spark evaluates a trailing RANGE frame by rescanning
 #: the frame per row (measured — NOT incremental), so the per-key cost
 #: is max_key_rows x frame_rows, where frame_rows ~ the key's event
-#: density x range_s.  The r11 series (tools/bench_range_ab.py, dense
+#: density x range_s.  The r11 series (tools/ab_twin.py rolling_range, dense
 #: 1 ev/s and sparse 1 ev/100s cadences, BASELINE.md r11 addendum 7)
 #: is inseparable by rows alone — 100k dense rows route twin (1.8x)
 #: while 300k sparse rows route plain (1.07) — but separates cleanly
@@ -169,7 +179,7 @@ RANGE_PRODUCT_BUDGET = 30_000_000
 
 #: EWMA's crossover (collect_list of the trailing 64 rows + Horner
 #: fold per row — heavy FIXED per-row frame work), r11-measured at the
-#: anchor (tools/bench_ewma_ab.py, BASELINE.md r11 addendum 8): plain
+#: anchor (tools/ab_twin.py ewma, BASELINE.md r11 addendum 8): plain
 #: 1.7x ahead at 30k rows/key, an exact TIE at 100k (0.996), the twin
 #: from 300k (1.23x) through 3M (5.4x) and 10M (5.2x).  The constant
 #: sits ON the measured tie — numerically equal to the window family's
@@ -181,7 +191,7 @@ EWMA_BUDGET_ROWS = 100_000
 #: pack family (corpus.pack_documents / assemble_packs, r12 — the last
 #: serialized-sort-cliff member, r11 verdict #4), measured AT the
 #: calibration anchor on monolithic-group fixtures (tools/gen_pack_xl.py
-#: + bench_pack_ab.py, un-prunable max(pack_offset) drain, BASELINE.md
+#: + tools/ab_twin.py pack_documents, un-prunable drain, BASELINE.md
 #: r12 addendum 2): plain ahead at 300k-1M rows/group (twin 1.26-1.36x
 #: slower), near-tie at 2M (twin 1.08x), the twin ahead from 3M (1.37x
 #: faster) through 5M (1.22x) to 20M (1.62x).  The constant sits at the
@@ -281,7 +291,7 @@ def derive_budget_rows(
 def session_budget_rows(
     spark: SparkSession, base_rows: int = WINDOW_BUDGET_ROWS
 ) -> int:
-    """The budget the autos use when the caller passes none."""
+    """The budget ``route`` uses when the caller passes none."""
     return derive_budget_rows(base_rows, per_task_exec_bytes(spark))
 
 
@@ -319,7 +329,7 @@ def probe_keys(
     ``numeric_axis=True`` probes ``ts_col`` as a plain NUMERIC order
     axis (the pack family's doc-id axis, r12): lo/hi then carry the
     axis values themselves rather than epoch microseconds, and the
-    matching geometry helper is :func:`_bucket_span_ids`."""
+    geometry helper divides them with ``unit=1``."""
     per_key = [F.count(F.lit(1)).alias("_c")]
     if ts_col is not None:
         if numeric_axis:
@@ -386,12 +396,14 @@ def _auto_buckets(probe: KeyProbe, budget_rows: int) -> int:
     return max(2, min(MAX_AUTO_BUCKETS, want))
 
 
-def _bucket_span_s(probe: KeyProbe, budget_rows: int) -> int:
-    """Seconds per (key, bucket) slice.  Divides the HOT KEY'S span
-    when the probe carried one (a hot key concentrated in a narrow
-    slice of a wide corpus still fans out as intended — r10 ADVICE);
-    falls back to the corpus span for probes built before that field
-    existed or when the hot key's timestamps were all null.
+def _bucket_span(probe: KeyProbe, budget_rows: int, unit: int) -> int:
+    """Order-axis units per (key, bucket) slice: seconds for an
+    event-time probe (``unit`` = 1_000_000 µs), ids for a numeric-axis
+    probe (``unit`` = 1).  Divides the HOT KEY'S span when the probe
+    carried one (a hot key concentrated in a narrow slice of a wide
+    corpus still fans out as intended — r10 ADVICE); falls back to the
+    corpus span for probes built before that field existed or when the
+    hot key's order values were all null.
 
     FLOORED so the carry/offset tables stay broadcastable (r11): the
     worst-case carry size is n_keys x (corpus_span / span), bounded to
@@ -401,268 +413,15 @@ def _bucket_span_s(probe: KeyProbe, budget_rows: int) -> int:
     before the carry broadcast can OOM."""
     lo = probe.hot_lo_us if probe.hot_lo_us is not None else probe.lo_us
     hi = probe.hot_hi_us if probe.hot_hi_us is not None else probe.hi_us
-    span_s = max((hi - lo) // 1_000_000, 1)
-    want = max(span_s // _auto_buckets(probe, budget_rows), 1)
-    corpus_span_s = max((probe.hi_us - probe.lo_us) // 1_000_000, 1)
+    span = max((hi - lo) // unit, 1)
+    want = max(span // _auto_buckets(probe, budget_rows), 1)
+    corpus_span = max((probe.hi_us - probe.lo_us) // unit, 1)
     allowed_per_key = max(CARRY_BUDGET_ROWS // max(probe.n_keys, 1), 1)
     # CEILING division (review fix): floor division under-sized the
     # span by up to 2x, letting the worst-case carry overshoot the
     # budget by the same factor
-    floor = -(-corpus_span_s // allowed_per_key)
-    return max(want, floor, 1)
-
-
-def _bucket_span_ids(probe: KeyProbe, budget_rows: int) -> int:
-    """ID units per (key, bucket) slice — :func:`_bucket_span_s` for a
-    NUMERIC order axis (probe built with ``numeric_axis=True``): same
-    hot-span fan-out and the same CARRY_BUDGET_ROWS floor, without the
-    microsecond conversion."""
-    lo = probe.hot_lo_us if probe.hot_lo_us is not None else probe.lo_us
-    hi = probe.hot_hi_us if probe.hot_hi_us is not None else probe.hi_us
-    span = max(hi - lo, 1)
-    want = max(span // _auto_buckets(probe, budget_rows), 1)
-    corpus_span = max(probe.hi_us - probe.lo_us, 1)
-    allowed_per_key = max(CARRY_BUDGET_ROWS // max(probe.n_keys, 1), 1)
     floor = -(-corpus_span // allowed_per_key)
     return max(want, floor, 1)
-
-
-def _resolve(
-    df: DataFrame,
-    key_col: "str | None",
-    ts_col: str | None,
-    budget_rows: int | None,
-    base_rows: int,
-    probe: KeyProbe | None,
-) -> tuple[KeyProbe, int]:
-    """Shared entry logic for the single-frame autos: derive the budget
-    from the session when the caller passed none, and run the probe
-    scan only when the caller didn't hand one in (probe reuse across
-    several routed operators over the same frame — one scan, N
-    decisions).  ``key_col=None`` (the lead/restamp keyless shapes)
-    probes the frame as one key via :func:`_probe_maybe_keyless`."""
-    if budget_rows is None:
-        budget_rows = session_budget_rows(df.sparkSession, base_rows)
-    if probe is None:
-        probe = _probe_maybe_keyless(df, key_col, ts_col)
-    return probe, budget_rows
-
-
-def sessionize_auto(
-    df: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-    gap_minutes: int = 30,
-    tiebreak_col: str | None = None,
-    budget_rows: int | None = None,
-    probe: KeyProbe | None = None,
-) -> DataFrame:
-    """:func:`timeseries.sessionize` with the plain/twin choice made by
-    the probe.  Identical output either way (the twin is property-pinned
-    equal); only the physical plan differs.  ``budget_rows=None`` derives
-    the crossover from the session's per-task memory; ``probe=`` skips
-    the probe scan (share one probe across routed operators)."""
-    probe, budget_rows = _resolve(
-        df, key_col, None, budget_rows, WINDOW_BUDGET_ROWS, probe
-    )
-    buckets = (
-        _auto_buckets(probe, budget_rows)
-        if decide_twin(probe, budget_rows)
-        else None
-    )
-    return _timeseries.sessionize(
-        df,
-        ts_col=ts_col,
-        key_col=key_col,
-        gap_minutes=gap_minutes,
-        tiebreak_col=tiebreak_col,
-        skew_buckets=buckets,
-    )
-
-
-def rolling_zscore_auto(
-    df: DataFrame,
-    window: int,
-    value_col: str = "value",
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    tiebreak_col: str = "event_id",
-    scale: int = 100,
-    budget_rows: int | None = None,
-    probe: KeyProbe | None = None,
-) -> DataFrame:
-    """:func:`stats.rolling_zscore` or its chunked twin by probe.  The
-    twin's ``bucket_span_s`` divides the hot key's probed event-time
-    span into :func:`_auto_buckets` slices, so the hot key lands
-    ~budget_rows per (key, bucket) task regardless of the fixture's
-    clock range."""
-    probe, budget_rows = _resolve(
-        df, key_col, ts_col, budget_rows, WINDOW_BUDGET_ROWS, probe
-    )
-    if not decide_twin(probe, budget_rows) or probe.lo_us is None:
-        return _stats.rolling_zscore(
-            df, window, value_col, ts_col, key_col, tiebreak_col, scale
-        )
-    return _stats.rolling_zscore_chunked(
-        df,
-        window,
-        bucket_span_s=_bucket_span_s(probe, budget_rows),
-        value_col=value_col,
-        ts_col=ts_col,
-        key_col=key_col,
-        tiebreak_col=tiebreak_col,
-        scale=scale,
-    )
-
-
-def asof_join_auto(
-    left: DataFrame,
-    right: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "tag",
-    payload_cols: "list[str] | None" = None,
-    direction: str = "backward",
-    tolerance_seconds: "float | None" = None,
-    budget_rows: int | None = None,
-    probe: KeyProbe | None = None,
-) -> DataFrame:
-    """:func:`timeseries.asof_join` or its chunked twin by probe (r11 —
-    the fourth routed family).  The serialized cost is the per-key sort
-    of BOTH tables' rows, so the probe runs over their (key, ts) union,
-    under the family's own measured budget (``ASOF_BUDGET_ROWS`` — the
-    crossover sits ~15x the window family's; see the constant's doc).
-    A shared ``probe=`` must have been built over the same union to
-    mean anything."""
-    if budget_rows is None:
-        budget_rows = session_budget_rows(
-            left.sparkSession, ASOF_BUDGET_ROWS
-        )
-    if probe is None:
-        u = left.select(
-            F.col(key_col), F.col(ts_col)
-        ).unionByName(right.select(F.col(key_col), F.col(ts_col)))
-        probe = probe_keys(u, key_col, ts_col=ts_col)
-    if not decide_twin(probe, budget_rows) or probe.lo_us is None:
-        return _timeseries.asof_join(
-            left, right, ts_col=ts_col, key_col=key_col,
-            payload_cols=payload_cols, direction=direction,
-            tolerance_seconds=tolerance_seconds,
-        )
-    # DECISION by the family crossover above; bucket GEOMETRY by the
-    # per-task sort budget — the twin's slices should stay task-sized
-    # for parallel sorts (the measured series' shape: ~1e5-row slices,
-    # ~220 buckets at 21M rows/key).  Dividing by the 1.5e6 crossover
-    # instead would under-fan a 21M-row key to 14 tasks.
-    geom = session_budget_rows(left.sparkSession, WINDOW_BUDGET_ROWS)
-    return _timeseries.asof_join_chunked(
-        left, right, _bucket_span_s(probe, geom),
-        ts_col=ts_col, key_col=key_col, payload_cols=payload_cols,
-        direction=direction, tolerance_seconds=tolerance_seconds,
-    )
-
-
-def _probe_maybe_keyless(
-    df: DataFrame, key_col: str | None, ts_col: str | None
-) -> KeyProbe:
-    """Probe for autos whose plain form allows ``key_col=None`` (a
-    single-partition GLOBAL sort): the keyless frame is probed as one
-    key — ``max_key_rows`` = the whole frame, which is exactly the
-    serialized cost the twin would remove."""
-    if key_col is not None:
-        return probe_keys(df, key_col, ts_col=ts_col)
-    return probe_keys(
-        df.withColumn("_k", F.lit(1)), "_k", ts_col=ts_col
-    )
-
-
-def lead_pairs_auto(
-    df: DataFrame,
-    ts_col: str = "ts",
-    key_col: str | None = None,
-    budget_rows: int | None = None,
-    probe: KeyProbe | None = None,
-) -> DataFrame:
-    """:func:`timeseries.lead_pairs` or its chunked twin by probe (r11 —
-    the fifth routed family, with :func:`restamp_positional_auto` as the
-    sixth; each has its own measured budget, see ``LEAD_BUDGET_ROWS`` /
-    ``RESTAMP_BUDGET_ROWS``).  ``key_col=None`` probes the frame as ONE
-    key — the plain form's global sort is the serialized cost in that
-    shape."""
-    probe, budget_rows = _resolve(
-        df, key_col, ts_col, budget_rows, LEAD_BUDGET_ROWS, probe
-    )
-    if not decide_twin(probe, budget_rows) or probe.lo_us is None:
-        return _timeseries.lead_pairs(df, ts_col=ts_col, key_col=key_col)
-    # decision by the family crossover; bucket GEOMETRY task-sized (the
-    # asof_join_auto precedent — dividing by the 4e6 crossover would
-    # under-fan a 30M-row key to 8 tasks)
-    geom = session_budget_rows(df.sparkSession, WINDOW_BUDGET_ROWS)
-    return _timeseries.lead_pairs_chunked(
-        df, _bucket_span_s(probe, geom), ts_col=ts_col, key_col=key_col
-    )
-
-
-def restamp_positional_auto(
-    df: DataFrame,
-    new_start: str,
-    step_seconds: int,
-    ts_col: str = "ts",
-    key_col: str | None = None,
-    tiebreak_col: str | None = None,
-    budget_rows: int | None = None,
-    probe: KeyProbe | None = None,
-) -> DataFrame:
-    """:func:`timeseries.restamp_positional` or its chunked twin by
-    probe — the sixth routed family.  Its measured crossover sits ~7x
-    BELOW :func:`lead_pairs_auto`'s despite the near-identical plain
-    form (one rank over the same per-key sort): the restamp twin's
-    boundary table is a count aggregate and its output pure arithmetic,
-    so the twin side is cheaper (``RESTAMP_BUDGET_ROWS``; BASELINE.md
-    r11 addendum 5).  ``key_col=None`` probes the frame as one key (the
-    plain form's documented single-partition global-sort hazard — the
-    twin is the scale answer to exactly that warning)."""
-    probe, budget_rows = _resolve(
-        df, key_col, ts_col, budget_rows, RESTAMP_BUDGET_ROWS, probe
-    )
-    if not decide_twin(probe, budget_rows) or probe.lo_us is None:
-        return _timeseries.restamp_positional(
-            df, new_start, step_seconds, ts_col=ts_col, key_col=key_col,
-            tiebreak_col=tiebreak_col,
-        )
-    geom = session_budget_rows(df.sparkSession, WINDOW_BUDGET_ROWS)
-    return _timeseries.restamp_positional_chunked(
-        df, new_start, step_seconds, _bucket_span_s(probe, geom),
-        ts_col=ts_col, key_col=key_col, tiebreak_col=tiebreak_col,
-    )
-
-
-def ffill_auto(
-    df: DataFrame,
-    value_col: str,
-    ts_col: str = "bucket_ts",
-    key_col: str = "tag",
-    out_col: str | None = None,
-    budget_rows: int | None = None,
-    probe: KeyProbe | None = None,
-) -> DataFrame:
-    """:func:`timeseries.ffill` or its chunked twin by probe (r11 — the
-    seventh routed family; the fill inside the flagship resample_ffill
-    idiom, where rows-per-key is SPAN-bounded — a decade of 1-minute
-    slots is ~5M rows per key regardless of event volume, past this
-    budget on its own).  Budget ``FFILL_BUDGET_ROWS`` (measured; see
-    the constant's doc)."""
-    probe, budget_rows = _resolve(
-        df, key_col, ts_col, budget_rows, FFILL_BUDGET_ROWS, probe
-    )
-    if not decide_twin(probe, budget_rows) or probe.lo_us is None:
-        return _timeseries.ffill(
-            df, value_col, ts_col=ts_col, key_col=key_col, out_col=out_col
-        )
-    geom = session_budget_rows(df.sparkSession, WINDOW_BUDGET_ROWS)
-    return _timeseries.ffill_chunked(
-        df, value_col, _bucket_span_s(probe, geom),
-        ts_col=ts_col, key_col=key_col, out_col=out_col,
-    )
 
 
 def est_frame_rows(probe: KeyProbe, range_s: int) -> float:
@@ -682,9 +441,9 @@ def est_frame_rows(probe: KeyProbe, range_s: int) -> float:
     max_key_rows cap already kills the opposite, dense-burst-short-span
     inflation).  A burst-aware measure (max per-range-bucket count)
     would need a range_s-dependent probe aggregation, breaking the ONE
-    shared family-agnostic ``KeyProbe`` scan all nine routed families
+    shared family-agnostic ``KeyProbe`` scan every routed family
     reuse — not worth it for a perf bias.  Callers with known-bursty
-    keys can lower ``product_budget`` on :func:`rolling_range_auto` or
+    keys can lower ``budget_rows`` on ``route("rolling_range", ...)`` or
     call :func:`timeseries.rolling_range_chunked` directly."""
     lo = probe.hot_lo_us if probe.hot_lo_us is not None else probe.lo_us
     hi = probe.hot_hi_us if probe.hot_hi_us is not None else probe.hi_us
@@ -713,193 +472,190 @@ def decide_range_twin(
     return product > product_budget or rows_over
 
 
-def ewma_auto(
-    df: DataFrame,
-    alpha: float,
-    window: int = 64,
-    value_col: str = "avg_value",
-    order_col: str = "bucket_ts",
-    key_col: str = "event_type",
-    tiebreak_col: str | None = None,
-    budget_rows: int | None = None,
-    probe: KeyProbe | None = None,
-) -> DataFrame:
-    """:func:`stats.ewma` or its chunked twin by probe (r11 — the ninth
-    routed family).  Budget ``EWMA_BUDGET_ROWS`` (measured; the fixed
-    64-row fold per row makes the fan-out pay at the window anchor —
-    see the constant's doc).  Like the fill family, ewma's scale case
-    is span-bounded: it runs over resampled series, so a decade of
-    5-min buckets crosses the budget by construction."""
-    probe, budget_rows = _resolve(
-        df, key_col, order_col, budget_rows, EWMA_BUDGET_ROWS, probe
-    )
-    if not decide_twin(probe, budget_rows) or probe.lo_us is None:
-        return _stats.ewma(
-            df, alpha, window=window, value_col=value_col,
-            order_col=order_col, key_col=key_col,
-            tiebreak_col=tiebreak_col,
-        )
-    geom = session_budget_rows(df.sparkSession, WINDOW_BUDGET_ROWS)
-    return _stats.ewma_chunked(
-        df, alpha, _bucket_span_s(probe, geom), window=window,
-        value_col=value_col, order_col=order_col, key_col=key_col,
-        tiebreak_col=tiebreak_col,
-    )
+@dataclass(frozen=True)
+class Family:
+    """One plain/twin pair.  The twin takes the plain form's parameters
+    plus ``bucket`` (sessionize is its own twin: ``skew_buckets=``), so
+    a row names only where the probe and the bucket argument come
+    from."""
+
+    plain: Callable[..., DataFrame]
+    twin: Callable[..., DataFrame]
+    #: decision budget at the calibration anchor
+    budget: int
+    #: plain parameter naming the key column
+    key: str = "key_col"
+    #: plain parameter naming the order axis (None: probe no span)
+    order: str | None = "ts_col"
+    #: the twin's bucket parameter
+    bucket: str = "bucket_span_s"
+    #: "key" (a keyless call probes the frame as one key), "union" (the
+    #: as-of pair's (key, ts) union) or "ids" (numeric id axis)
+    probe: str = "key"
+    #: decide_twin, or decide_range_twin for the range row
+    decide: Callable[..., bool] = decide_twin
+    #: size slices from the decision budget rather than the session's
+    #: window budget (the zscore/cusum/sessionize geometry)
+    own_geometry: bool = False
 
 
-def rolling_range_auto(
-    df: DataFrame,
-    range_s: int,
-    agg_fn,
-    ts_col: str = "ts",
-    key_col: str = "tag",
-    product_budget: int | None = None,
-    probe: KeyProbe | None = None,
-) -> DataFrame:
-    """:func:`timeseries.rolling_range` or its chunked twin by probe
-    (r11 — the eighth routed family, and the one family that routes on
-    a COMPUTE PRODUCT rather than a row budget: see
-    ``RANGE_PRODUCT_BUDGET`` and :func:`decide_range_twin`).  The
-    twin's bucket span is the window-budget geometry FLOORED at
-    ``range_s`` (a frame may span at most one bucket boundary), which
-    also caps the context-replication overhead at ``range_s/span``."""
-    if product_budget is None:
-        product_budget = RANGE_PRODUCT_BUDGET
+FAMILIES: dict[str, Family] = {
+    "sessionize": Family(
+        _ts.sessionize, _ts.sessionize, WINDOW_BUDGET_ROWS,
+        bucket="skew_buckets", order=None, own_geometry=True,
+    ),
+    "rolling_zscore": Family(
+        _st.rolling_zscore, _st.rolling_zscore_chunked, WINDOW_BUDGET_ROWS,
+        own_geometry=True,
+    ),
+    "cusum_reflected": Family(
+        _st.cusum_reflected, _st.cusum_reflected_chunked, CUSUM_BUDGET_ROWS,
+        own_geometry=True,
+    ),
+    "asof_join": Family(
+        _ts.asof_join, _ts.asof_join_chunked, ASOF_BUDGET_ROWS,
+        probe="union",
+    ),
+    "lead_pairs": Family(
+        _ts.lead_pairs, _ts.lead_pairs_chunked, LEAD_BUDGET_ROWS
+    ),
+    "restamp_positional": Family(
+        _ts.restamp_positional, _ts.restamp_positional_chunked,
+        RESTAMP_BUDGET_ROWS,
+    ),
+    "ffill": Family(_ts.ffill, _ts.ffill_chunked, FFILL_BUDGET_ROWS),
+    "rolling_range": Family(
+        _ts.rolling_range, _ts.rolling_range_chunked, RANGE_PRODUCT_BUDGET,
+        decide=decide_range_twin,
+    ),
+    "ewma": Family(
+        _st.ewma, _st.ewma_chunked, EWMA_BUDGET_ROWS, order="order_col"
+    ),
+    "pack_documents": Family(
+        _cp.pack_documents, _cp.pack_documents_chunked, PACK_BUDGET_ROWS,
+        bucket="bucket_span_ids", key="group_col", order="id_col",
+        probe="ids",
+    ),
+    "assemble_packs": Family(
+        _cp.assemble_packs, _cp.assemble_packs_chunked, PACK_BUDGET_ROWS,
+        bucket="bucket_span_ids", key="group_col", order="id_col",
+        probe="ids",
+    ),
+}
+
+
+def plan(
+    family: str,
+    probe: KeyProbe | None,
+    budget_rows: int,
+    window_rows: int = WINDOW_BUDGET_ROWS,
+    range_s: int | None = None,
+) -> tuple[str, int | None]:
+    """The routing decision, pure: ``("plain" | "twin", bucket_arg)``.
+
+    ``bucket_arg`` is the twin's bucket argument, returned on BOTH paths
+    so a calibration A/B can time the twin the router would build; it
+    is None when no twin can be built (no probe — a non-numeric id
+    axis — or no span on the order axis).  ``window_rows`` is the
+    session's window budget (default: its value at the calibration
+    anchor): the range row's spill term, and the slice size of every
+    row whose twin geometry is not its own decision budget — the
+    decision sits at the family crossover, but the slices stay
+    task-sized (dividing a 21M-row as-of key by the 1.5e6 crossover
+    would under-fan it to 14 tasks).  ``range_s`` is the range row's
+    frame reach."""
+    fam = FAMILIES[family]
     if probe is None:
-        probe = probe_keys(df, key_col, ts_col=ts_col)
-    rows_budget = session_budget_rows(df.sparkSession, WINDOW_BUDGET_ROWS)
-    if not decide_range_twin(probe, range_s, product_budget, rows_budget):
-        return _timeseries.rolling_range(
-            df, range_s, agg_fn, ts_col=ts_col, key_col=key_col
+        return "plain", None
+    geom = budget_rows if fam.own_geometry else window_rows
+    if fam.bucket == "skew_buckets":
+        arg = _auto_buckets(probe, geom)
+    elif probe.lo_us is None:
+        return "plain", None
+    else:
+        unit = 1 if fam.probe == "ids" else 1_000_000
+        arg = _bucket_span(probe, geom, unit)
+    if fam.decide is decide_range_twin:
+        # a frame may span at most one bucket boundary
+        arg = max(arg, int(range_s))
+        twin = decide_range_twin(probe, range_s, budget_rows, window_rows)
+    else:
+        twin = decide_twin(probe, budget_rows)
+    return ("twin" if twin else "plain"), arg
+
+
+def _probe(fam: Family, args: dict) -> KeyProbe:
+    """The row's probe shape over the bound plain arguments."""
+    key = args[fam.key]
+    ts = args[fam.order] if fam.order else None
+    if fam.probe == "ids":
+        return probe_keys(args["df"], key, ts_col=ts, numeric_axis=True)
+    if fam.probe == "union":
+        cols = [F.col(key), F.col(ts)]
+        df = args["left"].select(*cols).unionByName(
+            args["right"].select(*cols)
         )
-    span = max(_bucket_span_s(probe, rows_budget), int(range_s))
-    return _timeseries.rolling_range_chunked(
-        df, range_s, agg_fn, span, ts_col=ts_col, key_col=key_col
-    )
+    else:
+        df = args["df"]
+    if key is None:
+        # keyless plain form (a single-partition GLOBAL sort): probe the
+        # frame as one key — exactly the serialized cost the twin removes
+        df, key = df.withColumn("_k", F.lit(1)), "_k"
+    return probe_keys(df, key, ts_col=ts)
 
 
-def cusum_reflected_auto(
-    df: DataFrame,
-    slack_cents: int = 0,
-    value_col: str = "value",
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    tiebreak_col: str = "event_id",
-    scale: int = 100,
-    budget_rows: int | None = None,
-    probe: KeyProbe | None = None,
-) -> DataFrame:
-    """:func:`stats.cusum_reflected` or its chunked twin by probe — with
-    cusum's own slightly-higher default budget (see module doc: the
-    crossover sits ~1.5x the window family's, r11-measured from 100k to
-    50M rows/key after the r9 elided-drain artifact was found)."""
-    probe, budget_rows = _resolve(
-        df, key_col, ts_col, budget_rows, CUSUM_BUDGET_ROWS, probe
-    )
-    if not decide_twin(probe, budget_rows) or probe.lo_us is None:
-        return _stats.cusum_reflected(
-            df, slack_cents, value_col, ts_col, key_col, tiebreak_col,
-            scale,
-        )
-    return _stats.cusum_reflected_chunked(
-        df,
-        bucket_span_s=_bucket_span_s(probe, budget_rows),
-        slack_cents=slack_cents,
-        value_col=value_col,
-        ts_col=ts_col,
-        key_col=key_col,
-        tiebreak_col=tiebreak_col,
-        scale=scale,
-    )
-
-
-def pack_documents_auto(
-    df: DataFrame,
-    budget_tokens: int = 2048,
-    group_col: str = "source",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    budget_rows: int | None = None,
-    probe: KeyProbe | None = None,
-) -> DataFrame:
-    """:func:`corpus.pack_documents` or its chunked twin by probe (r12 —
-    the tenth routed family, closing the serialized-sort-cliff class:
-    r11 verdict #4).  The order axis is the NUMERIC doc id, so the
-    probe runs with ``numeric_axis=True`` and the bucket geometry is
-    :func:`_bucket_span_ids`; a non-numeric id (or all-null ids) routes
-    PLAIN — the value-based split needs a numeric axis, and string-id
-    corpora use :func:`corpus.pack_documents_greedy` with ``scan_rows``
-    for the hard-cap shape instead.  Budget ``PACK_BUDGET_ROWS``
-    (prefix-sum work class — the restamp anchor; family-own A/B in
-    tools/bench_pack_ab.py, BASELINE.md r12 addendum 2)."""
-    from . import corpus as _corpus
-
-    numeric_id = df.schema[id_col].dataType.typeName() in (
-        "long", "integer", "short", "byte",
-    )
+def _decide(
+    family: str,
+    args: tuple,
+    kwargs: dict,
+    budget_rows: int | None,
+    probe: KeyProbe | None,
+) -> tuple[dict, KeyProbe | None, str, int | None]:
+    """:func:`route` short of the call: bind the plain signature, resolve
+    the budget, probe unless given, plan.  Returns the bound plain
+    arguments, the probe, and :func:`plan`'s ``(path, bucket_arg)``."""
+    fam = FAMILIES[family]
+    bound = inspect.signature(fam.plain).bind(*args, **kwargs)
+    bound.apply_defaults()
+    a = bound.arguments
+    df = next(iter(a.values()))
+    spark = df.sparkSession
     if budget_rows is None:
-        budget_rows = session_budget_rows(df.sparkSession, PACK_BUDGET_ROWS)
-    if numeric_id and probe is None:
-        probe = probe_keys(df, group_col, ts_col=id_col, numeric_axis=True)
-    if (
-        not numeric_id
-        or not decide_twin(probe, budget_rows)
-        or probe.lo_us is None
-    ):
-        return _corpus.pack_documents(
-            df, budget_tokens=budget_tokens, group_col=group_col,
-            text_col=text_col, id_col=id_col,
+        budget_rows = (
+            fam.budget
+            if fam.decide is decide_range_twin
+            else session_budget_rows(spark, fam.budget)
         )
-    geom = session_budget_rows(df.sparkSession, WINDOW_BUDGET_ROWS)
-    return _corpus.pack_documents_chunked(
-        df,
-        budget_tokens=budget_tokens,
-        bucket_span_ids=_bucket_span_ids(probe, geom),
-        group_col=group_col,
-        text_col=text_col,
-        id_col=id_col,
+    if fam.probe == "ids" and not isinstance(
+        df.schema[a[fam.order]].dataType, IntegralType
+    ):
+        probe = None  # the twin's value split needs a numeric id axis
+    elif probe is None:
+        probe = _probe(fam, a)
+    path, arg = plan(
+        family, probe, budget_rows, session_budget_rows(spark),
+        a.get("range_s"),
     )
+    return a, probe, path, arg
 
 
-def assemble_packs_auto(
-    df: DataFrame,
-    budget_tokens: int = 512,
-    group_col: str = "source",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    sep: str = " ",
+def route(
+    family: str,
+    *args,
     budget_rows: int | None = None,
     probe: KeyProbe | None = None,
+    **kwargs,
 ) -> DataFrame:
-    """:func:`corpus.assemble_packs` or its chunked twin by the same
-    probe/budget rule as :func:`pack_documents_auto` (the assembly
-    rollup is already (group, pack)-parallel in both forms; only the
-    assignment cumsum differs)."""
-    from . import corpus as _corpus
-
-    numeric_id = df.schema[id_col].dataType.typeName() in (
-        "long", "integer", "short", "byte",
-    )
-    if budget_rows is None:
-        budget_rows = session_budget_rows(df.sparkSession, PACK_BUDGET_ROWS)
-    if numeric_id and probe is None:
-        probe = probe_keys(df, group_col, ts_col=id_col, numeric_axis=True)
-    if (
-        not numeric_id
-        or not decide_twin(probe, budget_rows)
-        or probe.lo_us is None
-    ):
-        return _corpus.assemble_packs(
-            df, budget_tokens=budget_tokens, group_col=group_col,
-            text_col=text_col, id_col=id_col, sep=sep,
-        )
-    geom = session_budget_rows(df.sparkSession, WINDOW_BUDGET_ROWS)
-    return _corpus.assemble_packs_chunked(
-        df,
-        budget_tokens=budget_tokens,
-        bucket_span_ids=_bucket_span_ids(probe, geom),
-        group_col=group_col,
-        text_col=text_col,
-        id_col=id_col,
-        sep=sep,
-    )
+    """Call ``FAMILIES[family]``'s plain form or its twin with the plain
+    form's arguments.  ``budget_rows=None`` derives the row's budget
+    from the session's per-task memory (the range row's compute-product
+    budget is not memory-scaled); ``probe=`` skips the probe scan
+    (share one probe across routed operators).  A non-numeric id axis
+    routes the pack rows PLAIN: the value-based split needs a numeric
+    axis (string-id corpora use :func:`corpus.pack_documents_greedy`
+    with ``scan_rows`` for the hard-cap shape)."""
+    fam = FAMILIES[family]
+    a, _, path, arg = _decide(family, args, kwargs, budget_rows, probe)
+    if path == "plain":
+        return fam.plain(**a)
+    return fam.twin(**{**a, fam.bucket: arg})

@@ -134,34 +134,6 @@ def hyperplane_bucket(
     return out.cast("long")
 
 
-def hyperplane_bucket_tables(
-    vec: Column, num_tables: int = 4, planes_per_table: int = 4, dim: int = 64
-) -> Column:
-    """Multi-table hyperplane LSH: array of (table, bucket) structs, one
-    sign-pattern bucket per table over that table's planes.  Banding
-    boosts recall the standard way (a pair collides if ANY table agrees),
-    with the same deterministic md5-derived planes as
-    :func:`hyperplane_bucket` (global plane index = table*planes+i)."""
-    v = _as_double(vec)
-    entries = []
-    for t in range(num_tables):
-        bits = [
-            F.when(
-                _proj(v, t * planes_per_table + i, dim) > 0, F.lit(1 << i)
-            ).otherwise(F.lit(0))
-            for i in range(planes_per_table)
-        ]
-        bucket = bits[0]
-        for b in bits[1:]:
-            bucket = bucket + b
-        entries.append(
-            F.struct(
-                F.lit(t).alias("table"), bucket.cast("long").alias("bucket")
-            )
-        )
-    return F.array(*entries)
-
-
 def _bucket_tables_arrow(
     num_tables: int, planes_per_table: int, dim: int
 ):

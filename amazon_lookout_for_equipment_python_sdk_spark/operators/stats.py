@@ -628,7 +628,7 @@ def ewma(
     # tiebreak optional (r11): the registered series are unique per
     # (key, order); pass one when order values can tie so the collect
     # order — hence the fold — is deterministic, same contract as the
-    # chunked twin (and ewma_auto forwards it to BOTH branches)
+    # chunked twin (and route("ewma") forwards it to BOTH branches)
     order = [order_col] + ([tiebreak_col] if tiebreak_col else [])
     w = (
         Window.partitionBy(key_col)
@@ -679,7 +679,7 @@ def ewma_chunked(
     is ~1M rows per key regardless of event volume).  ``tiebreak_col``
     is optional like the plain form's ordering — pass one when order
     timestamps can tie (the resampled grid is unique per key).  Route
-    with ``operators.routing.ewma_auto``."""
+    with ``operators.routing.route("ewma")``."""
     guard_internal(df)
     targets, wt = _chunked_rows_frame(
         df, window, bucket_span_s, order_col, key_col, tiebreak_col

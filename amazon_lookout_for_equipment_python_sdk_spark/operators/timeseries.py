@@ -165,7 +165,7 @@ def ffill_chunked(
 
     Cost: one (key, bucket) corpus exchange + the tiny aggregate and
     its broadcast; worth it once a key's grid exceeds the per-task
-    sort budget (``operators.routing.ffill_auto`` routes on a probe).
+    sort budget (``operators.routing.route("ffill")`` routes on a probe).
     Ties on (key, ts): same nondeterminism contract as the plain form
     (the grid shapes this serves are unique per (key, slot))."""
     guard_internal(df)
@@ -330,7 +330,7 @@ def rolling_range_chunked(
 
     Unlike the offset twins this one has no boundary JOIN at all —
     one extra (key, bucket) exchange for the union, nothing broadcast.
-    Route with ``operators.routing.rolling_range_auto``."""
+    Route with ``operators.routing.route("rolling_range")``."""
     guard_internal(df)
     if bucket_span_s <= 0 or bucket_span_s < range_s:
         raise ValueError(
@@ -444,7 +444,7 @@ def lead_pairs_chunked(
     Cost: one (key, bucket) corpus exchange + the tiny aggregate and its
     broadcast — one extra exchange vs the plain form's single per-key
     window.  Worth it once the hot key's rows exceed the per-task sort
-    budget (``operators.routing.lead_pairs_auto`` routes on a probe);
+    budget (``operators.routing.route("lead_pairs")`` routes on a probe);
     use the plain form when keys >> cores."""
     guard_internal(df)
     keys = [key_col] if key_col else []
@@ -480,13 +480,6 @@ def lead_pairs_chunked(
 
 
 # --- J6: restamping ----------------------------------------------------------
-
-
-def shift_timestamps(df: DataFrame, ts_col: str, delta_seconds: int) -> DataFrame:
-    """Shift a series by a constant delta (reference dataset.py:521-522)."""
-    return df.withColumn(
-        ts_col, F.col(ts_col) + F.make_interval(secs=F.lit(delta_seconds))
-    )
 
 
 def restamp_positional(
@@ -553,7 +546,7 @@ def restamp_positional_chunked(
 
     Cost: one (key, bucket) corpus exchange + the tiny count aggregate
     and its broadcast; worth it once the hot key's rows exceed the
-    per-task sort budget (``operators.routing.restamp_positional_auto``
+    per-task sort budget (``operators.routing.route("restamp_positional")``
     routes on a probe)."""
     guard_internal(df)
     keys = [key_col] if key_col else []
@@ -892,7 +885,7 @@ def asof_join_chunked(
     bucket-count-sized), joined back BROADCAST.  One extra corpus
     exchange vs the plain form's single per-key window — worth it when
     ``max_key_rows`` exceeds the per-task sort budget (see
-    operators/routing.py ``asof_join_auto``); use the plain form when
+    operators/routing.py ``route("asof_join")``); use the plain form when
     keys >> cores."""
     guard_internal(left)
     guard_internal(right)

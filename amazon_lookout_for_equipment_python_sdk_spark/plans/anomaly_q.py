@@ -146,7 +146,7 @@ def cusum_chunked_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     addendum) — the true crossover is 300k-600k rows/key at 0.9
     GiB/task, the twin winning 1.8x at sf10's 2M rows/key and 12.7x at
     50M.  The plain row above stays registered as the small-key fast
-    path the auto router (operators/routing.py cusum_reflected_auto)
+    path the router (operators/routing.py route("cusum_reflected"))
     picks below ~150k rows/key; the randomized property test
     (tests/test_stats.py) additionally pins the two forms row-for-row
     equal."""
@@ -955,7 +955,7 @@ def ewma_chunked_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``_chunked_rows_frame`` — the zscore twin's offsets + context
     replication) with the SAME Horner-fold expression, so the float op
     sequence is bit-identical by construction.  The ninth routed
-    family (operators/routing.py ``ewma_auto``; measured crossover in
+    family (operators/routing.py ``route("ewma")``; measured crossover in
     BASELINE.md r11 addendum 8).  Like the flagship fill, ewma's scale
     case is span-bounded, not skew-bound: it runs over resampled
     series, so a decade of 5-min buckets is ~1M rows per key

@@ -87,6 +87,13 @@ _FORCE_VERIFY: dict[str, int] = {
     # r14's forced crawl_chain_gates (robots gate + rates + charset +
     # html extraction fold) and host_pagerank both earned green r14
     # rows — cleared (r15, per r14 verdict #1).
+    #
+    # r16 rewrote both of these (zscore's sliding frames became running
+    # cumsums; the centroid scan stopped fanning out to core count) and
+    # their last green rows are r14's: neither is in r15's or r16's
+    # artifact.
+    "rolling_zscore_anomalies": 17,
+    "lang_centroid_components": 17,
 }
 
 

@@ -85,7 +85,7 @@ def flagship_ffill_chunked_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle — the chunked-row precedent): ``ffill_chunked`` decomposes
     the per-key last-non-null into (key, time-bucket) local fills plus
     a broadcast last-non-null carry table (operators/timeseries.py) —
-    the seventh routed family (operators/routing.py ``ffill_auto``;
+    the seventh routed family (operators/routing.py ``route("ffill")``;
     measured crossover in BASELINE.md r11 addendum 6).  The grid the
     fill runs over is span-bounded, not event-bounded — a decade of
     5-min slots is ~1M rows PER KEY regardless of event volume, which
@@ -648,7 +648,7 @@ def lead_pairs_chunked_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/timeseries.py lead_pairs_chunked) — the shape that
     survives one hot key's split history, where the plain per-key
     window serializes it onto one task's sort.  Registered r11 with the
-    fifth routed family (operators/routing.py lead_pairs_auto; measured
+    fifth routed family (operators/routing.py route("lead_pairs"); measured
     crossover in BASELINE.md r11 addendum 5); the randomized property
     test (tests/test_operators.py) additionally pins the two forms
     multiset-equal, null timestamps included."""
@@ -716,7 +716,7 @@ def positional_restamp_chunked_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     time-bucket) local ranks plus a tiny exclusive-prefix-count offset
     table joined back broadcast (operators/timeseries.py
     restamp_positional_chunked) — the sixth routed family
-    (operators/routing.py restamp_positional_auto; measured crossover
+    (operators/routing.py route("restamp_positional"); measured crossover
     shared with lead_pairs, BASELINE.md r11 addendum 5).  Also the
     distributed answer to the plain form's documented keyless
     single-partition global sort.  Row-for-row equality (ties, null
@@ -810,7 +810,7 @@ def asof_join_purchases_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus a bucket-count-sized carry table
     (operators/timeseries.py asof_join_chunked, r11).  Registered so the
     driver certifies the twin's lineage every rotation — it is the form
-    ``asof_join_auto`` routes to when one hot key (the heavily-traded
+    ``route("asof_join")`` routes to when one hot key (the heavily-traded
     symbol) would serialize both tables' history onto one task."""
     events = load(spark, sf_dir, "events")
     left = events.filter(F.col("event_type") == "click").select(
@@ -1206,7 +1206,7 @@ def range_frame_chunked_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     the frame runs entirely within (key, bucket), parallel across the
     hot signal's history (operators/timeseries.py
     ``rolling_range_chunked``; no carry table, no join — the eighth
-    routed family, operators/routing.py ``rolling_range_auto``,
+    routed family, operators/routing.py ``route("rolling_range")``,
     measured crossover in BASELINE.md r11 addendum 7).  Property
     equality incl. same-instant ties, null keys and null timestamps
     pinned in tests/test_operators.py."""

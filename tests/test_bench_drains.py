@@ -19,14 +19,8 @@ HARNESSES = [
     "bench.py",
     "tools/bench_sf1.py",
     "tools/bench_skew.py",
-    "tools/bench_cusum_xl.py",
+    "tools/ab_twin.py",
     "tools/bench_stream_skew.py",
-    "tools/bench_asof_ab.py",
-    "tools/bench_lead_ab.py",
-    "tools/bench_ffill_ab.py",
-    "tools/bench_range_ab.py",
-    "tools/bench_ewma_ab.py",
-    "tools/bench_pack_ab.py",
     "tools/bench_warc_shards.py",
     "tools/bench_crawl_ops.py",
     "tools/bench_linkgraph.py",
@@ -35,8 +29,8 @@ HARNESSES = [
 
 def test_no_count_drain_in_timed_loops():
     """No bench harness may time a `.count()` — the timed body must go
-    through the noop sink (or an explicit un-prunable drain: the cusum
-    harness collects max(cusum); the streaming one writes parquet).
+    through the noop sink (or an explicit un-prunable drain: the
+    streaming harness writes parquet).
     Flags any QUERIES[...]...count() or df.count() inside a harness."""
     offenders = []
     for rel in HARNESSES:

@@ -1,12 +1,15 @@
-"""Auto-routing between plain operators and their skew-safe twins
+"""Routing between plain operators and their skew-safe twins
 (operators/routing.py, r9 verdict #5): the probe + routing rule, pinned
 on the real fixtures — plain chosen on uniform sf0.1, twin chosen on
-sf1_skew's hot keys — plus routed-output equality through BOTH branches.
+sf1_skew's hot keys — the pure ``plan`` pinned on a probe grid, plus
+routed-output equality through BOTH branches of every family row.
 The registered driver queries keep calling the explicit forms; these
-tests certify the opt-in ``auto`` mode routes as documented."""
+tests certify ``route`` decides as documented."""
 
 from __future__ import annotations
 
+import dataclasses
+import functools
 import os
 
 import pytest
@@ -21,6 +24,8 @@ from amazon_lookout_for_equipment_python_sdk_spark.session import (
 )
 
 UNIFORM = "/root/testdata/sf0.1"
+TINY = "/root/testdata/sf0.001"
+US = 1_000_000  # probe microseconds per second
 SKEWED = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     ".localdata",
@@ -57,12 +62,12 @@ def test_probe_one_scan_and_scalars(spark):
     # empty frame: all-zero probe, no crash
     p3 = rt.probe_keys(ev.filter(F.lit(False)), "event_type", ts_col="ts")
     assert p3 == rt.KeyProbe(0, 0, 0)
-    # all-null ts: rows counted but no span; zscore/cusum auto fall
+    # all-null ts: rows counted but no span; the zscore/cusum rows fall
     # back to plain rather than crash on bucket geometry
     nullts = ev.limit(200).withColumn("ts", F.lit(None).cast("timestamp"))
     p4 = rt.probe_keys(nullts, "event_type", ts_col="ts")
     assert p4.total_rows == 200 and p4.lo_us is None
-    out = rt.rolling_zscore_auto(nullts, 5, budget_rows=10)
+    out = rt.route("rolling_zscore", nullts, 5, budget_rows=10)
     assert out.count() == 200  # plain branch executed
 
 
@@ -323,10 +328,11 @@ def test_shared_probe_skips_the_scan(spark, monkeypatch):
         raise AssertionError("probe_keys called despite probe=")
 
     monkeypatch.setattr(rt, "probe_keys", _poison)
-    routed = rt.rolling_zscore_auto(ev, 25, probe=shared)
-    routed2 = rt.cusum_reflected_auto(ev, probe=shared)
-    routed3 = rt.sessionize_auto(
-        ev, key_col="event_type", tiebreak_col="event_id", probe=shared
+    routed = rt.route("rolling_zscore", ev, 25, probe=shared)
+    routed2 = rt.route("cusum_reflected", ev, probe=shared)
+    routed3 = rt.route(
+        "sessionize", ev, key_col="event_type", tiebreak_col="event_id",
+        probe=shared,
     )
     monkeypatch.undo()
 
@@ -363,67 +369,6 @@ def test_asof_budget_calibration():
     ) == 6_000_000
 
 
-def test_asof_join_auto_routes_and_matches(spark):
-    """The fourth routed family (r11): auto routes PLAIN below the
-    budget and CHUNKED above it, with identical rows either way; a
-    shared probe (over the union) skips the probe scan."""
-    import numpy as np
-    import pandas as pd
-
-    from amazon_lookout_for_equipment_python_sdk_spark.operators.timeseries import (
-        asof_join,
-    )
-
-    rng = np.random.default_rng(3)
-    base = pd.Timestamp("2024-01-01")
-    left_pd = pd.DataFrame(
-        {
-            "tag": rng.integers(0, 3, 200).astype(str),
-            "ts": base + pd.to_timedelta(rng.integers(0, 20_000, 200), "s"),
-            "lid": np.arange(200),
-        }
-    )
-    right_pd = (
-        pd.DataFrame(
-            {
-                "tag": rng.integers(0, 3, 50).astype(str),
-                "ts": base
-                + pd.to_timedelta(rng.integers(0, 20_000, 50), "s"),
-                "pay": rng.normal(size=50).round(3),
-            }
-        )
-        .drop_duplicates(["tag", "ts"])
-        .reset_index(drop=True)
-    )
-    left = spark.createDataFrame(left_pd)
-    right = spark.createDataFrame(right_pd)
-    plain = sorted(
-        (r["lid"], r["pay"]) for r in asof_join(left, right).collect()
-    )
-    # budget far above max key rows -> plain; far below -> chunked;
-    # both must equal the explicit plain answer
-    for budget in (10**9, 10):
-        got = sorted(
-            (r["lid"], r["pay"])
-            for r in rt.asof_join_auto(
-                left, right, budget_rows=budget
-            ).collect()
-        )
-        assert got == plain, budget
-    # shared probe over the union skips the scan (poisoned probe_keys)
-    u = left.select("tag", "ts").unionByName(right.select("tag", "ts"))
-    shared = rt.probe_keys(u, "tag", ts_col="ts")
-    orig = rt.probe_keys
-    rt.probe_keys = lambda *a, **k: (_ for _ in ()).throw(
-        AssertionError("probe_keys called despite probe=")
-    )
-    try:
-        routed = rt.asof_join_auto(left, right, probe=shared, budget_rows=10)
-    finally:
-        rt.probe_keys = orig
-    assert sorted((r["lid"], r["pay"]) for r in routed.collect()) == plain
-
-
 def test_bucket_span_uses_hot_key_span():
     """r10 ADVICE: a hot key concentrated in a narrow slice of a wide
     corpus span must get its fan-out from ITS OWN span — a year-wide
@@ -437,7 +382,7 @@ def test_bucket_span_uses_hot_key_span():
     )
     # 10 buckets over ONE HOUR -> 360 s slices, not 360 s-per-year/10
     assert rt._auto_buckets(p, 100_000) == 10
-    assert rt._bucket_span_s(p, 100_000) == 360
+    assert rt._bucket_span(p, 100_000, US) == 360
 
 
 def test_bucket_span_floor_bounds_carry_broadcast():
@@ -452,7 +397,7 @@ def test_bucket_span_floor_bounds_carry_broadcast():
         5, 1_000_000, 1_200_000,
         lo_us=0, hi_us=year_us, hot_lo_us=0, hot_hi_us=hour_us,
     )
-    assert rt._bucket_span_s(few, 100_000) == 360  # unchanged
+    assert rt._bucket_span(few, 100_000, US) == 360  # unchanged
     # 200k keys: worst-case carry at 360s spans would be
     # 200k x 87.6k buckets — the floor coarsens the span so
     # n_keys x (corpus_span/span) <= CARRY_BUDGET_ROWS
@@ -460,7 +405,7 @@ def test_bucket_span_floor_bounds_carry_broadcast():
         200_000, 1_000_000, 50_000_000,
         lo_us=0, hi_us=year_us, hot_lo_us=0, hot_hi_us=hour_us,
     )
-    span = rt._bucket_span_s(many, 100_000)
+    span = rt._bucket_span(many, 100_000, US)
     corpus_span_s = year_us // 1_000_000
     worst_carry = many.n_keys * -(-corpus_span_s // span)
     assert worst_carry <= rt.CARRY_BUDGET_ROWS + many.n_keys  # bucket-0 edge
@@ -472,7 +417,7 @@ def test_bucket_span_floor_bounds_carry_broadcast():
         lo_us=0, hi_us=19_999 * 1_000_000, hot_lo_us=0,
         hot_hi_us=60 * 1_000_000,
     )
-    s2 = rt._bucket_span_s(awkward, 1_000)  # want=1s from the hot slice
+    s2 = rt._bucket_span(awkward, 1_000, US)  # want=1s from the hot slice
     assert awkward.n_keys * -(-19_999 // s2) <= rt.CARRY_BUDGET_ROWS
     # key-count guard: past CARRY_BUDGET_ROWS keys no span can bound the
     # carry broadcast — the router must stay PLAIN even with a hot key
@@ -483,7 +428,7 @@ def test_bucket_span_floor_bounds_carry_broadcast():
     )
     # pre-r11 probes (no hot fields) fall back to the corpus span
     old = rt.KeyProbe(5, 1_000_000, 1_200_000, lo_us=0, hi_us=year_us)
-    assert rt._bucket_span_s(old, 100_000) == (year_us // 1_000_000) // 10
+    assert rt._bucket_span(old, 100_000, US) == (year_us // US) // 10
 
 
 def test_probe_carries_hot_key_span(spark):
@@ -528,75 +473,22 @@ def test_lead_restamp_budget_calibration():
 
 
 def test_lead_restamp_auto_routes_and_matches(spark):
-    """The fifth/sixth routed families (r11): both autos route PLAIN
-    below the budget and CHUNKED above it with identical rows either
-    way — keyed AND keyless (keyless probes the frame as one key: the
-    plain form's single-partition global sort is the hazard there); a
-    shared probe skips the probe scan (poisoned probe_keys)."""
-    ev = (
-        _events(spark, "/root/testdata/sf0.001")
-        .select("event_type", "event_id", "ts")
-        .limit(500)
-    )
-
-    def pkey(df):
-        return sorted(
-            (str(r["start_ts"]), str(r["end_ts"])) for r in df.collect()
-        )
-
-    from amazon_lookout_for_equipment_python_sdk_spark.operators import (
-        timeseries as tsops,
-    )
-
-    for key in ("event_type", None):
-        plain = pkey(tsops.lead_pairs(ev, ts_col="ts", key_col=key))
+    """The fifth/sixth routed families (r11) KEYLESS: ``key_col=None``
+    probes the frame as one key (the plain form's single-partition
+    global sort is the hazard there) and both branches give the
+    explicit plain form's rows.  The keyed shape is a case of
+    :func:`test_route_matches_plain_both_branches`."""
+    ev = _tiny_events(spark, "event_type", "event_id", "ts", limit=500)
+    for family, args, kw, rows in (
+        ("lead_pairs", (ev,), {}, _pair_rows),
+        ("restamp_positional", (ev, "2025-06-01 00:00:00", 30),
+         {"tiebreak_col": "event_id"}, _stamp_rows),
+    ):
+        kw = {"ts_col": "ts", "key_col": None, **kw}
+        plain = rows(rt.FAMILIES[family].plain(*args, **kw))
         for budget in (10**9, 10):
-            got = pkey(
-                rt.lead_pairs_auto(
-                    ev, ts_col="ts", key_col=key, budget_rows=budget
-                )
-            )
-            assert got == plain, (key, budget)
-
-    def stamps(df):
-        return {r["event_id"]: str(r["ts"]) for r in df.collect()}
-
-    for key in ("event_type", None):
-        plain = stamps(
-            tsops.restamp_positional(
-                ev, "2025-06-01 00:00:00", 30, ts_col="ts", key_col=key,
-                tiebreak_col="event_id",
-            )
-        )
-        for budget in (10**9, 10):
-            got = stamps(
-                rt.restamp_positional_auto(
-                    ev, "2025-06-01 00:00:00", 30, ts_col="ts",
-                    key_col=key, tiebreak_col="event_id",
-                    budget_rows=budget,
-                )
-            )
-            assert got == plain, (key, budget)
-
-    # shared probe skips the scan for both autos
-    shared = rt.probe_keys(ev, "event_type", ts_col="ts")
-    orig = rt.probe_keys
-    rt.probe_keys = lambda *a, **k: (_ for _ in ()).throw(
-        AssertionError("probe_keys called despite probe=")
-    )
-    try:
-        a = rt.lead_pairs_auto(
-            ev, ts_col="ts", key_col="event_type", probe=shared,
-            budget_rows=10,
-        )
-        b = rt.restamp_positional_auto(
-            ev, "2025-06-01 00:00:00", 30, ts_col="ts",
-            key_col="event_type", tiebreak_col="event_id", probe=shared,
-            budget_rows=10,
-        )
-    finally:
-        rt.probe_keys = orig
-    assert a.count() > 0 and b.count() == ev.count()
+            got = rows(rt.route(family, *args, budget_rows=budget, **kw))
+            assert got == plain, (family, budget)
 
 
 def test_ffill_budget_calibration():
@@ -613,105 +505,20 @@ def test_ffill_budget_calibration():
     ) == 8_000_000
 
 
-def test_ffill_auto_routes_and_matches(spark):
-    """The seventh routed family: both branches equal the explicit
-    plain fill; a shared probe skips the probe scan."""
-    ev = (
-        _events(spark, "/root/testdata/sf0.001")
-        .select(
-            "event_type",
-            "event_id",
-            "ts",
-            F.when(F.col("event_id") % 9 == 0, F.col("value")).alias("v"),
-        )
-        .limit(400)
-    )
-
-    from amazon_lookout_for_equipment_python_sdk_spark.operators import (
-        timeseries as tsops,
-    )
-
-    def vals(df):
-        return {r["event_id"]: r["filled"] for r in df.collect()}
-
-    plain = vals(
-        tsops.ffill(ev, "v", ts_col="ts", key_col="event_type",
-                    out_col="filled")
-    )
-    for budget in (10**9, 10):
-        got = vals(
-            rt.ffill_auto(
-                ev, "v", ts_col="ts", key_col="event_type",
-                out_col="filled", budget_rows=budget,
-            )
-        )
-        assert got == plain, budget
-    shared = rt.probe_keys(ev, "event_type", ts_col="ts")
-    orig = rt.probe_keys
-    rt.probe_keys = lambda *a, **k: (_ for _ in ()).throw(
-        AssertionError("probe_keys called despite probe=")
-    )
-    try:
-        routed = rt.ffill_auto(
-            ev, "v", ts_col="ts", key_col="event_type", out_col="filled",
-            probe=shared, budget_rows=10,
-        )
-    finally:
-        rt.probe_keys = orig
-    assert vals(routed) == plain
-
-
 def test_ewma_budget_calibration_and_auto(spark):
     """The ninth family (BASELINE r11 addendum 8): plain 1.7x ahead at
     30k rows/key, an exact tie at 100k, the twin from 300k — the 1e5
-    constant routes 30k plain and 300k twin at the anchor.  Both auto
-    branches equal the explicit plain (bit-equal — shared fold
-    expression); a shared probe skips the scan."""
+    constant routes 30k plain and 300k twin at the anchor.  Routed at
+    the session's own budget, the rows equal the explicit plain form
+    (both forced branches: :func:`test_route_matches_plain_both_branches`)."""
     b = rt.derive_budget_rows(rt.EWMA_BUDGET_ROWS, rt.CALIB_PER_TASK_BYTES)
     assert b == rt.EWMA_BUDGET_ROWS == 100_000
     assert not rt.decide_twin(rt.KeyProbe(3, 30_000, 42_000), b)
     assert rt.decide_twin(rt.KeyProbe(3, 300_000, 420_000), b)
 
-    from amazon_lookout_for_equipment_python_sdk_spark.operators import (
-        stats as st,
-    )
-
-    ev = (
-        _events(spark, "/root/testdata/sf0.001")
-        .select("event_type", F.col("ts").alias("bucket_ts"),
-                F.col("value").alias("avg_value"))
-        # unique (key, order) — plain ewma's collect order (hence the
-        # fold) is nondeterministic under ties
-        .dropDuplicates(["event_type", "bucket_ts"])
-        .limit(400)
-    )
-    # MATERIALIZE: dropDuplicates keeps an arbitrary representative and
-    # limit an arbitrary subset — re-executing that plan per collect()
-    # could hand the compared branches different rows (review fix)
-    ev = spark.createDataFrame(ev.collect(), ev.schema)
-
-    def key(df):
-        return {
-            (r["event_type"], str(r["bucket_ts"])): r["ewma"]
-            for r in df.collect()
-        }
-
-    plain = key(st.ewma(ev, 0.3, window=16))
-    for budget in (10**9, 10):
-        got = key(rt.ewma_auto(ev, 0.3, window=16, budget_rows=budget))
-        assert got == plain, budget
-    shared = rt.probe_keys(ev, "event_type", ts_col="bucket_ts")
-    orig = rt.probe_keys
-    rt.probe_keys = lambda *a, **k: (_ for _ in ()).throw(
-        AssertionError("probe_keys called despite probe=")
-    )
-    try:
-        routed = rt.ewma_auto(
-            ev, 0.3, window=16, probe=shared, budget_rows=10
-        )
-    finally:
-        rt.probe_keys = orig
-    assert key(routed) == plain
+    ev = _ewma_frame(spark)
+    plain = _ewma_rows(rt.FAMILIES["ewma"].plain(ev, 0.3, window=16))
+    assert _ewma_rows(rt.route("ewma", ev, 0.3, window=16)) == plain
 
 
 def test_range_product_budget_calibration():
@@ -755,62 +562,17 @@ def test_range_product_budget_calibration():
     assert not rt.decide_range_twin(burst, 3_600)
 
 
-def test_rolling_range_auto_routes_and_matches(spark):
-    """The eighth routed family: both branches equal the explicit plain
-    range frame; a shared probe skips the probe scan."""
-    ev = (
-        _events(spark, "/root/testdata/sf0.001")
-        .select("event_type", "event_id", "ts", "value")
-        .limit(400)
-    )
-    cents = F.round(F.col("value") * 100).cast("long")
-
-    def aggs(w):
-        return {"n_r": F.count(F.lit(1)).over(w), "s_r": F.sum(cents).over(w)}
-
-    from amazon_lookout_for_equipment_python_sdk_spark.operators import (
-        timeseries as tsops,
-    )
-
-    def key(df):
-        return {r["event_id"]: (r["n_r"], r["s_r"]) for r in df.collect()}
-
-    plain = key(
-        tsops.rolling_range(ev, 3_600, aggs, ts_col="ts", key_col="event_type")
-    )
-    for budget in (10**18, 1):
-        got = key(
-            rt.rolling_range_auto(
-                ev, 3_600, aggs, ts_col="ts", key_col="event_type",
-                product_budget=budget,
-            )
-        )
-        assert got == plain, budget
-    shared = rt.probe_keys(ev, "event_type", ts_col="ts")
-    orig = rt.probe_keys
-    rt.probe_keys = lambda *a, **k: (_ for _ in ()).throw(
-        AssertionError("probe_keys called despite probe=")
-    )
-    try:
-        routed = rt.rolling_range_auto(
-            ev, 3_600, aggs, ts_col="ts", key_col="event_type",
-            probe=shared, product_budget=1,
-        )
-    finally:
-        rt.probe_keys = orig
-    assert key(routed) == plain
-
-
 def _zkey(rows):
     return {(r["event_type"], r["event_id"]): r["zscore"] for r in rows}
 
 
 def test_auto_routes_match_explicit_forms_both_branches(spark):
     """Routed output == explicit plain output on the tiny fixture for
-    BOTH branches: the natural budget routes plain; a budget of 10 rows
-    forces every key over it, exercising the probe->geometry->twin path
-    end-to-end (the twins' exactness is separately property-pinned)."""
-    ev = _events(spark, "/root/testdata/sf0.001").select(
+    BOTH branches: the session-derived budget routes plain; a budget of
+    10 rows forces every key over it, exercising the
+    probe->geometry->twin path end-to-end (the twins' exactness is
+    separately property-pinned)."""
+    ev = _events(spark, TINY).select(
         "event_type", "user_id", "event_id", "ts", "value"
     )
     from amazon_lookout_for_equipment_python_sdk_spark.operators import (
@@ -821,9 +583,9 @@ def test_auto_routes_match_explicit_forms_both_branches(spark):
     )
 
     plain_z = _zkey(st.rolling_zscore(ev, 25).collect())
-    assert plain_z == _zkey(rt.rolling_zscore_auto(ev, 25).collect())
+    assert plain_z == _zkey(rt.route("rolling_zscore", ev, 25).collect())
     assert plain_z == _zkey(
-        rt.rolling_zscore_auto(ev, 25, budget_rows=10).collect()
+        rt.route("rolling_zscore", ev, 25, budget_rows=10).collect()
     )
 
     def skey(rows):
@@ -833,11 +595,11 @@ def test_auto_routes_match_explicit_forms_both_branches(spark):
         tsops.sessionize(ev, tiebreak_col="event_id").collect()
     )
     assert plain_s == skey(
-        rt.sessionize_auto(ev, tiebreak_col="event_id").collect()
+        rt.route("sessionize", ev, tiebreak_col="event_id").collect()
     )
     assert plain_s == skey(
-        rt.sessionize_auto(
-            ev, tiebreak_col="event_id", budget_rows=10
+        rt.route(
+            "sessionize", ev, tiebreak_col="event_id", budget_rows=10
         ).collect()
     )
 
@@ -845,9 +607,9 @@ def test_auto_routes_match_explicit_forms_both_branches(spark):
         return {r["event_id"]: r["cusum"] for r in rows}
 
     plain_c = ckey(st.cusum_reflected(ev).collect())
-    assert plain_c == ckey(rt.cusum_reflected_auto(ev).collect())
+    assert plain_c == ckey(rt.route("cusum_reflected", ev).collect())
     assert plain_c == ckey(
-        rt.cusum_reflected_auto(ev, budget_rows=10).collect()
+        rt.route("cusum_reflected", ev, budget_rows=10).collect()
     )
 
 
@@ -865,13 +627,13 @@ def test_pack_budget_calibration():
 
 
 def test_bucket_span_ids_geometry():
-    """Numeric-axis geometry: divides the hot group's id span; the
-    carry floor binds exactly like the time-axis helper."""
+    """Numeric-axis geometry (``unit=1``): divides the hot group's id
+    span; the carry floor binds exactly like on the time axis."""
     p = rt.KeyProbe(
         n_keys=3, max_key_rows=1_000_000, total_rows=1_200_000,
         lo_us=0, hi_us=10_000_000, hot_lo_us=0, hot_hi_us=1_000_000,
     )
-    span = rt._bucket_span_ids(p, 100_000)
+    span = rt._bucket_span(p, 100_000, 1)
     # hot span 1e6 ids over ceil(1e6/1e5)=10 buckets -> 1e5 ids/bucket
     assert span == 100_000
     # many keys force the carry floor: allowed 1e6/1e6=1 id per key
@@ -880,99 +642,27 @@ def test_bucket_span_ids_geometry():
         n_keys=1_000_000, max_key_rows=1_000_000, total_rows=2_000_000,
         lo_us=0, hi_us=10_000_000, hot_lo_us=0, hot_hi_us=1_000_000,
     )
-    assert rt._bucket_span_ids(pm, 100_000) == 10_000_000
+    assert rt._bucket_span(pm, 100_000, 1) == 10_000_000
 
 
 def test_pack_documents_auto_routes_and_matches(spark):
-    """The tenth routed family (r12 — the serialized-sort-cliff close):
-    both branches equal the explicit plain packing; string ids route
-    plain; a shared numeric-axis probe skips the probe scan."""
-    import pandas as pd
-
-    from amazon_lookout_for_equipment_python_sdk_spark.operators import (
-        corpus as cp,
+    """String doc ids route the pack rows PLAIN — the twin's value split
+    needs a numeric axis — even with a forcing budget and a shared
+    probe in hand (the numeric-id shape is a case of
+    :func:`test_route_matches_plain_both_branches`)."""
+    docs = _docs(spark, 300, 3, 13)
+    shared = rt.probe_keys(
+        docs, "source", ts_col="doc_id", numeric_axis=True
     )
-
-    pdf = pd.DataFrame(
-        {
-            "doc_id": range(300),
-            "source": ["s" + str(i % 3) for i in range(300)],
-            "text": [" ".join(["w"] * (4 + i % 13)) for i in range(300)],
-        }
-    )
-    docs = spark.createDataFrame(pdf)
-
-    def vals(df):
-        return {
-            r["doc_id"]: (r["pack_offset"], r["pack_id"])
-            for r in df.collect()
-        }
-
-    plain = vals(cp.pack_documents(docs, budget_tokens=64))
-    for budget in (10**9, 10):
-        assert vals(
-            rt.pack_documents_auto(docs, budget_tokens=64, budget_rows=budget)
-        ) == plain, budget
-
-    # string ids: always the plain branch, never the twin's ValueError
     sdocs = docs.withColumn("doc_id", F.concat(F.lit("d"), "doc_id"))
-    splain = {
-        r["doc_id"]: (r["pack_offset"], r["pack_id"])
-        for r in cp.pack_documents(sdocs, budget_tokens=64).collect()
-    }
-    sgot = {
-        r["doc_id"]: (r["pack_offset"], r["pack_id"])
-        for r in rt.pack_documents_auto(
-            sdocs, budget_tokens=64, budget_rows=10
-        ).collect()
-    }
-    assert sgot == splain
-
-    shared = rt.probe_keys(docs, "source", ts_col="doc_id", numeric_axis=True)
-    orig = rt.probe_keys
-    rt.probe_keys = lambda *a, **k: (_ for _ in ()).throw(
-        AssertionError("probe_keys called despite probe=")
-    )
-    try:
-        routed = rt.pack_documents_auto(
-            docs, budget_tokens=64, probe=shared, budget_rows=10
-        )
-    finally:
-        rt.probe_keys = orig
-    assert vals(routed) == plain
-
-
-def test_assemble_packs_auto_routes_and_matches(spark):
-    """assemble_packs shares the pack family's routing; both branches
-    equal the explicit plain assembly."""
-    import pandas as pd
-
-    from amazon_lookout_for_equipment_python_sdk_spark.operators import (
-        corpus as cp,
-    )
-
-    pdf = pd.DataFrame(
-        {
-            "doc_id": range(200),
-            "source": ["g" + str(i % 2) for i in range(200)],
-            "text": [" ".join(["w"] * (4 + i % 11)) for i in range(200)],
-        }
-    )
-    docs = spark.createDataFrame(pdf)
-
-    def vals(df):
-        return {
-            (r["source"], r["pack_id"]): (
-                r["n_docs"], r["pack_tokens"], r["packed_text"]
+    for family in ("pack_documents", "assemble_packs"):
+        plain = rt.FAMILIES[family].plain(sdocs, budget_tokens=64)
+        for probe in (None, shared):
+            got = rt.route(
+                family, sdocs, budget_tokens=64, budget_rows=10,
+                probe=probe,
             )
-            for r in df.collect()
-        }
-
-    plain = vals(cp.assemble_packs(docs, budget_tokens=64))
-    for budget in (10**9, 10):
-        assert vals(
-            rt.assemble_packs_auto(docs, budget_tokens=64, budget_rows=budget)
-        ) == plain, budget
+            assert sorted(got.collect()) == sorted(plain.collect())
 
 
 _PACK_XL = os.path.join(
@@ -997,9 +687,449 @@ def test_routing_decision_pack_xl_monolithic_group(spark):
     assert rt.decide_twin(probe, rt.PACK_BUDGET_ROWS)
     # the id axis carried values, not microseconds
     assert probe.lo_us == 0 and probe.hi_us == 4_999_999
-    span = rt._bucket_span_ids(probe, rt.session_budget_rows(spark))
+    span = rt._bucket_span(probe, rt.session_budget_rows(spark), 1)
     assert 1 <= span <= 5_000_000
     # driver-SF documents: largest source group is far below budget
     small = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     sp = rt.probe_keys(small, "source", ts_col="doc_id", numeric_axis=True)
     assert not rt.decide_twin(sp, rt.PACK_BUDGET_ROWS)
+
+
+# --------------------------------------------------------------------------
+# one table, one planner: every FAMILIES row through both branches, the pure
+# plan on a probe grid, and the table's completeness
+
+
+def _poison(*a, **k):
+    raise AssertionError("probe_keys called despite probe=")
+
+
+def _by(key, *vals):
+    def rows(df):
+        return {r[key]: tuple(r[v] for v in vals) for r in df.collect()}
+
+    return rows
+
+
+def _pair_rows(df):
+    return sorted((str(r["start_ts"]), str(r["end_ts"])) for r in df.collect())
+
+
+def _stamp_rows(df):
+    return {r["event_id"]: str(r["ts"]) for r in df.collect()}
+
+
+def _ewma_rows(df):
+    return {
+        (r["event_type"], str(r["bucket_ts"])): r["ewma"] for r in df.collect()
+    }
+
+
+def _tiny_events(spark, *cols, limit):
+    """A MATERIALIZED slice of the sf0.001 events: limit keeps an
+    arbitrary subset, and every compared branch must see the same rows."""
+    ev = _events(spark, TINY).select(*cols).limit(limit)
+    return spark.createDataFrame(ev.collect(), ev.schema)
+
+
+def _ewma_frame(spark):
+    ev = (
+        _events(spark, TINY)
+        .select("event_type", F.col("ts").alias("bucket_ts"),
+                F.col("value").alias("avg_value"))
+        # unique (key, order) — plain ewma's collect order (hence the
+        # fold) is nondeterministic under ties
+        .dropDuplicates(["event_type", "bucket_ts"])
+        .limit(400)
+    )
+    # MATERIALIZE: dropDuplicates keeps an arbitrary representative and
+    # limit an arbitrary subset — re-executing that plan per collect()
+    # could hand the compared branches different rows (review fix)
+    return spark.createDataFrame(ev.collect(), ev.schema)
+
+
+def _docs(spark, n, groups, spread):
+    import pandas as pd
+
+    return spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "doc_id": range(n),
+                "source": ["s" + str(i % groups) for i in range(n)],
+                "text": [" ".join(["w"] * (4 + i % spread)) for i in range(n)],
+            }
+        )
+    )
+
+
+def _asof_pair(spark):
+    import numpy as np
+    import pandas as pd
+
+    rng = np.random.default_rng(3)
+    base = pd.Timestamp("2024-01-01")
+    left = pd.DataFrame(
+        {
+            "tag": rng.integers(0, 3, 200).astype(str),
+            "ts": base + pd.to_timedelta(rng.integers(0, 20_000, 200), "s"),
+            "lid": np.arange(200),
+        }
+    )
+    right = (
+        pd.DataFrame(
+            {
+                "tag": rng.integers(0, 3, 50).astype(str),
+                "ts": base
+                + pd.to_timedelta(rng.integers(0, 20_000, 50), "s"),
+                "pay": rng.normal(size=50).round(3),
+            }
+        )
+        .drop_duplicates(["tag", "ts"])
+        .reset_index(drop=True)
+    )
+    return spark.createDataFrame(left), spark.createDataFrame(right)
+
+
+def _route_case(spark, family):
+    """The plain form's (args, kwargs), a row key for comparing outputs,
+    and a shared probe of the row's shape."""
+    ev = _events(spark, TINY).select(
+        "event_type", "user_id", "event_id", "ts", "value"
+    )
+    small = _tiny_events(spark, "event_type", "event_id", "ts", "value",
+                         limit=500)
+
+    def per_type(df, ts="ts"):
+        return rt.probe_keys(df, "event_type", ts_col=ts)
+
+    keyed = {"ts_col": "ts", "key_col": "event_type"}
+    if family == "sessionize":
+        return ((ev,), {"tiebreak_col": "event_id"},
+                _by("event_id", "session_seq"),
+                rt.probe_keys(ev, "user_id", ts_col="ts"))
+    if family == "rolling_zscore":
+        return (ev, 25), {}, _by("event_id", "zscore"), per_type(ev)
+    if family == "cusum_reflected":
+        return (ev,), {}, _by("event_id", "cusum"), per_type(ev)
+    if family == "asof_join":
+        left, right = _asof_pair(spark)
+        u = left.select("tag", "ts").unionByName(right.select("tag", "ts"))
+        return ((left, right), {}, _by("lid", "pay"),
+                rt.probe_keys(u, "tag", ts_col="ts"))
+    if family == "lead_pairs":
+        return (small,), keyed, _pair_rows, per_type(small)
+    if family == "restamp_positional":
+        return ((small, "2025-06-01 00:00:00", 30),
+                {**keyed, "tiebreak_col": "event_id"}, _stamp_rows,
+                per_type(small))
+    if family == "ffill":
+        sparse = small.withColumn(
+            "v", F.when(F.col("event_id") % 9 == 0, F.col("value"))
+        )
+        return ((sparse, "v"), {**keyed, "out_col": "filled"},
+                _by("event_id", "filled"), per_type(sparse))
+    if family == "rolling_range":
+        cents = F.round(F.col("value") * 100).cast("long")
+
+        def aggs(w):
+            return {"n_r": F.count(F.lit(1)).over(w),
+                    "s_r": F.sum(cents).over(w)}
+
+        return ((small, 3_600, aggs), keyed, _by("event_id", "n_r", "s_r"),
+                per_type(small))
+    if family == "ewma":
+        ew = _ewma_frame(spark)
+        return ((ew, 0.3), {"window": 16}, _ewma_rows,
+                per_type(ew, "bucket_ts"))
+    docs = _docs(spark, 300, 3, 13)
+    probe = rt.probe_keys(docs, "source", ts_col="doc_id", numeric_axis=True)
+    if family == "pack_documents":
+        return ((docs,), {"budget_tokens": 64},
+                _by("doc_id", "pack_offset", "pack_id"), probe)
+    assert family == "assemble_packs", family
+
+    def packs(df):
+        return {
+            (r["source"], r["pack_id"]):
+            (r["n_docs"], r["pack_tokens"], r["packed_text"])
+            for r in df.collect()
+        }
+
+    return (docs,), {"budget_tokens": 64}, packs, probe
+
+
+@pytest.mark.parametrize("family", sorted(rt.FAMILIES))
+def test_route_matches_plain_both_branches(spark, monkeypatch, family):
+    """Every table row: a forced-plain route, a forced-twin route and
+    the explicit plain form give equal rows, each route taking the path
+    it was forced to; with a shared ``probe=`` (and a forcing budget)
+    the router never calls probe_keys."""
+    args, kw, rows, shared = _route_case(spark, family)
+    fam = rt.FAMILIES[family]
+    plain = rows(fam.plain(*args, **kw))
+    taken = []
+
+    def spy(path, fn):
+        @functools.wraps(fn)  # route binds against the plain signature
+        def call(*a, **k):
+            taken.append(path)
+            return fn(*a, **k)
+
+        return call
+
+    monkeypatch.setitem(
+        rt.FAMILIES,
+        family,
+        dataclasses.replace(
+            fam, plain=spy("plain", fam.plain), twin=spy("twin", fam.twin)
+        ),
+    )
+    for budget, path in ((10**18, "plain"), (10, "twin")):
+        got = rows(rt.route(family, *args, budget_rows=budget, **kw))
+        assert taken.pop() == path
+        assert got == plain, path
+    monkeypatch.setattr(rt, "probe_keys", _poison)
+    routed = rt.route(family, *args, budget_rows=10, probe=shared, **kw)
+    monkeypatch.undo()
+    assert taken.pop() == "twin"
+    assert rows(routed) == plain
+
+
+DAY_US = 86_400 * US
+W = rt.WINDOW_BUDGET_ROWS
+
+
+def _p(n_keys, rows, hot_us=DAY_US, corpus_us=10 * DAY_US):
+    return rt.KeyProbe(n_keys, rows, 2 * rows, 0, corpus_us, 0, hot_us)
+
+
+#: case -> (probe from the row's anchor budget B, budget_rows, window_rows)
+ROW_CASES = {
+    "below": lambda B: (_p(3, B - 1), B, W),
+    "at": lambda B: (_p(3, B), B, W),
+    "above": lambda B: (_p(3, B + 1), B, W),
+    "hot_hour": lambda B: (_p(3, 20 * B, hot_us=3_600 * US), B, W),
+    "capped": lambda B: (_p(3, 1_000 * B), B, W),
+    "caller_budget": lambda B: (_p(3, 5 * B), B // 4, W),
+    "big_window": lambda B: (_p(3, 5 * B), B, 4 * W),
+    "no_span": lambda B: (rt.KeyProbe(3, 20 * B, 40 * B), B, W),
+    "carry_floor": lambda B: (_p(200_000, 20 * B), B, W),
+    "over_carry_keys": lambda B: (_p(rt.CARRY_BUDGET_ROWS + 1, 20 * B), B, W),
+    "keyless": lambda B: (_p(1, 20 * B, hot_us=10 * DAY_US), B, W),
+    "empty": lambda B: (rt.KeyProbe(0, 0, 0), B, W),
+}
+
+
+def _r(rows, span_s):
+    return rt.KeyProbe(3, rows, 2 * rows, 0, span_s * US, 0, span_s * US)
+
+
+_P = rt.RANGE_PRODUCT_BUDGET
+#: the range row at range_s = 3600: (probe, budget_rows, window_rows)
+RANGE_CASES = {
+    "dense": (_r(100_000, 100_000), _P, W),
+    "sparse": (_r(300_000, 30_000_000), _P, W),
+    "sparse_big_window": (_r(300_000, 30_000_000), _P, 4 * W),
+    "sparse_3m": (_r(3_000_000, 300_000_000), _P, W),
+    "burst": (_r(1_000, 1), _P, W),
+    "spill": (_r(5_000_000, 5_000_000_000), _P, W),
+    "spill_big_window": (_r(5_000_000, 5_000_000_000), _P, 100 * W),
+    "caller_budget": (_r(300_000, 30_000_000), 1, W),
+    "over_carry_keys": (
+        rt.KeyProbe(rt.CARRY_BUDGET_ROWS + 1, 100_000, 10**9, 0,
+                    100_000 * US, 0, 100_000 * US),
+        _P, W,
+    ),
+    "no_span": (rt.KeyProbe(3, 10**9, 10**9), _P, W),
+    "empty": (rt.KeyProbe(0, 0, 0), _P, W),
+}
+
+#: (family, case) -> (path, bucket argument) from the per-family routers
+#: this table replaced, called with the same probe and budgets (the
+#: bucket argument of a plain decision is the one those routers passed
+#: their twin when its decision was forced).  "string_ids" is a
+#: non-numeric id axis, which the router never probes.
+PLAN_PINS = {
+    ('sessionize', 'below'): ('plain', 2),
+    ('sessionize', 'at'): ('plain', 2),
+    ('sessionize', 'above'): ('twin', 2),
+    ('sessionize', 'hot_hour'): ('twin', 20),
+    ('sessionize', 'capped'): ('twin', 256),
+    ('sessionize', 'caller_budget'): ('twin', 20),
+    ('sessionize', 'big_window'): ('twin', 5),
+    ('sessionize', 'no_span'): ('twin', 20),
+    ('sessionize', 'carry_floor'): ('twin', 20),
+    ('sessionize', 'over_carry_keys'): ('plain', 20),
+    ('sessionize', 'keyless'): ('twin', 20),
+    ('sessionize', 'empty'): ('plain', 2),
+    ('rolling_zscore', 'below'): ('plain', 43200),
+    ('rolling_zscore', 'at'): ('plain', 43200),
+    ('rolling_zscore', 'above'): ('twin', 43200),
+    ('rolling_zscore', 'hot_hour'): ('twin', 180),
+    ('rolling_zscore', 'capped'): ('twin', 337),
+    ('rolling_zscore', 'caller_budget'): ('twin', 4320),
+    ('rolling_zscore', 'big_window'): ('twin', 17280),
+    ('rolling_zscore', 'no_span'): ('plain', None),
+    ('rolling_zscore', 'carry_floor'): ('twin', 172800),
+    ('rolling_zscore', 'over_carry_keys'): ('plain', 864000),
+    ('rolling_zscore', 'keyless'): ('twin', 43200),
+    ('rolling_zscore', 'empty'): ('plain', None),
+    ('cusum_reflected', 'below'): ('plain', 43200),
+    ('cusum_reflected', 'at'): ('plain', 43200),
+    ('cusum_reflected', 'above'): ('twin', 43200),
+    ('cusum_reflected', 'hot_hour'): ('twin', 180),
+    ('cusum_reflected', 'capped'): ('twin', 337),
+    ('cusum_reflected', 'caller_budget'): ('twin', 4320),
+    ('cusum_reflected', 'big_window'): ('twin', 17280),
+    ('cusum_reflected', 'no_span'): ('plain', None),
+    ('cusum_reflected', 'carry_floor'): ('twin', 172800),
+    ('cusum_reflected', 'over_carry_keys'): ('plain', 864000),
+    ('cusum_reflected', 'keyless'): ('twin', 43200),
+    ('cusum_reflected', 'empty'): ('plain', None),
+    ('asof_join', 'below'): ('plain', 5760),
+    ('asof_join', 'at'): ('plain', 5760),
+    ('asof_join', 'above'): ('twin', 5400),
+    ('asof_join', 'hot_hour'): ('twin', 14),
+    ('asof_join', 'capped'): ('twin', 337),
+    ('asof_join', 'caller_budget'): ('twin', 1152),
+    ('asof_join', 'big_window'): ('twin', 4547),
+    ('asof_join', 'no_span'): ('plain', None),
+    ('asof_join', 'carry_floor'): ('twin', 172800),
+    ('asof_join', 'over_carry_keys'): ('plain', 864000),
+    ('asof_join', 'keyless'): ('twin', 3375),
+    ('asof_join', 'empty'): ('plain', None),
+    ('lead_pairs', 'below'): ('plain', 2160),
+    ('lead_pairs', 'at'): ('plain', 2160),
+    ('lead_pairs', 'above'): ('twin', 2107),
+    ('lead_pairs', 'hot_hour'): ('twin', 14),
+    ('lead_pairs', 'capped'): ('twin', 337),
+    ('lead_pairs', 'caller_budget'): ('twin', 432),
+    ('lead_pairs', 'big_window'): ('twin', 1728),
+    ('lead_pairs', 'no_span'): ('plain', None),
+    ('lead_pairs', 'carry_floor'): ('twin', 172800),
+    ('lead_pairs', 'over_carry_keys'): ('plain', 864000),
+    ('lead_pairs', 'keyless'): ('twin', 3375),
+    ('lead_pairs', 'empty'): ('plain', None),
+    ('restamp_positional', 'below'): ('plain', 14400),
+    ('restamp_positional', 'at'): ('plain', 14400),
+    ('restamp_positional', 'above'): ('twin', 12342),
+    ('restamp_positional', 'hot_hour'): ('twin', 30),
+    ('restamp_positional', 'capped'): ('twin', 337),
+    ('restamp_positional', 'caller_budget'): ('twin', 2880),
+    ('restamp_positional', 'big_window'): ('twin', 10800),
+    ('restamp_positional', 'no_span'): ('plain', None),
+    ('restamp_positional', 'carry_floor'): ('twin', 172800),
+    ('restamp_positional', 'over_carry_keys'): ('plain', 864000),
+    ('restamp_positional', 'keyless'): ('twin', 7200),
+    ('restamp_positional', 'empty'): ('plain', None),
+    ('ffill', 'below'): ('plain', 4320),
+    ('ffill', 'at'): ('plain', 4320),
+    ('ffill', 'above'): ('twin', 4114),
+    ('ffill', 'hot_hour'): ('twin', 14),
+    ('ffill', 'capped'): ('twin', 337),
+    ('ffill', 'caller_budget'): ('twin', 864),
+    ('ffill', 'big_window'): ('twin', 3456),
+    ('ffill', 'no_span'): ('plain', None),
+    ('ffill', 'carry_floor'): ('twin', 172800),
+    ('ffill', 'over_carry_keys'): ('plain', 864000),
+    ('ffill', 'keyless'): ('twin', 3375),
+    ('ffill', 'empty'): ('plain', None),
+    ('ewma', 'below'): ('plain', 43200),
+    ('ewma', 'at'): ('plain', 43200),
+    ('ewma', 'above'): ('twin', 43200),
+    ('ewma', 'hot_hour'): ('twin', 180),
+    ('ewma', 'capped'): ('twin', 337),
+    ('ewma', 'caller_budget'): ('twin', 17280),
+    ('ewma', 'big_window'): ('twin', 43200),
+    ('ewma', 'no_span'): ('plain', None),
+    ('ewma', 'carry_floor'): ('twin', 172800),
+    ('ewma', 'over_carry_keys'): ('plain', 864000),
+    ('ewma', 'keyless'): ('twin', 43200),
+    ('ewma', 'empty'): ('plain', None),
+    ('pack_documents', 'below'): ('plain', 4320000000),
+    ('pack_documents', 'at'): ('plain', 4320000000),
+    ('pack_documents', 'above'): ('twin', 4114285714),
+    ('pack_documents', 'hot_hour'): ('twin', 14062500),
+    ('pack_documents', 'capped'): ('twin', 337500000),
+    ('pack_documents', 'caller_budget'): ('twin', 864000000),
+    ('pack_documents', 'big_window'): ('twin', 3456000000),
+    ('pack_documents', 'no_span'): ('plain', None),
+    ('pack_documents', 'carry_floor'): ('twin', 172800000000),
+    ('pack_documents', 'over_carry_keys'): ('plain', 864000000000),
+    ('pack_documents', 'keyless'): ('twin', 3375000000),
+    ('pack_documents', 'empty'): ('plain', None),
+    ('assemble_packs', 'below'): ('plain', 4320000000),
+    ('assemble_packs', 'at'): ('plain', 4320000000),
+    ('assemble_packs', 'above'): ('twin', 4114285714),
+    ('assemble_packs', 'hot_hour'): ('twin', 14062500),
+    ('assemble_packs', 'capped'): ('twin', 337500000),
+    ('assemble_packs', 'caller_budget'): ('twin', 864000000),
+    ('assemble_packs', 'big_window'): ('twin', 3456000000),
+    ('assemble_packs', 'no_span'): ('plain', None),
+    ('assemble_packs', 'carry_floor'): ('twin', 172800000000),
+    ('assemble_packs', 'over_carry_keys'): ('plain', 864000000000),
+    ('assemble_packs', 'keyless'): ('twin', 3375000000),
+    ('assemble_packs', 'empty'): ('plain', None),
+    ('pack_documents', 'string_ids'): ('plain', None),
+    ('assemble_packs', 'string_ids'): ('plain', None),
+    ('rolling_range', 'dense'): ('twin', 50000),
+    ('rolling_range', 'sparse'): ('twin', 10000000),
+    ('rolling_range', 'sparse_big_window'): ('plain', 15000000),
+    ('rolling_range', 'sparse_3m'): ('twin', 10000000),
+    ('rolling_range', 'burst'): ('plain', 3600),
+    ('rolling_range', 'spill'): ('twin', 100000000),
+    ('rolling_range', 'spill_big_window'): ('plain', 2500000000),
+    ('rolling_range', 'caller_budget'): ('twin', 10000000),
+    ('rolling_range', 'over_carry_keys'): ('twin', 100000),
+    ('rolling_range', 'no_span'): ('plain', None),
+    ('rolling_range', 'empty'): ('plain', None),
+}
+
+
+def test_plan_pins_the_replaced_routers():
+    for (family, case), want in PLAN_PINS.items():
+        if case == "string_ids":
+            got = rt.plan(family, None, rt.PACK_BUDGET_ROWS)
+        elif family == "rolling_range":
+            probe, budget, window = RANGE_CASES[case]
+            got = rt.plan(family, probe, budget, window, range_s=3_600)
+        else:
+            probe, budget, window = ROW_CASES[case](rt.FAMILIES[family].budget)
+            got = rt.plan(family, probe, budget, window)
+        assert got == want, (family, case)
+    assert len(PLAN_PINS) == (
+        len(ROW_CASES) * (len(rt.FAMILIES) - 1) + len(RANGE_CASES) + 2
+    )
+
+
+def test_every_twin_has_one_row():
+    """Each public ``*_chunked`` operator is exactly one row's twin, and
+    every twin takes its plain form's parameters plus the row's bucket
+    parameter (sessionize is its own twin), which is what lets ``route``
+    bind a call once against the plain signature."""
+    import importlib
+    import inspect
+    import pkgutil
+
+    from amazon_lookout_for_equipment_python_sdk_spark import operators
+
+    twins = {}
+    for m in pkgutil.iter_modules(operators.__path__):
+        mod = importlib.import_module(f"{operators.__name__}.{m.name}")
+        for name, fn in vars(mod).items():
+            if (
+                name.endswith("_chunked")
+                and not name.startswith("_")
+                and inspect.isfunction(fn)
+                and fn.__module__ == mod.__name__
+            ):
+                twins[f"{m.name}.{name}"] = fn
+    rows = [fam.twin for fam in rt.FAMILIES.values()]
+    assert len(rows) == len(twins) + 1  # sessionize is its own twin
+    for name, fn in twins.items():
+        assert rows.count(fn) == 1, name
+    for family, fam in rt.FAMILIES.items():
+        plain = set(inspect.signature(fam.plain).parameters)
+        twin = set(inspect.signature(fam.twin).parameters)
+        assert twin == plain | {fam.bucket}, family
+        assert {fam.key, fam.order} - {None} <= plain, family

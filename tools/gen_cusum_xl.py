@@ -15,7 +15,7 @@ itself.  This fixture puts one key a decade past that largest point:
 Schema matches events.parquet (event_id, ts, user_id, event_type,
 value, props) so the operators run unmodified.  Deterministic: ids from
 ``spark.range``, values from xxhash64 — no wall clock, no RNG.  NOT
-driver data, NOT an oracle input; consumed only by tools/bench_cusum_xl.py.
+driver data, NOT an oracle input; consumed only by tools/ab_twin.py.
 
     python tools/gen_cusum_xl.py                 # 50M hot (default)
     SPARK_GRAFT_CUSUM_HOT=20000000 SPARK_GRAFT_CUSUM_NAME=cusum_20m \

@@ -11,7 +11,7 @@ xxhash64 — pack cost is the CUMSUM over token counts, not text volume,
 so small texts keep the fixture disk-light while the window work stays
 shape-accurate).  doc_id is globally sequential per group (the numeric
 axis the twin buckets on).  Deterministic: no wall clock, no RNG.  NOT
-driver data, NOT an oracle input; consumed only by tools/bench_pack_ab.py.
+driver data, NOT an oracle input; consumed only by tools/ab_twin.py.
 
     python tools/gen_pack_xl.py                      # 5M hot (default)
     SPARK_GRAFT_PACK_HOT=1000000 SPARK_GRAFT_PACK_NAME=pack_1m \
