@@ -186,36 +186,36 @@ class ModelEvaluation:
         anomalous distributions overlaid (reference plot_histograms,
         evaluation.py:394-478: ranked order, nb_cols columns, alpha-blended
         pairs)."""
-        from ..operators.wasserstein import density_histograms
+        from ..operators.wasserstein import density_histograms, rank_histograms
         from ..plot.viz import plot_histogram_grid
 
-        # one stamped-points pipeline feeds both the ranking and the
-        # histograms (rebuilding it would double the dominant join cost)
-        tagged = self._tagged_subsets(df_long)
-        ranked = [
-            r["tag"]
-            for r in rank_signals_by_shift(
-                tagged, "subset", "normal", "anomalous",
-                num_bins=num_bins, key_col="tag", value_col="value",
-                top_n=max_plots,
-            ).collect()
-        ]
+        # one histogram pass feeds both the ranking and the plot: persisted
+        # for this call only (grid-sized), released before returning
         hists = density_histograms(
-            tagged,
+            self._tagged_subsets(df_long),
             "subset",
             num_bins,
             key_col="tag",
             value_col="value",
             with_edges=True,
-        )
-        return plot_histogram_grid(
-            hists,
-            path,
-            key_col="tag",
-            ncols=nb_cols,
-            max_plots=max_plots,
-            ranking=ranked,
-        )
+        ).persist()
+        try:
+            ranked = [
+                r["tag"]
+                for r in rank_histograms(
+                    hists, "normal", "anomalous", "tag", top_n=max_plots
+                ).collect()
+            ]
+            return plot_histogram_grid(
+                hists,
+                path,
+                key_col="tag",
+                ncols=nb_cols,
+                max_plots=max_plots,
+                ranking=ranked,
+            )
+        finally:
+            hists.unpersist()
 
     def plot_signals(
         self,

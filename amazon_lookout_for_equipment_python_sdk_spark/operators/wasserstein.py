@@ -31,7 +31,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .histogram import histogram, signal_bounds, widen_degenerate_bounds
-from .._persist import note_persist as _note_persist
 
 
 def density_histograms(
@@ -70,14 +69,19 @@ def density_histograms(
         bounds = signal_bounds(df, key_col, value_col)
     bounds = widen_degenerate_bounds(bounds)
     width = (F.col("max_value") - F.col("min_value")) / F.lit(float(num_bins))
-    binned = (
+    # one pass to per-(signal, subset) bin counts (at most num_bins map
+    # entries each); the totals and the bin grid come from the same
+    # aggregate, so nothing is consumed twice and nothing is persisted
+    counts = (
         df.join(F.broadcast(bounds), key_col)
         .select(
             key_col,
             F.col(split_col).alias("subset"),
+            "min_value",
+            "max_value",
             # clamp BOTH ends: caller-supplied ``bounds`` is public API, and
             # a value outside [min, max] would otherwise land in bin -1 / n
-            # — counted into the subset total but dropped by the grid join,
+            # — counted into the subset total but outside the grid,
             # silently deflating every density (the same failure mode the
             # null filter above guards)
             F.greatest(
@@ -90,51 +94,32 @@ def density_histograms(
             .cast("int")
             .alias("bin"),
         )
-        .groupBy(key_col, "subset", "bin")
+        .groupBy(key_col, "subset", "min_value", "max_value", "bin")
         .agg(F.count("*").alias("cnt"))
-        # persist: keys x subsets x bins rows (grid-sized), but BOTH the
-        # totals agg and the final left join consume it, and each
-        # consumer otherwise recomputes the entire corpus lineage
-        # feeding df (the evaluation chain's range-join stamping ran
-        # twice; r7 scan audit).  Same B-row-cache rule as dsir.py.
-        .persist()
-        .transform(_note_persist)
-    )
-    totals = binned.groupBy(key_col, "subset").agg(F.sum("cnt").alias("n"))
-    grid = (
-        totals.join(F.broadcast(bounds), key_col)
-        .select(
-            key_col,
-            "subset",
-            "n",
-            "min_value",
-            "max_value",
-            F.explode(F.sequence(F.lit(0), F.lit(num_bins - 1))).alias("bin"),
+        .groupBy(key_col, "subset", "min_value", "max_value")
+        .agg(
+            F.sum("cnt").alias("n"),
+            F.map_from_entries(F.collect_list(F.struct("bin", "cnt"))).alias("cnts"),
         )
     )
-    w = (F.col("max_value") - F.col("min_value")) / F.lit(float(num_bins))
     edge_cols = (
         [
-            (F.col("min_value") + F.col("bin") * w).alias("bin_start"),
-            w.alias("bin_width"),
+            (F.col("min_value") + F.col("bin") * width).alias("bin_start"),
+            width.alias("bin_width"),
         ]
         if with_edges
         else []
     )
-    return (
-        # broadcast the RIGHT side: a left-outer join cannot build its left,
-        # so grid's inherited hint is unusable; binned is keys x subsets x
-        # bins rows — grid-sized, safely broadcastable
-        grid.join(F.broadcast(binned), [key_col, "subset", "bin"], "left")
-        .select(
-            key_col,
-            "subset",
-            "bin",
-            (F.coalesce(F.col("cnt"), F.lit(0)) / (F.col("n") * w)).alias(
-                "density"
-            ),
-            *edge_cols,
-        )
+    return counts.withColumn(
+        "bin", F.explode(F.sequence(F.lit(0), F.lit(num_bins - 1)))
+    ).select(
+        key_col,
+        "subset",
+        "bin",
+        (F.coalesce(F.col("cnts")[F.col("bin")], F.lit(0)) / (F.col("n") * width)).alias(
+            "density"
+        ),
+        *edge_cols,
     )
 
 
@@ -192,6 +177,18 @@ def rank_signals_by_shift(
     Wasserstein(density-vectors) -> rank desc -> optional top-k
     (evaluation.py:228-313 + 557-571)."""
     hists = density_histograms(df, split_col, num_bins, key_col, value_col)
+    return rank_histograms(hists, subset_a, subset_b, key_col, top_n)
+
+
+def rank_histograms(
+    hists: DataFrame,
+    subset_a: str,
+    subset_b: str,
+    key_col: str = "tag",
+    top_n: int | None = None,
+) -> DataFrame:
+    """The ranking half of :func:`rank_signals_by_shift`, over histograms
+    a caller already holds: distance desc, then key; optional top-k."""
     d = wasserstein_between_density_vectors(hists, subset_a, subset_b, key_col)
     d = d.orderBy(F.desc("distance"), key_col)
     return d.limit(top_n) if top_n else d

@@ -5,7 +5,9 @@ the same logical plans scale to a multi-executor cluster: AQE on (runtime
 coalesce + skew-join handling), shuffle partitions sized to cores locally
 (cluster deployments override via ``spark.sql.shuffle.partitions``), Arrow on
 for the few Pandas-UDF paths, UTC session timezone (the reference normalizes
-everything tz-naive; SURVEY §1.2).
+everything tz-naive; SURVEY §1.2).  The driver JVM's heap is pinned and
+pre-touched, and its C2 (tier-4) compile thresholds are raised by
+``JIT_TIER4_SCALE`` so C2 compiles only code that runs hot.
 """
 
 from __future__ import annotations
@@ -73,6 +75,30 @@ _HEAP_SHARE = 0.6
 #: loaded again).  About 2x the working set leaves headroom for callers'
 #: own plans.  Static conf: it takes effect only in a new JVM.
 CODEGEN_CACHE_ENTRIES = 4096
+
+#: JDK 17's defaults for the tier-4 (C2) compile thresholds
+_TIER4_DEFAULTS = {
+    "Tier4InvocationThreshold": 5000,
+    "Tier4MinInvocationThreshold": 600,
+    "Tier4CompileThreshold": 15000,
+    "Tier4BackEdgeThreshold": 40000,
+}
+#: How much later than the JDK default the driver JVM hands a method to
+#: C2.  The engine's work is bound by plans, not by bulk data: planner,
+#: optimizer and AQE code runs thousands of times per plan, not millions,
+#: so at the default thresholds C2 spends most of its effort on code that
+#: never pays the compile back.  Census (BASELINE.md "Generated-code
+#: census", JIT subsection): over a sweep of the registered queries the
+#: C2 threads used 38 % of the JVM's CPU, six times C1; in one cold
+#: train/evaluate lifecycle of the benchmark the JIT threads used 27.6
+#: of 62.4 CPU seconds.  At 5x, C2's CPU in the sweep fell by 44 %.
+#: Bulk loops cross even a 10x back-edge threshold within milliseconds,
+#: so they still reach C2.  C1 (tiers 1-3) keeps its defaults: C1 alone
+#: runs bulk aggregates and windows 3-5x slower.  5, not 10: at 10 the
+#: cold first pass over a query set ran about 15 % longer (hot code stays
+#: in profiled tier-3 code longer), at 5 it did not.
+JIT_TIER4_SCALE = 5
+JIT_TIER4_THRESHOLDS = {k: v * JIT_TIER4_SCALE for k, v in _TIER4_DEFAULTS.items()}
 
 
 def _host_memory_bytes() -> int | None:
@@ -145,10 +171,11 @@ def get_spark(app_name: str = "lookout_spark", cpus: int | None = None) -> Spark
         # One-time cost: the pre-touch itself at session start, OUTSIDE
         # any per-query timing.  Guide §5 (memory): steady-state heap for
         # a long-running engine; on a cluster the same flags go on the
-        # executor JVMs.
+        # executor JVMs.  The C2 thresholds ride along (JIT_TIER4_SCALE).
         .config(
             "spark.driver.extraJavaOptions",
-            f"-Xms{driver_mem} -XX:+AlwaysPreTouch",
+            f"-Xms{driver_mem} -XX:+AlwaysPreTouch "
+            + " ".join(f"-XX:{k}={v}" for k, v in JIT_TIER4_THRESHOLDS.items()),
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))

@@ -120,6 +120,32 @@ def run_one(spark, sf_dir: str, name: str) -> float:
     return time.time() - t0
 
 
+def _mem_total_mb() -> int | None:
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1]) >> 10
+    except OSError:
+        pass
+    return None
+
+
+def host_fingerprint(spark, load_before: list[float]) -> dict:
+    """The machine a run was measured on: usable cores, the session's
+    cores, MemTotal, the driver heap, and the load averages before the
+    JVM launched and after the last query.  Runs on different hosts are
+    not comparable."""
+    return {
+        "cores": len(os.sched_getaffinity(0)),
+        "spark_cores": spark.sparkContext.defaultParallelism,
+        "mem_total_mb": _mem_total_mb(),
+        "heap": spark.conf.get("spark.driver.memory"),
+        "load_before": load_before,
+        "load_after": [round(x, 2) for x in os.getloadavg()],
+    }
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
@@ -190,6 +216,7 @@ def main() -> None:
         "unit": "sec",
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "reps": reps,
+        "host": host_fingerprint(spark, load_prelaunch),
         "load_avg_prelaunch": load_prelaunch,
         "load_avg_start": load_start,
         "load_avg_end": [round(x, 2) for x in os.getloadavg()],

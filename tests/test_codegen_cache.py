@@ -3,7 +3,9 @@ generated classes instead of paying Janino and JIT compilation again.
 
 The count is Spark's own ``CodegenMetrics.METRIC_COMPILATION_TIME``
 histogram, which records one sample per compiled class (JVM-wide), read
-over py4j around the run under test.
+over py4j around the run under test.  The driver JVM's own flags (the
+heap pin and the C2 thresholds) are read from its
+``HotSpotDiagnosticMXBean``.
 """
 
 from __future__ import annotations
@@ -14,7 +16,10 @@ from datetime import datetime, timedelta
 from pyspark.sql import functions as F
 
 from amazon_lookout_for_equipment_python_sdk_spark.plans.queries import QUERIES
-from amazon_lookout_for_equipment_python_sdk_spark.session import CODEGEN_CACHE_ENTRIES
+from amazon_lookout_for_equipment_python_sdk_spark.session import (
+    CODEGEN_CACHE_ENTRIES,
+    JIT_TIER4_THRESHOLDS,
+)
 from amazon_lookout_for_equipment_python_sdk_spark.streaming import (
     InferenceScheduler,
     SchedulerConfig,
@@ -47,6 +52,30 @@ def test_session_reports_codegen_cache_size(spark):
     assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
         CODEGEN_CACHE_ENTRIES
     )
+
+
+def _vm_option(spark, name: str):
+    """The live driver JVM's value of a HotSpot flag, and where it came
+    from (``VM_CREATION`` for a command-line flag)."""
+    jvm = spark._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    option = bean.getVMOption(name)
+    return option.getValue(), option.getOrigin().toString()
+
+
+def test_driver_jvm_carries_the_jit_and_heap_pins(spark):
+    """Every tier-4 threshold is the session constant, set on the command
+    line, and the heap is still pinned (-Xms = -Xmx) and pre-touched."""
+    for name, value in JIT_TIER4_THRESHOLDS.items():
+        assert _vm_option(spark, name) == (str(value), "VM_CREATION"), name
+    assert _vm_option(spark, "AlwaysPreTouch") == ("true", "VM_CREATION")
+    # the heap sizes' origin reads ERGONOMIC when the JVM rounds them to
+    # its region alignment, so compare values and the command line
+    assert _vm_option(spark, "InitialHeapSize")[0] == _vm_option(spark, "MaxHeapSize")[0]
+    args = list(spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments())
+    assert f"-Xms{spark.conf.get('spark.driver.memory')}" in args, args
 
 
 def test_recurring_queries_compile_once(spark, sf_dir):

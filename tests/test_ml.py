@@ -424,10 +424,11 @@ def test_fit_job_census(spark, synthetic_long):
     assert len(jobs) <= 22, len(jobs)
 
 
-def test_fit_and_evaluation_add_no_cache_entry(spark, synthetic_long):
+def test_fit_and_evaluation_add_no_cache_entry(spark, synthetic_long, tmp_path):
     """The materialized intermediates are local checkpoints, not persisted
-    frames: fit and the evaluation's range and stamp calls leave Spark's
-    CacheManager empty, and constructing the evaluation runs no job."""
+    frames: fit and the evaluation's range, stamp, ranking and histogram
+    calls leave Spark's CacheManager empty, and constructing the
+    evaluation runs no job."""
     cache = spark._jsparkSession.sharedState().cacheManager()
     spark.catalog.clearCache()
     det = AnomalyDetector(ModelConfig(model_name="nocache", sampling_rate="PT5M")).fit(
@@ -444,6 +445,10 @@ def test_fit_and_evaluation_add_no_cache_entry(spark, synthetic_long):
     assert jobs == [], jobs
     assert ev.predicted_ranges().count() > 0
     assert ev.stamped_points().count() == scored.count()
+    assert cache.isEmpty()
+    assert len(ev.rank_signals(synthetic_long).collect()) == 3
+    assert cache.isEmpty()
+    ev.plot_histograms(synthetic_long, str(tmp_path / "h.svg"))
     assert cache.isEmpty()
 
 

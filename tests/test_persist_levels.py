@@ -75,7 +75,9 @@ REGISTRY = {
     ("operators/dedup.py", "ngram_jaccard_pairs"): "CORPUS",
     ("operators/dsir.py", "model"): "BOUNDED",
     ("operators/sketches.py", "kmv_sketch"): "BOUNDED",
-    ("operators/wasserstein.py", "density_histograms"): "BOUNDED",
+    # the histogram grid (signals x subsets x bins) feeds the ranking and
+    # the plot, persisted for the one call and released before it returns
+    ("ml/evaluation.py", "plot_histograms"): "BOUNDED",
     ("plans/llmops.py", "perplexity_prune_q"): "BOUNDED",
     ("plans/relational.py", "q15_q"): "BOUNDED",
     ("streaming/scheduler.py", "_process_batch"): "BOUNDED",

@@ -5,6 +5,8 @@ exchanges) so Spark-version plan cosmetics don't break them."""
 
 from __future__ import annotations
 
+import time
+
 import __spark_entry__ as entrymod
 
 SF = "/root/testdata/sf0.001"
@@ -402,14 +404,68 @@ def test_duplicate_spans_sliver_cached(spark):
     )
 
 
-def test_density_histogram_queries_cache_binned(spark):
-    """r7: density_histograms persists its grid-sized binned frame so
-    the totals agg and the final join stop recomputing the upstream
-    corpus lineage (the evaluation chain ran its range-join stamping
-    twice)."""
-    for q in ("wasserstein_rank", "model_evaluation"):
-        plan = _plan(spark, q)
-        assert plan.count("InMemoryTableScan") >= 2, (q, plan)
+def _seq(scala_seq) -> list:
+    return [scala_seq.apply(i) for i in range(scala_seq.size())]
+
+
+def _scan_rows(spark, action) -> dict[str, int]:
+    """Rows output by each scan node (by node name) over the SQL
+    executions ``action`` runs (told apart by a job description), read
+    from Spark's SQL status store.  A cached relation's plan shows under
+    every scan of it with the same metric, so each metric counts once."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    tag = f"scan-rows-{time.monotonic_ns()}"
+    spark.sparkContext.setJobDescription(tag)
+    try:
+        action()
+    finally:
+        spark.sparkContext.setJobDescription(None)
+    deadline = time.monotonic() + 60
+    while True:  # the status store is fed by the asynchronous listener bus
+        new = [e for e in _seq(store.executionsList()) if e.description() == tag]
+        if new and all(
+            e.completionTime().isDefined() and e.metricValues() is not None for e in new
+        ):
+            break
+        assert time.monotonic() < deadline, "SQL executions did not complete"
+        time.sleep(0.05)
+    rows: dict[str, int] = {}
+    for e in new:
+        values, counted = e.metricValues(), set()
+        for node in _seq(store.planGraph(e.executionId()).allNodes()):
+            if not node.name().startswith("Scan"):
+                continue
+            for m in _seq(node.metrics()):
+                acc = m.accumulatorId()
+                if m.name() == "number of output rows" and acc not in counted and values.contains(acc):
+                    counted.add(acc)
+                    n = int(values.apply(acc).replace(",", ""))
+                    rows[node.name()] = rows.get(node.name(), 0) + n
+    return rows
+
+
+def test_density_histogram_queries_scan_count(spark):
+    """density_histograms reads its input once for the bounds and once
+    for the bin counts, and the totals and the bin grid come from that
+    one aggregate: the events table is scanned twice (the evaluation
+    chain adds one pass for its flagged buckets), nothing is cached, and
+    no query leaves a cache entry behind."""
+    from amazon_lookout_for_equipment_python_sdk_spark.plans.registry import load
+
+    n_events = load(spark, SF, "events").count()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    for name, passes in (
+        ("wasserstein_rank", 2),
+        ("wasserstein_raw_rank", 2),
+        ("model_evaluation", 3),
+    ):
+        df = entrymod.queries()[name](spark, SF)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryTableScan" not in plan, (name, plan)
+        rows = _scan_rows(spark, df.collect)
+        assert rows == {"Scan parquet ": passes * n_events}, (name, rows)
+        assert cache.isEmpty(), name
 
 
 def test_mad_outliers_single_scan_cached_slivers(spark):

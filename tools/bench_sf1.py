@@ -3,9 +3,9 @@
 Runs each query at sf0.1 (driver data) and sf1 (tools/gen_sf1.py
 fixture, 10x rows with per-copy decorrelation) under the standard bench
 protocol (clearCache + double GC, best-of-3) and prints a JSON line with
-per-query times and the scaling factor t(sf1)/t(sf0.1).  A factor well
-above ~10 on a linear-plan query is the super-linear surprise this
-exists to catch.
+per-query times (min of 3, and every rep) and the scaling factor
+t(sf1)/t(sf0.1).  A factor well above ~10 on a linear-plan query is the
+super-linear surprise this exists to catch.
 """
 
 from __future__ import annotations
@@ -63,7 +63,7 @@ def main() -> None:
     for n in QUERIES:  # warm-up
         _drain(q.QUERIES[n](spark, "/root/testdata/sf0.001"))
 
-    def best3(name, sf_dir):
+    def reps3(name, sf_dir):
         ts = []
         for _ in range(3):
             spark.catalog.clearCache()
@@ -72,17 +72,19 @@ def main() -> None:
             spark.sparkContext._jvm.System.gc()
             t0 = time.time()
             _drain(q.QUERIES[name](spark, sf_dir))
-            ts.append(time.time() - t0)
-        return round(min(ts), 3)
+            ts.append(round(time.time() - t0, 3))
+        return ts
 
     out = {}
     for n in QUERIES:
-        t01 = best3(n, SF01)
-        t1 = best3(n, SF1)
+        reps01 = reps3(n, SF01)
+        reps1 = reps3(n, SF1)
+        t01, t1 = min(reps01), min(reps1)
         out[n] = {
             "sf0.1": t01,
             "sf1": t1,
             "factor": round(t1 / t01, 2),
+            "reps": {"sf0.1": reps01, "sf1": reps1},
         }
         print(f"{n:30s} sf0.1={t01:7.2f}  sf1={t1:7.2f}  x{t1 / t01:5.2f}",
               file=sys.stderr)
