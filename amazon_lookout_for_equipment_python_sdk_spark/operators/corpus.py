@@ -20,8 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ._chunkjoin import NULL_TS_BUCKET as _NULL_ID_BUCKET
-from ._chunkjoin import guard_internal, join_boundary
+from ._chunkjoin import bucket_axis, guard_internal, keyed_scan
 from .text import exploded_shingles, fingerprint_bucket, tokens
 
 # --- benchmark decontamination ---------------------------------------------
@@ -481,28 +480,20 @@ def pack_documents_chunked(
     the serialized-sort-cliff class, r11 verdict #4; group_quantiles
     and pack_documents_greedy's ``scan_rows`` escaped it earlier).
 
-    The pack cumsum is a prefix SUM — associative, so it decomposes
-    exactly like the restamp/cusum twins (operators/stats.py): a
-    bucket-local cumsum (window over (group, bucket) — parallel) plus
-    each bucket's token total offset by exclusive prefix sum over a
-    tiny per-(group, bucket) aggregate, joined back BROADCAST
-    (``_chunkjoin`` null-safe join — null-key groups pack like any
-    other, the engine-wide convention).  The bucket axis is
+    The pack cumsum is a prefix sum: see
+    :func:`~._chunkjoin.keyed_scan`.  The bucket axis is
     ``floor(id / bucket_span_ids)`` — value-based on the SAME axis the
     plain window sorts, so bucket order IS id order and the split is
     row-local (no row_number pre-pass, which would itself pay the
-    serialized sort).  Null ids park in a sentinel front bucket,
-    reproducing the plain ascending window's nulls-FIRST placement.
+    serialized sort).
 
     Requires a NUMERIC ``id_col`` (the value-based bucket axis); string
     ids use the plain form or :func:`pack_documents_greedy` with
     ``scan_rows``.  Ties on (group, id): same nondeterminism contract
-    as the plain form (ids are unique per group by contract).
-
-    Cost: one (group, bucket) corpus exchange + the tiny aggregate and
-    its broadcast — worth it once a group's rows exceed the per-task
-    window sort budget (``operators.routing.route("pack_documents")``
-    routes on a probe)."""
+    as the plain form (ids are unique per group by contract).  Worth
+    it once a group's rows exceed the per-task window sort budget
+    (``operators.routing.route("pack_documents")`` routes on a
+    probe)."""
     # guard only the three columns the twin actually stages through the
     # prefix-sum join: the full-frame check spuriously rejected inputs
     # carrying an unrelated _m/_c payload column that never enters the
@@ -519,35 +510,13 @@ def pack_documents_chunked(
     n_tok = F.size(F.split(F.col(text_col), " "))
     rows = df.select(
         id_col, group_col, n_tok.alias("n_tokens")
-    ).withColumn(
-        "_b",
-        F.coalesce(
-            F.floor(F.col(id_col) / F.lit(int(bucket_span_ids))),
-            F.lit(_NULL_ID_BUCKET),
-        ),
+    ).withColumn("_b", bucket_axis(id_col, bucket_span_ids, "id"))
+    cum = keyed_scan(
+        rows, [group_col], [id_col], {"_cum": ("sum", "n_tokens")}
     )
-    wl = (
-        Window.partitionBy(group_col, "_b")
-        .orderBy(id_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = rows.withColumn("_lc", F.sum("n_tokens").over(wl))
-    wb = (
-        Window.partitionBy(group_col)
-        .orderBy("_b")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = (
-        rows.groupBy(group_col, "_b")
-        .agg(F.sum("n_tokens").alias("_bs"))
-        .withColumn("_off", F.coalesce(F.sum("_bs").over(wb), F.lit(0)))
-        .drop("_bs")
-    )
-    joined = join_boundary(local, offsets, [group_col], ["_b"])
-    cum = F.col("_off") + F.col("_lc")
     return (
-        joined.withColumn(
-            "pack_offset", (cum - F.col("n_tokens")).cast("long")
+        cum.withColumn(
+            "pack_offset", (F.col("_cum") - F.col("n_tokens")).cast("long")
         )
         .withColumn(
             "pack_id",
@@ -638,13 +607,12 @@ def assemble_packs_chunked(
     sep: str = " ",
 ) -> DataFrame:
     """Skew-safe :func:`assemble_packs`: the assignment cumsum runs
-    through :func:`pack_documents_chunked` (two-level prefix-sum
-    decomposition — see its doc for the geometry and the numeric-id
-    contract); the (group, pack) rollup is shared with the plain form
-    and was already parallel.  The text column rejoins the assignment
-    on (group, id) — an equi-join on the twin's own output, null-safe
-    on both (null ids pack via the sentinel bucket and must rejoin
-    their text row)."""
+    through :func:`pack_documents_chunked` (see its doc for the
+    numeric-id contract); the (group, pack) rollup is shared with the
+    plain form and was already parallel.  The text column rejoins the
+    assignment on (group, id) — an equi-join on the twin's own output,
+    null-safe on both (null ids pack via the sentinel bucket and must
+    rejoin their text row)."""
     assign = pack_documents_chunked(
         df,
         budget_tokens=budget_tokens,

@@ -24,8 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ._chunkjoin import NULL_TS_BUCKET as _NULL_TS_BUCKET
-from ._chunkjoin import guard_internal, join_boundary
+from ._chunkjoin import _keyed_scan, bucket_axis, guard_internal
+from ._chunkjoin import join_boundary, keyed_scan
 
 
 def _cents(c: Column, scale: int) -> Column:
@@ -120,60 +120,37 @@ def _chunked_rows_frame(
     tiebreak_col: str | None = None,
 ):
     """Shared core of the trailing-ROWS-frame twins (rolling_zscore,
-    ewma — any per-key ``ROWS BETWEEN window-1 PRECEDING`` aggregate):
-
-    1. bucket counts -> per-key running offsets (tiny table, broadcast);
-    2. local rank within each (key, bucket) + bucket offset = each row's
-       GLOBAL per-key index ``g`` — computed without any per-key window;
-    3. a row replicates into every later bucket whose first global index
-       is <= g + window - 1 (derived from the broadcast offsets — so
-       context chains across arbitrarily sparse buckets), average
-       replication 1 + (window-1)/rows_per_bucket;
-    4. per (key, bucket) windows over ``g`` see exactly the trailing
-       ``window`` rows; context rows compute but don't emit.
+    ewma — any per-key ``ROWS BETWEEN window-1 PRECEDING`` aggregate).
+    Each row's GLOBAL per-key index ``g`` is a prefix count (see
+    :func:`~._chunkjoin.keyed_scan`), whose carry table gives each
+    (key, bucket)'s first index.  A row replicates into every later
+    bucket whose first index is <= g + window - 1 (so context chains
+    across arbitrarily sparse buckets; average replication 1 +
+    (window-1)/rows_per_bucket), and per (key, bucket) windows over
+    ``g`` then see exactly the trailing ``window`` rows.
 
     Returns ``(targets, wt)``: callers compute aggregates over ``wt``
     on ``targets``, then finish with :func:`_emit_rows_frame` (drops
-    the context rows and the internal columns — callers never touch
-    the private names).  Null-ts rows ride the sentinel front
-    bucket (the plain window's nulls-first order); null keys are one
-    ordinary group (_chunkjoin + null-safe replication join).  Without
-    ``tiebreak_col``, ties on ``ts_col`` order arbitrarily — the same
-    nondeterminism contract as the corresponding plain window."""
+    the replicated context rows and the internal columns — callers
+    never touch the private names).  The replication join is null-safe
+    on the key, like the scan's.  Without ``tiebreak_col``, ties on
+    ``ts_col`` order arbitrarily — the same nondeterminism contract as
+    the corresponding plain window."""
     order = [ts_col] + ([tiebreak_col] if tiebreak_col else [])
-    rows = df.withColumn(
-        "_bkt",
-        F.coalesce(
-            F.floor(F.unix_timestamp(F.col(ts_col)) / bucket_span_s),
-            F.lit(_NULL_TS_BUCKET),
-        ),
-    )
-    counts = rows.groupBy(key_col, "_bkt").agg(F.count("*").alias("_c"))
-    wb = (
-        Window.partitionBy(key_col)
-        .orderBy("_bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = counts.withColumn(
-        "_bstart", F.coalesce(F.sum("_c").over(wb), F.lit(0).cast("long"))
-    ).select(key_col, F.col("_bkt").alias("_tbkt"), "_bstart")
-    wl = Window.partitionBy(key_col, "_bkt").orderBy(*order)
-    g = (
-        join_boundary(
-            rows.withColumn("_lr", (F.row_number().over(wl) - 1).cast("long")),
-            offsets.withColumnRenamed("_tbkt", "_bkt"),
-            [key_col],
-            ["_bkt"],
-        )
-        .withColumn("_g", F.col("_bstart") + F.col("_lr"))
-        .drop("_bstart", "_lr")
+    rows = df.withColumn("_b", bucket_axis(ts_col, bucket_span_s, "s"))
+    g, carries = _keyed_scan(rows, [key_col], order, {"_g": ("sum", F.lit(1))})
+    offsets = carries.select(
+        key_col,
+        F.col("_b").alias("_tbkt"),
+        F.coalesce(F.col("_g"), F.lit(0).cast("long")).alias("_bstart"),
     )
     targets = (
-        g.alias("r")
+        g.withColumn("_g", F.col("_g") - 1)
+        .alias("r")
         .join(
             F.broadcast(offsets).alias("o"),
             (F.col(f"r.{key_col}").eqNullSafe(F.col(f"o.{key_col}")))
-            & (F.col("o._tbkt") >= F.col("r._bkt"))
+            & (F.col("o._tbkt") >= F.col("r._b"))
             & (F.col("o._bstart") <= F.col("r._g") + F.lit(window - 1)),
         )
         .select("r.*", F.col("o._tbkt"))
@@ -190,8 +167,8 @@ def _emit_rows_frame(df: DataFrame) -> DataFrame:
     """Finish a :func:`_chunked_rows_frame` computation: keep only the
     emitting rows (drop the replicated context) and the caller-visible
     columns."""
-    return df.filter(F.col("_tbkt") == F.col("_bkt")).drop(
-        "_bkt", "_tbkt", "_g"
+    return df.filter(F.col("_tbkt") == F.col("_b")).drop(
+        "_b", "_tbkt", "_g"
     )
 
 
@@ -335,21 +312,9 @@ def cusum_reflected_chunked(
     histories (the plain form's time-order window serializes a 20-year
     signal onto one task).
 
-    The reflected walk S_i = C_i − min(0, min_{j≤i} C_j) decomposes as
-    a classic two-level scan — prefix sums/mins are associative, so the
-    per-key serial pass collapses to local scans plus a tiny carry
-    table:
-
-    1. per (key, bucket) ORDER-local: running sum ``localC`` and running
-       min ``localM`` of d = cents − median − k (windows over (key,
-       bucket) partitions — parallel);
-    2. per (key, bucket) AGGREGATE (one row per bucket): total T_b and
-       min-of-localC m_b; bucket carries via two windows over this tiny
-       table: offset_b = Σ T_{b'<b} and carried-min_b =
-       min_{b'<b}(offset_{b'} + m_{b'}) (EXCLUSIVE prefixes);
-    3. row-local combine (broadcast join of the carry table):
-       C_i = offset_b + localC_i, and
-       min_{j≤i} C_j = least(carried-min_b, offset_b + localM_i).
+    The reflected walk S_i = C_i − min(0, min_{j≤i} C_j) is a ``sum``
+    and a ``min_sum`` prefix scan of d = cents − median − k: see
+    :func:`~._chunkjoin.keyed_scan`.
 
     The per-key lower median comes from the domain-bounded value-count
     aggregate (cents grid: groupBy(key, cents) is map-side combinable;
@@ -359,9 +324,8 @@ def cusum_reflected_chunked(
     in BASELINE.md r9 addendum 3), and WINS here, where no per-key
     window exists to piggyback on.
 
-    Cost: two corpus scans (median counts + the fold) + two broadcast
-    joins + tiny carry windows, all parallel.  Use the plain form when
-    keys >> cores."""
+    Cost: two corpus scans (median counts + the scan) and two broadcast
+    joins, all parallel.  Use the plain form when keys >> cores."""
     guard_internal(df)
     x = _cents(F.col(value_col), scale)
     # per-key lower median, count-based (no per-key corpus window)
@@ -387,76 +351,23 @@ def cusum_reflected_chunked(
     # median — the plain form's per-key windows include that group
     rows = (
         join_boundary(df.withColumn("_xc", x), med, [key_col], [])
-        .withColumn(
-            # sentinel front bucket for null-ts rows — same contract as
-            # the zscore twin above: the plain prefix walk includes
-            # them nulls-first, so the carry join must too
-            "_bkt",
-            F.coalesce(
-                F.floor(F.unix_timestamp(F.col(ts_col)) / bucket_span_s),
-                F.lit(_NULL_TS_BUCKET),
-            ),
-        )
+        .withColumn("_b", bucket_axis(ts_col, bucket_span_s, "s"))
         .withColumn(
             "_d", F.col("_xc") - F.col("_med") - F.lit(int(slack_cents))
         )
     )
-    # 1. order-local scans within each (key, bucket)
-    w_loc = (
-        Window.partitionBy(key_col, "_bkt")
-        .orderBy(ts_col, tiebreak_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
+    out = keyed_scan(
+        rows,
+        [key_col],
+        [ts_col, tiebreak_col],
+        {"_cum": ("sum", "_d"), "_pmin": ("min_sum", "_d")},
+    ).withColumn(
+        "cusum",
+        (F.col("_cum") - F.least(F.lit(0).cast("long"), F.col("_pmin")))
+        .cast("double")
+        / F.lit(float(scale)),
     )
-    local = rows.withColumn("_lc", F.sum("_d").over(w_loc))
-    local = local.withColumn("_lm", F.min("_lc").over(w_loc))
-    # 2. bucket carry table: exclusive prefix sum/min over bucket aggs
-    bstats = local.groupBy(key_col, "_bkt").agg(
-        F.sum("_d").alias("_t"), F.min("_lc").alias("_m")
-    )
-    w_prev = (
-        Window.partitionBy(key_col)
-        .orderBy("_bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_prev_all = Window.partitionBy(key_col).orderBy("_bkt")
-    boff = bstats.withColumn(
-        "_off",
-        F.coalesce(F.sum("_t").over(w_prev), F.lit(0).cast("long")),
-    )
-    carries = boff.select(
-        key_col,
-        "_bkt",
-        "_off",
-        # exclusive running min of (bucket offset + bucket-local min);
-        # NULL for each key's first bucket (no earlier buckets)
-        F.min(F.col("_off") + F.col("_m"))
-        .over(w_prev_all.rowsBetween(Window.unboundedPreceding, -1))
-        .alias("_cmin"),
-    )
-    # 3. row-local combine
-    out = (
-        join_boundary(local, carries, [key_col], ["_bkt"])
-        .withColumn("_cum", F.col("_off") + F.col("_lc"))
-        .withColumn(
-            "_pmin",
-            F.least(
-                F.coalesce(F.col("_cmin"), F.col("_off") + F.col("_lm")),
-                F.col("_off") + F.col("_lm"),
-            ),
-        )
-        .withColumn(
-            "cusum",
-            (
-                F.col("_cum")
-                - F.least(F.lit(0).cast("long"), F.col("_pmin"))
-            ).cast("double")
-            / F.lit(float(scale)),
-        )
-    )
-    return out.drop(
-        "_xc", "_med", "_bkt", "_d", "_lc", "_lm", "_off", "_cmin",
-        "_cum", "_pmin",
-    )
+    return out.drop("_xc", "_med", "_b", "_d", "_cum", "_pmin")
 
 
 def spearman_pairs(

@@ -22,7 +22,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ._chunkjoin import NULL_TS_BUCKET as _NULL_TS_BUCKET
-from ._chunkjoin import guard_internal, join_boundary
+from ._chunkjoin import bucket_axis, guard_internal, join_boundary, keyed_scan
 from .._persist import note_persist as _note_persist
 
 # --- A1/A2: tumbling-window resample ---------------------------------------
@@ -150,67 +150,18 @@ def ffill_chunked(
     grid is decades long (a year of 1-minute slots is ~0.5M rows per
     key; the plain form sorts each key's whole grid on one task).
 
-    The prefix ``last non-null`` decomposes exactly like the as-of
-    twin's fill (:func:`asof_join_chunked`): a bucket-LOCAL fill
-    (window over (key, bucket) — parallel), plus a tiny carry table of
-    each bucket's last non-null value (``max_by`` on the non-null
-    timestamps), whose own exclusive prefix fill yields "latest
-    non-null in any earlier bucket"; a row whose bucket has no earlier
-    non-null takes the carry.  Unlike as-of there is no null-payload
-    subtlety — a null value IS the thing being filled, so the
-    row-local ``coalesce`` is exact by construction.  Null timestamps
-    ride the sentinel front bucket (:func:`_ts_bucket` — the plain
-    window's nulls-first order); null keys are one ordinary group
-    (``_chunkjoin`` null-safe join, the engine-wide convention).
-
-    Cost: one (key, bucket) corpus exchange + the tiny aggregate and
-    its broadcast; worth it once a key's grid exceeds the per-task
-    sort budget (``operators.routing.route("ffill")`` routes on a probe).
-    Ties on (key, ts): same nondeterminism contract as the plain form
-    (the grid shapes this serves are unique per (key, slot))."""
+    The fill is a prefix ``last non-null``: see
+    :func:`~._chunkjoin.keyed_scan`.  Worth its extra exchange once a
+    key's grid exceeds the per-task sort budget
+    (``operators.routing.route("ffill")`` routes on a probe).  Ties on
+    (key, ts): same nondeterminism contract as the plain form (the grid
+    shapes this serves are unique per (key, slot))."""
     guard_internal(df)
     out_name = out_col or value_col
-    rows = df.withColumn("_b", _ts_bucket(ts_col, bucket_span_s))
-    wl = (
-        Window.partitionBy(key_col, "_b")
-        .orderBy(ts_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = rows.withColumn(
-        "_lf", F.last(value_col, ignorenulls=True).over(wl)
-    )
-    # the carry's order key must mirror the window order (ts ascending
-    # NULLS FIRST): a null-ts row's non-null value flows forward in the
-    # plain form, so it must enter the carry too — bare ts as the
-    # max_by key would silently skip it (null ordering keys are
-    # ignored).  Same sentinel the bucket axis uses.
-    ordk = F.coalesce(
-        F.unix_micros(F.col(ts_col).cast("timestamp")),
-        F.lit(_NULL_TS_BUCKET),
-    )
-    bucket_last = rows.groupBy(key_col, "_b").agg(
-        F.max_by(
-            F.col(value_col),
-            F.when(F.col(value_col).isNotNull(), ordk),
-        ).alias("_bl")
-    )
-    wc = (
-        Window.partitionBy(key_col)
-        .orderBy("_b")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carries = bucket_last.select(
-        key_col,
-        "_b",
-        F.last("_bl", ignorenulls=True).over(wc).alias("_carry"),
-    )
-    combined = join_boundary(
-        local, carries, [key_col], ["_b"], how="left"
-    ).withColumn(out_name, F.coalesce(F.col("_lf"), F.col("_carry")))
-    keep = list(df.columns) + (
-        [out_name] if out_name not in df.columns else []
-    )
-    return combined.select(*keep)
+    rows = df.withColumn("_b", bucket_axis(ts_col, bucket_span_s, "s"))
+    return keyed_scan(
+        rows, [key_col], [ts_col], {out_name: ("last", value_col)}
+    ).drop("_b")
 
 
 def resample_ffill(
@@ -332,23 +283,18 @@ def rolling_range_chunked(
     one extra (key, bucket) exchange for the union, nothing broadcast.
     Route with ``operators.routing.route("rolling_range")``."""
     guard_internal(df)
-    if bucket_span_s <= 0 or bucket_span_s < range_s:
+    bkt = bucket_axis(ts_col, bucket_span_s, "s")
+    if bucket_span_s < range_s:
         raise ValueError(
-            f"bucket_span_s ({bucket_span_s}) must be positive and >= "
-            f"range_s ({range_s}): a frame may span at most one boundary"
+            f"bucket_span_s ({bucket_span_s}) must be >= range_s "
+            f"({range_s}): a frame may span at most one boundary"
         )
     r_us = int(range_s) * 1_000_000
     span_us = int(bucket_span_s) * 1_000_000
     ord_ = F.unix_micros(F.col(ts_col).cast("timestamp"))
     rows = (
         df.withColumn("_ord", ord_)
-        .withColumn(
-            "_b",
-            F.coalesce(
-                F.floor(F.col("_ord") / F.lit(span_us)),
-                F.lit(_NULL_TS_BUCKET),
-            ),
-        )
+        .withColumn("_b", bkt)
         .withColumn("_loc", F.lit(1))
     )
     ctx = rows.filter(
@@ -401,22 +347,6 @@ def lead_pairs(
     return out.withColumnRenamed(ts_col, "start_ts")
 
 
-def _ts_bucket(ts_col: str, bucket_span_s: int) -> Column:
-    """(key, time-bucket) split axis shared by the chunked twins: floor
-    of event-time micros over the span, null timestamps parked in a
-    dedicated smallest bucket (see ``_NULL_TS_BUCKET``).  The cast keeps
-    TIMESTAMP_NTZ inputs working (``unix_micros`` rejects NTZ; the
-    engine session runs UTC so the cast is value-preserving, and the
-    bucket id only partitions — values never surface)."""
-    if bucket_span_s <= 0:
-        raise ValueError(f"bucket_span_s must be positive: {bucket_span_s}")
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    span_us = int(bucket_span_s) * 1_000_000
-    return F.coalesce(
-        F.floor(us / F.lit(span_us)), F.lit(_NULL_TS_BUCKET)
-    )
-
-
 def lead_pairs_chunked(
     df: DataFrame,
     bucket_span_s: int,
@@ -448,7 +378,7 @@ def lead_pairs_chunked(
     use the plain form when keys >> cores."""
     guard_internal(df)
     keys = [key_col] if key_col else []
-    rows = df.withColumn("_b", _ts_bucket(ts_col, bucket_span_s))
+    rows = df.withColumn("_b", bucket_axis(ts_col, bucket_span_s, "s"))
     wb = Window.partitionBy(*keys, "_b").orderBy(ts_col)
     local = rows.withColumn("_lead", F.lead(ts_col).over(wb)).withColumn(
         "_has_next", F.lead(F.lit(1)).over(wb)
@@ -530,49 +460,23 @@ def restamp_positional_chunked(
     single-partition global sort — pass ``key_col=None`` here and the
     rank still distributes.
 
-    ``row_number`` is a prefix COUNT — associative, so it decomposes
-    exactly like the zscore/cusum twins (operators/stats.py): a
-    bucket-local rank (window over (key, bucket) — parallel) plus each
-    bucket's row-count offset by exclusive prefix sum over a tiny
-    per-(key, bucket) aggregate (keys x buckets rows), joined back
-    BROADCAST.  The bucket axis is ``floor(event-time)`` — the same
-    axis the plain window sorts — so bucket order IS timestamp order,
-    with null timestamps parked in the smallest bucket to reproduce the
-    plain ascending window's nulls-FIRST placement
-    (``_NULL_TS_BUCKET``).  Ties: same contract as the plain form —
-    pass ``tiebreak_col`` for deterministic stamps; tied rows always
-    share a bucket (equal timestamps bucket together), so the tiebreak
-    never has to reach across tasks.
-
-    Cost: one (key, bucket) corpus exchange + the tiny count aggregate
-    and its broadcast; worth it once the hot key's rows exceed the
-    per-task sort budget (``operators.routing.route("restamp_positional")``
-    routes on a probe)."""
+    ``row_number`` is a prefix count: see
+    :func:`~._chunkjoin.keyed_scan`.  Ties: same contract as the plain
+    form — pass ``tiebreak_col`` for deterministic stamps; tied rows
+    always share a bucket (equal timestamps bucket together), so the
+    tiebreak never has to reach across tasks.  Worth its extra exchange
+    once the hot key's rows exceed the per-task sort budget
+    (``operators.routing.route("restamp_positional")`` routes on a
+    probe)."""
     guard_internal(df)
-    keys = [key_col] if key_col else []
     order = [ts_col] + ([tiebreak_col] if tiebreak_col else [])
-    rows = df.withColumn("_b", _ts_bucket(ts_col, bucket_span_s))
-    wb = Window.partitionBy(*keys, "_b").orderBy(*order)
-    local = rows.withColumn("_rn", F.row_number().over(wb) - 1)
-    counts = rows.groupBy(*keys, "_b").agg(F.count(F.lit(1)).alias("_n"))
-    wk = (
-        Window.partitionBy(*keys)
-        .orderBy("_b")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offs = counts.select(
-        *keys,
-        "_b",
-        F.coalesce(F.sum("_n").over(wk), F.lit(0)).alias("_off"),
-    )
-    # null-safe on the key: a NULL-key group must keep its offset rows
-    # (a plain equi-join would silently drop it — _chunkjoin)
-    out = join_boundary(local, offs, keys, ["_b"]).withColumn(
+    rows = df.withColumn("_b", bucket_axis(ts_col, bucket_span_s, "s"))
+    out = keyed_scan(
+        rows, [key_col] if key_col else [], order, {"_rn": ("sum", F.lit(1))}
+    ).withColumn(
         ts_col,
         F.to_timestamp(F.lit(new_start))
-        + F.make_interval(
-            secs=(F.col("_rn") + F.col("_off")) * step_seconds
-        ),
+        + F.make_interval(secs=(F.col("_rn") - 1) * step_seconds),
     )
     return out.select(*df.columns)
 
@@ -867,78 +771,36 @@ def asof_join_chunked(
     task's sort.  Measured: 7.2x plain skew penalty at sf10_skew's 5M-row
     hot key vs 0.99x for this form (BASELINE.md r11 addendum 4).
 
-    The forward-fill of the match struct is a prefix ``last non-null`` —
-    associative, so it decomposes exactly like the zscore/cusum twins
-    (operators/stats.py): a bucket-LOCAL fill (window over (key, bucket)
-    partitions — parallel), plus a tiny carry table holding each
-    bucket's LAST right row, whose own exclusive prefix fill yields
-    "latest right row in any earlier bucket"; a left row whose bucket
-    saw no preceding right row takes the carry (struct-level coalesce —
-    matched NULL payload values still survive).  ``direction='forward'``
-    negates the time axis so the same ascending machinery serves both
-    directions.  Null-timestamp rows follow the shared contract
-    (:func:`_asof_prepare`) — with null-ts right rows dropped there, the
-    null bucket holds only left rows and can never pollute the carry.
-
-    Cost: the union shuffles once on (key, bucket) (the local window),
-    the carry table is one row per non-empty bucket (window over it is
-    bucket-count-sized), joined back BROADCAST.  One extra corpus
-    exchange vs the plain form's single per-key window — worth it when
-    ``max_key_rows`` exceeds the per-task sort budget (see
-    operators/routing.py ``route("asof_join")``); use the plain form when
-    keys >> cores."""
+    The forward-fill of the match struct is a prefix ``last non-null``
+    over the union of both sides: see :func:`~._chunkjoin.keyed_scan`.
+    A struct built from a right row is non-null even when its payload
+    values are, so matched NULL payloads survive the carry.
+    ``direction='forward'`` negates the time axis, and the bucket axis
+    with it, so the same ascending scan serves both directions.
+    Null-timestamp rows follow the shared contract
+    (:func:`_asof_prepare`): with null-ts right rows dropped there, the
+    sentinel bucket holds only left rows and never feeds a carry.
+    Worth it when ``max_key_rows`` exceeds the per-task sort budget
+    (see operators/routing.py ``route("asof_join")``); use the plain
+    form when keys >> cores."""
     guard_internal(left)
     guard_internal(right)
-    if bucket_span_s <= 0:
-        raise ValueError(f"bucket_span_s must be positive: {bucket_span_s}")
     r, l, left_cols, payload_cols = _asof_prepare(
         left, right, ts_col, key_col, payload_cols, direction
     )
-    # monotone order axis: negate for forward so ascending machinery
-    # (local fill + exclusive bucket prefix) serves both directions
-    sign = 1 if direction == "backward" else -1
+    sign = F.lit(1 if direction == "backward" else -1)
     # cast: unix_micros rejects TIMESTAMP_NTZ (decade fixtures ship it);
     # the session runs UTC so the cast is value-preserving
-    ord_us = F.unix_micros(F.col(ts_col).cast("timestamp")) * F.lit(sign)
-    span_us = int(bucket_span_s) * 1_000_000
+    ord_us = F.unix_micros(F.col(ts_col).cast("timestamp")) * sign
     u = r.unionByName(l).withColumn(
-        "_b", F.floor(ord_us / F.lit(span_us))
-    ).withColumn("_ord", ord_us)
-    # 1. bucket-LOCAL fill — windows over (key, bucket): parallel
-    w_local = (
-        Window.partitionBy(key_col, "_b")
-        .orderBy(F.col("_ord").asc(), F.col("_side").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        "_b", bucket_axis(ts_col, bucket_span_s, "s") * sign
     )
-    filled = u.withColumn("_lm", F.last("_m", ignorenulls=True).over(w_local))
-    # 2. tiny carry table: each bucket's LAST right row (right rows are
-    # unique per (key, ts) — the asof contract — so _ord alone orders
-    # them), then "latest right row in any EARLIER bucket" by exclusive
-    # prefix fill over the bucket-count-sized table
-    bucket_last = u.groupBy(key_col, "_b").agg(
-        F.max_by(
-            F.col("_m"), F.when(F.col("_side") == 0, F.col("_ord"))
-        ).alias("_bl")
-    )
-    w_carry = (
-        Window.partitionBy(key_col)
-        .orderBy("_b")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carries = bucket_last.select(
-        F.col(key_col),
-        F.col("_b"),
-        F.last("_bl", ignorenulls=True).over(w_carry).alias("_carry"),
-    )
-    # 3. row-local combine: local fill, else the bucket's carry
-    # null-safe on the key (r11): plain asof fills a NULL-key partition
-    # like any other, so the twin's cross-bucket carry must reach it too
-    combined = join_boundary(
-        filled.filter(F.col("_side") == 1), carries,
-        [key_col], ["_b"], how="left",
-    ).withColumn("_m", F.coalesce(F.col("_lm"), F.col("_carry")))
+    # right rows first at equal times: the match is inclusive
+    filled = keyed_scan(
+        u, [key_col], [ord_us, "_side"], {"_m": ("last", "_m")}
+    ).filter(F.col("_side") == 1)
     return _asof_finish(
-        combined, ts_col, left_cols, payload_cols, tolerance_seconds
+        filled, ts_col, left_cols, payload_cols, tolerance_seconds
     )
 
 

@@ -137,8 +137,8 @@ def cusum_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cusum_chunked_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The skew-safe variant of ``cusum_drift_flags`` (identical rows,
     same oracle — the rolling_zscore_anomalies_chunked precedent): the
-    reflected walk decomposed into local (key, time-bucket) scans plus
-    a tiny carry table (operators/stats.py cusum_reflected_chunked).
+    reflected walk as a keyed prefix scan (operators/stats.py
+    cusum_reflected_chunked; see ``_chunkjoin.keyed_scan``).
 
     Registered in r11, when the honest-drain re-measurement showed this
     IS the production path at scale: the r9 "plain wins everywhere"

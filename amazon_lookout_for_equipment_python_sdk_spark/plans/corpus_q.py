@@ -413,9 +413,10 @@ def pack_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pack_chunked_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-safe twin of ``pack_documents`` (r12 — tenth routed family,
     closing the serialized-sort-cliff class, r11 verdict #4): identical
-    semantics (same oracle SQL), with the per-source token cumsum
-    decomposed into (source, id-bucket) local windows plus a broadcast
-    offset table (operators/corpus.pack_documents_chunked).  The 40-id
+    semantics (same oracle SQL), with the per-source token cumsum as a
+    keyed prefix scan over (source, id-bucket) tasks
+    (operators/corpus.pack_documents_chunked; see
+    ``_chunkjoin.keyed_scan``).  The 40-id
     bucket span forces many buckets per group at driver SF so the
     boundary machinery is actually exercised.
 

@@ -82,10 +82,10 @@ def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("flagship_ffill_chunked", _FLAGSHIP_SQL)
 def flagship_ffill_chunked_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship spine with the skew-safe FILL (identical rows, same
-    oracle — the chunked-row precedent): ``ffill_chunked`` decomposes
-    the per-key last-non-null into (key, time-bucket) local fills plus
-    a broadcast last-non-null carry table (operators/timeseries.py) —
-    the seventh routed family (operators/routing.py ``route("ffill")``;
+    oracle — the chunked-row precedent): ``ffill_chunked`` runs the
+    per-key last-non-null as a keyed prefix scan
+    (operators/timeseries.py; see ``_chunkjoin.keyed_scan``) — the
+    seventh routed family (operators/routing.py ``route("ffill")``;
     measured crossover in BASELINE.md r11 addendum 6).  The grid the
     fill runs over is span-bounded, not event-bounded — a decade of
     5-min slots is ~1M rows PER KEY regardless of event volume, which
@@ -712,10 +712,9 @@ def positional_restamp_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("positional_restamp_chunked", _RESTAMP_SQL)
 def positional_restamp_chunked_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The skew-safe variant of ``positional_restamp`` (identical rows,
-    same oracle): the per-key row_number decomposed into (key,
-    time-bucket) local ranks plus a tiny exclusive-prefix-count offset
-    table joined back broadcast (operators/timeseries.py
-    restamp_positional_chunked) — the sixth routed family
+    same oracle): the per-key row_number as a keyed prefix count
+    (operators/timeseries.py restamp_positional_chunked; see
+    ``_chunkjoin.keyed_scan``) — the sixth routed family
     (operators/routing.py route("restamp_positional"); measured crossover
     shared with lead_pairs, BASELINE.md r11 addendum 5).  Also the
     distributed answer to the plain form's documented keyless
@@ -806,9 +805,9 @@ def asof_join_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
 def asof_join_purchases_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The skew-safe twin of ``asof_join_purchases`` (identical rows,
     same oracle — the rolling_zscore/cusum chunked-row precedent): the
-    per-key forward fill decomposed into (key, time-bucket) local fills
-    plus a bucket-count-sized carry table
-    (operators/timeseries.py asof_join_chunked, r11).  Registered so the
+    per-key forward fill as a keyed prefix scan
+    (operators/timeseries.py asof_join_chunked, r11; see
+    ``_chunkjoin.keyed_scan``).  Registered so the
     driver certifies the twin's lineage every rotation — it is the form
     ``route("asof_join")`` routes to when one hot key (the heavily-traded
     symbol) would serialize both tables' history onto one task."""

@@ -172,22 +172,23 @@ def main() -> None:
     errors: dict[str, str] = {}
     load_start = [round(x, 2) for x in os.getloadavg()]
     for name in BENCH_QUERIES:
-        # drain GC debt from the previous query's allocations before
-        # timing: measured cuts of 2x+ on the worst min-of-3 outliers
-        # (a full GC landing mid-rep taxes whichever query is running).
-        # Two gc passes: the first drops exchange/broadcast references,
-        # which queues their shuffle files on the ContextCleaner; the
-        # second (after a beat) collects what the cleanup itself freed —
-        # late-list queries otherwise run against dozens of earlier
-        # queries' accumulated shuffle state.
-        spark.catalog.clearCache()
-        spark.sparkContext._jvm.System.gc()
-        time.sleep(0.2)
-        spark.sparkContext._jvm.System.gc()
         try:
-            rep_times = [
-                round(run_one(spark, sf_dir, name), 3) for _ in range(reps)
-            ]
+            rep_times = []
+            for _ in range(reps):
+                # every rep starts from an empty cache, so a query that
+                # persists without releasing is never timed on its own
+                # earlier rep's cache, and with GC debt drained: measured
+                # cuts of 2x+ on the worst min-of-3 outliers (a full GC
+                # landing mid-rep taxes whichever query is running).  Two
+                # gc passes: the first drops exchange/broadcast
+                # references, which queues their shuffle files on the
+                # ContextCleaner; the second (after a beat) collects what
+                # the cleanup itself freed.
+                spark.catalog.clearCache()
+                spark.sparkContext._jvm.System.gc()
+                time.sleep(0.2)
+                spark.sparkContext._jvm.System.gc()
+                rep_times.append(round(run_one(spark, sf_dir, name), 3))
             # the artifact carries BOTH the min (the plan's cost — the
             # 2x-gate signal) and the raw reps: r12's single-number rows
             # were uninterpretable without a side variance addendum when

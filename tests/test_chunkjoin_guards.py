@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from amazon_lookout_for_equipment_python_sdk_spark.operators import (
     _chunkjoin,
+    corpus as cp,
     stats as st,
     timeseries as ts_ops,
 )
@@ -128,3 +129,68 @@ def test_asof_both_forms_reject_side_column(spark, small_df):
     with pytest.raises(ValueError, match="_side"):
         ts_ops.asof_join(small_df.select("k", "ts"), poisoned,
                          ts_col="ts", key_col="k")
+
+
+#: every public ``*_chunked`` twin, and resample_ffill's chunked fill,
+#: called on ``(frame, docs, span)``
+_SPAN_CALLS = {
+    "ffill": lambda f, d, s: ts_ops.ffill_chunked(
+        f, "value", s, ts_col="ts", key_col="k"
+    ),
+    "rolling_range": lambda f, d, s: ts_ops.rolling_range_chunked(
+        f, 0, lambda w: {"n": F.count(F.lit(1)).over(w)}, s,
+        ts_col="ts", key_col="k",
+    ),
+    "lead_pairs": lambda f, d, s: ts_ops.lead_pairs_chunked(
+        f, s, ts_col="ts", key_col="k"
+    ),
+    "restamp_positional": lambda f, d, s: ts_ops.restamp_positional_chunked(
+        f, "2024-01-01", 60, s, ts_col="ts", key_col="k"
+    ),
+    "asof_join": lambda f, d, s: ts_ops.asof_join_chunked(
+        f, f.select("k", "ts", F.col("value").alias("price")), s,
+        ts_col="ts", key_col="k", payload_cols=["price"],
+    ),
+    "rolling_zscore": lambda f, d, s: st.rolling_zscore_chunked(
+        f, 8, s, value_col="value", ts_col="ts", key_col="k",
+        tiebreak_col="eid",
+    ),
+    "cusum_reflected": lambda f, d, s: st.cusum_reflected_chunked(
+        f, s, value_col="value", ts_col="ts", key_col="k",
+        tiebreak_col="eid",
+    ),
+    "ewma": lambda f, d, s: st.ewma_chunked(
+        f, 0.3, s, value_col="value", order_col="ts", key_col="k"
+    ),
+    "pack_documents": lambda f, d, s: cp.pack_documents_chunked(
+        d, bucket_span_ids=s
+    ),
+    "assemble_packs": lambda f, d, s: cp.assemble_packs_chunked(
+        d, bucket_span_ids=s
+    ),
+    "resample_ffill": lambda f, d, s: ts_ops.resample_ffill(
+        f, 600, ts_col="ts", key_col="k", value_col="value", fill_span_s=s
+    ),
+}
+
+
+@pytest.mark.parametrize("span", [0, -1])
+@pytest.mark.parametrize("twin", sorted(_SPAN_CALLS))
+def test_twins_reject_nonpositive_bucket_span(spark, small_df, twin, span):
+    """A bucket span <= 0 is refused while the plan is built: zero
+    divided by zero inside a Spark job, and a negative span reversed the
+    bucket order and returned wrong rows."""
+    frame = small_df.withColumn("eid", F.monotonically_increasing_id())
+    docs = spark.createDataFrame(
+        [(1, "s", "a b"), (2, "s", "c")],
+        "doc_id long, source string, text string",
+    )
+    sc = spark.sparkContext
+    group = f"span-{twin}-{span}"
+    sc.setJobGroup(group, "bucket span check")
+    try:
+        with pytest.raises(ValueError, match="positive"):
+            _SPAN_CALLS[twin](frame, docs, span)
+    finally:
+        sc.setJobGroup(f"{group}-after", "")
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []

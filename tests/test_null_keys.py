@@ -196,6 +196,32 @@ def test_cusum_chunked_null_ts_rows(spark, nullts_df):
     assert got == plain and len(got) == 160
 
 
+def test_cusum_chunked_null_values(spark, nullkey_df):
+    """Null VALUES at the front of a bucket: the running sum carries
+    the earlier buckets' total through them, as the plain window's does
+    (the hand-built twin nulled those rows' cusum)."""
+    nullv = nullkey_df.withColumn(
+        "value", F.when(F.col("eid") % 9 < 3, None).otherwise(F.col("value"))
+    )
+
+    def ckey(df):
+        return {r["eid"]: r["cusum"] for r in df.collect()}
+
+    plain = ckey(
+        st.cusum_reflected(
+            nullv, value_col="value", ts_col="ts", key_col="k",
+            tiebreak_col="eid",
+        )
+    )
+    got = ckey(
+        st.cusum_reflected_chunked(
+            nullv, bucket_span_s=3_600, value_col="value",
+            ts_col="ts", key_col="k", tiebreak_col="eid",
+        )
+    )
+    assert got == plain and len(got) == 160
+
+
 def test_sessionize_skew_null_ts_rows(spark, nullts_df):
     def seqs(df):
         return {r["eid"]: r["session_seq"] for r in df.collect()}

@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import time
 
+import pytest
+
 import __spark_entry__ as entrymod
 
 SF = "/root/testdata/sf0.001"
@@ -547,3 +549,43 @@ def test_kmv_jaccard_union_no_sort_merge_join(spark):
     # shingle/distinct/top-k machinery + the single merge exchange); the
     # old full-outer shape paid 2+ more (one exchange + sort per side).
     assert plan.count("Exchange hashpartitioning") <= 11, plan
+
+
+@pytest.mark.parametrize(
+    "name, jobs, hash_exchanges, broadcasts, file_scans",
+    [
+        # counts of the hand-built two-level scans that keyed_scan
+        # replaced, taken with this test's method at sf0.001 and sf0.01
+        ("cusum_drift_flags_chunked", 8, 8, 3, 4),
+        ("flagship_ffill_chunked", 5, 4, 3, 4),
+        ("rolling_zscore_anomalies_chunked", 7, 6, 2, 3),
+        ("ewma_chart_chunked", 9, 9, 2, 3),
+        ("pack_documents_chunked", 5, 3, 1, 2),
+        ("asof_join_purchases_chunked", 6, 5, 1, 4),
+        ("positional_restamp_chunked", 5, 3, 1, 2),
+    ],
+)
+def test_keyed_scan_twins_plan_no_larger(
+    spark, name, jobs, hash_exchanges, broadcasts, file_scans
+):
+    """The prefix-scan twins on ``_chunkjoin.keyed_scan`` launch no more
+    jobs, and plan no more hash exchanges, broadcast exchanges or file
+    scans, than their hand-built scans did (counted in the initial
+    physical plan; jobs over one noop drain)."""
+    df = entrymod.queries()[name](spark, SF)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    sc = spark.sparkContext
+    group = f"keyed-scan-shape-{name}"
+    sc.setJobGroup(group, "plan-shape census")
+    try:
+        df.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setJobGroup(f"{group}-after", "")
+    got = (
+        len(sc.statusTracker().getJobIdsForGroup(group)),
+        plan.count("Exchange hashpartitioning"),
+        plan.count("BroadcastExchange"),
+        plan.count("FileScan"),
+    )
+    bound = (jobs, hash_exchanges, broadcasts, file_scans)
+    assert all(g <= b for g, b in zip(got, bound)), (got, bound, plan)
