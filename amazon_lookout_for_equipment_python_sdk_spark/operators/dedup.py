@@ -18,8 +18,6 @@ Scale design:
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd  # noqa: F401 — resolves pandas_udf type hints
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -1119,18 +1117,11 @@ def duplicate_spans(
     Output: (id, span_start, span_end) with 0-based [start, end) char
     offsets, one row per maximal duplicated span.
     """
+    # grams is not persisted: both phases re-explode the corpus, which
+    # measured faster than one DISK_ONLY materialization of the gram
+    # stream at sf1 and sf3 (BASELINE.md "duplicate_spans persisted-gram
+    # A/B")
     grams = _char_grams(df, k, text_col, id_col, stride)
-    if os.environ.get("SPARKGRAFT_SPANS_PERSIST_GRAMS", "").strip() == "1":
-        # A/B variant (r16 decade measurement, VERDICT item 3): trade
-        # the second corpus gram explode for ONE DISK_ONLY
-        # materialization of the full gram stream (~40x text bytes:
-        # k-char string + hash + pos per row).  Default OFF — the sf1
-        # and sf3 A/B (BASELINE.md "duplicate_spans persisted-gram A/B")
-        # measured recompute faster at both points; kept as the probe
-        # for re-running the A/B at larger decades.
-        from pyspark import StorageLevel
-
-        grams = grams.persist(StorageLevel.DISK_ONLY).transform(_note_persist)
     # phase 1: frequency on the 64-bit hash — keep positions whose hash
     # is seen 2+ times.  Semi-join against the duplicated-hash set rather
     # than collecting a posting list per gram — a degenerate gram

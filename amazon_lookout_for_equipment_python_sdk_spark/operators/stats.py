@@ -56,7 +56,8 @@ def rolling_zscore(
     retract, so Spark re-aggregates the whole W-row buffer per output
     row — O(W) per row — while a running (UNBOUNDED PRECEDING) frame
     updates incrementally and ``lag`` is O(1).  Measured 1.4–1.5x at
-    W=100 / sf0.1 (tools/bench_zscore_ab.py); the win grows with W.  On
+    W=100 / sf0.1 (alternating min-of-7 A/B, commit c03f83a;
+    OPTIMIZATION_r16.md "rolling_zscore"); the win grows with W.  On
     exact integers the difference is bit-identical to the frame
     aggregate for any null pattern (count/sum over coalesced cents).
 

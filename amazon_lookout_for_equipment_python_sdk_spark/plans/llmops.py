@@ -4,8 +4,6 @@ documents/embeddings testdata)."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -926,10 +924,11 @@ def lang_centroid_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plain load, not load_par (r16): this pipeline is pure codegen
     # (broadcast join + posexplode + partial agg) — no Python boundary,
     # so the load_par fan-out only buys 32 tiny tasks per stage on a
-    # sub-MB scan.  Measured (tools/bench_centroid_ab.py, alternating
-    # min-of-7): 0.672s -> 0.339s at sf0.1; identical at sf1 where the
-    # multi-file scan already has real partitions — which is also the
-    # cluster-scale story (the scan splits past core count by itself).
+    # sub-MB scan.  Measured (alternating min-of-7, commit d0bfdf0;
+    # OPTIMIZATION_r16.md "lang_centroid_components"): 0.672s -> 0.339s
+    # at sf0.1; identical at sf1 where the multi-file scan already has
+    # real partitions — which is also the cluster-scale story (the scan
+    # splits past core count by itself).
     emb = load(spark, sf_dir, "embeddings")
     ex = (
         emb.join(docs, emb["vec_id"] == docs["doc_id"])
@@ -1633,18 +1632,11 @@ _BIGRAM_PERSIST_BYTES = 1 << 20
 
 def _bigram_big(docs) -> bool:
     """Whether the size-adaptive bigram-LM queries take the persisted
-    two-traversal path.  ``SPARKGRAFT_BIGRAM_FORCE_BIG=1`` overrides the
-    scan-size estimate so the path that matters at 100 TB can be
-    plan-audited and shape-pinned on SMALL fixtures (r8 verdict #2:
-    every sf0.001 audit otherwise captures only the recompute path);
-    ``=0`` forces recompute.  Unset -> the measured ~1 MB crossover
-    (see _BIGRAM_PERSIST_BYTES)."""
-    ov = os.environ.get("SPARKGRAFT_BIGRAM_FORCE_BIG", "").strip().lower()
-    if ov:
-        # any truthy spelling forces big; the falsy family ("0", "false",
-        # "no", "off") forces the recompute path (ADVICE r9: =FALSE/off
-        # used to silently force-big)
-        return ov not in ("0", "false", "no", "off")
+    two-traversal path: the scan-size estimate is above
+    ``_BIGRAM_PERSIST_BYTES``, the measured ~1 MB crossover.  Plan
+    audits and shape pins take the big path on SMALL fixtures by setting
+    that constant to -1 in-process (r8 verdict #2: every sf0.001 audit
+    otherwise captures only the recompute path)."""
     est_bytes = int(
         str(docs._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     )

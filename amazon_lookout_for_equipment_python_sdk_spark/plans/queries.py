@@ -66,8 +66,8 @@ _FORCE_VERIFY: dict[str, int] = {
     # earned green r11 rows — cleared (r12).
     # lsh_cosine_topk's r9 `n` param was additive-only and deliberately
     # never forced (registered call passes n=None → identical plan);
-    # same for _bigram_big's r10 env normalization (override-parsing
-    # only — registered bigram queries run with the env unset).
+    # same for the removal of _bigram_big's env override (registered
+    # bigram queries always ran with it unset, so the plan is unchanged).
     #
     # r12's persist-registry refactor (.._persist) appends
     # `.transform(note_persist)` to every library persist site —

@@ -28,6 +28,8 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.readers import read_parquet_ts
+
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE_SQL: dict[str, str] = {}
 
@@ -40,47 +42,19 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """Read a driver testdata table.
 
     ``events.ts`` has shipped as either parquet timestamp[us] (read
-    natively) or timestamp[ns], which Spark has no type for.  Only the
-    nanos layout fails the plain read; on that specific failure, re-read
-    with the legacy nanos-as-long conf and truncate to microseconds with
-    exact integer division (matches DuckDB's ``CAST(ts AS TIMESTAMP)``
-    truncation bit-for-bit; float division would drift by up to 256 ns).
+    natively) or timestamp[ns] (``read_parquet_ts``'s fallback).
     """
-    path = f"{sf_dir}/{table}.parquet"
-    try:
-        df = spark.read.parquet(path)
-        # tz-naive parquet timestamps surface as TIMESTAMP_NTZ under Spark
-        # 4's native reader; several operators (unix_micros in sessionize)
-        # require TIMESTAMP.  Session tz is pinned UTC (session.py), so the
-        # cast is value-preserving and bit-identical to DuckDB's naive
-        # timestamps.  Normalizing here keeps every downstream operator
-        # type-stable across both shipped layouts.
-        for f_ in df.schema.fields:
-            if f_.dataType.typeName() == "timestamp_ntz":
-                df = df.withColumn(f_.name, F.col(f_.name).cast("timestamp"))
-        return df
-    except Exception as e:
-        # Spark >=3.4 raises with the PARQUET_TYPE_ILLEGAL error class;
-        # older releases emit only the plain-text "Illegal Parquet type".
-        nanos = any(
-            s in str(e) for s in ("PARQUET_TYPE_ILLEGAL", "Illegal Parquet type")
-        )
-        if table != "events" or not nanos:
-            raise
-        conf_key = "spark.sql.legacy.parquet.nanosAsLong"
-        prev = spark.conf.get(conf_key, None)
-        spark.conf.set(conf_key, "true")
-        try:
-            df = spark.read.parquet(path)
-        finally:
-            # restore so unrelated reads in the same session fail loudly on
-            # nanos columns instead of silently surfacing bigints (the
-            # schema of `df` is already resolved at this point)
-            if prev is None:
-                spark.conf.unset(conf_key)
-            else:
-                spark.conf.set(conf_key, prev)
-        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    df = read_parquet_ts(spark, [f"{sf_dir}/{table}.parquet"], "ts")
+    # tz-naive parquet timestamps surface as TIMESTAMP_NTZ under Spark
+    # 4's native reader; several operators (unix_micros in sessionize)
+    # require TIMESTAMP.  Session tz is pinned UTC (session.py), so the
+    # cast is value-preserving and bit-identical to DuckDB's naive
+    # timestamps.  Normalizing here keeps every downstream operator
+    # type-stable across both shipped layouts.
+    for f_ in df.schema.fields:
+        if f_.dataType.typeName() == "timestamp_ntz":
+            df = df.withColumn(f_.name, F.col(f_.name).cast("timestamp"))
+    return df
 
 
 def load_par(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:

@@ -41,18 +41,13 @@ from pyspark.sql import SparkSession
 # Set via os.environ BEFORE the JVM launches so the local-mode Python
 # workers (forked from the JVM-spawned daemon) inherit them; the
 # spark.executorEnv.* twins below carry the same values to cluster
-# executors.  Values are env-overridable deployment knobs, not magic:
-# any sane setting beats the default unmap-and-refault churn.
+# executors.  These are defaults only (``os.environ.setdefault``): a
+# value already exported under the variable's own name wins, and any
+# sane setting beats the default unmap-and-refault churn.
 _NATIVE_ALLOC_ENV = {
-    "MALLOC_MMAP_THRESHOLD_": os.environ.get(
-        "SPARK_GRAFT_MALLOC_MMAP_THRESHOLD", str(512 * 1024 * 1024)
-    ),
-    "MALLOC_TRIM_THRESHOLD_": os.environ.get(
-        "SPARK_GRAFT_MALLOC_TRIM_THRESHOLD", str(1024 * 1024 * 1024)
-    ),
-    "ARROW_DEFAULT_MEMORY_POOL": os.environ.get(
-        "SPARK_GRAFT_ARROW_POOL", "system"
-    ),
+    "MALLOC_MMAP_THRESHOLD_": str(512 * 1024 * 1024),
+    "MALLOC_TRIM_THRESHOLD_": str(1024 * 1024 * 1024),
+    "ARROW_DEFAULT_MEMORY_POOL": "system",
 }
 
 

@@ -9,6 +9,7 @@ s3fs code paths (schema.py:62-98, dataset.py:183-240).
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -63,6 +64,47 @@ def read_timeranges_txt(spark: SparkSession, path: str) -> dict[str, str]:
     return dict(zip(keys, rows[:4]))
 
 
+#: error spellings of Spark's refusal to read parquet timestamp[ns]:
+#: the PARQUET_TYPE_ILLEGAL error class (Spark >= 3.4) and the plain
+#: text older releases emit
+_NANOS_ERRORS = ("PARQUET_TYPE_ILLEGAL", "Illegal Parquet type")
+_NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+def read_parquet_ts(
+    spark: SparkSession, paths: list[str], ts_col: str
+) -> DataFrame:
+    """Read parquet whose ``ts_col`` may be timestamp[ns], which Spark has
+    no type for.  Any other layout is one plain read.  Only the nanos
+    failure falls back: a re-read with the legacy nanos-as-long conf,
+    truncated to microseconds with exact integer division (matches
+    DuckDB's ``CAST(ts AS TIMESTAMP)`` bit-for-bit; float division would
+    drift by up to 256 ns).  The conf is restored afterwards, so
+    unrelated reads in the session fail loudly on nanos columns instead
+    of surfacing them as bigint; if the nanos column is not ``ts_col``,
+    the original error is raised."""
+    try:
+        return spark.read.parquet(*paths)
+    except AnalysisException as e:
+        if not any(s in str(e) for s in _NANOS_ERRORS):
+            raise
+        nanos_error = e
+    prev = spark.conf.get(_NANOS_CONF, None)
+    spark.conf.set(_NANOS_CONF, "true")
+    try:
+        df = spark.read.parquet(*paths)
+    finally:
+        if prev is None:
+            spark.conf.unset(_NANOS_CONF)
+        else:
+            spark.conf.set(_NANOS_CONF, prev)
+    if dict(df.dtypes).get(ts_col) != "bigint":
+        raise nanos_error
+    return df.withColumn(
+        ts_col, F.timestamp_micros(F.expr(f"`{ts_col}` div 1000"))
+    )
+
+
 def load_sample_bundle(spark: SparkSession, bundle_dir: str) -> dict:
     """Reference ``load_dataset`` bundle semantics (dataset.py:77-150)
     minus the S3 download: a directory holding ``*.parquet`` (wide
@@ -79,33 +121,9 @@ def load_sample_bundle(spark: SparkSession, bundle_dir: str) -> dict:
     bounds = read_timeranges_txt(
         spark, _os.path.join(bundle_dir, "timeranges.txt")
     )
-    # pandas-written bundles (like the reference's expander.parquet) carry
-    # timestamp[ns], which Spark rejects — fall back to the nanos-as-long
-    # legacy read and truncate to micros with exact integer division.
-    # Only THAT failure triggers the fallback (anything else re-raises as
-    # the real error), and the session conf is restored afterwards so
-    # unrelated reads don't silently surface nanos columns as bigint.
-    try:
-        data = spark.read.parquet(*pq_files)
-    except Exception as e:
-        if "PARQUET_TYPE_ILLEGAL" not in str(e):
-            raise
-        conf_key = "spark.sql.legacy.parquet.nanosAsLong"
-        prev = spark.conf.get(conf_key, None)
-        spark.conf.set(conf_key, "true")
-        try:
-            data = spark.read.parquet(*pq_files)
-            for f_name, f_type in data.dtypes:
-                if f_name == "Timestamp" and f_type == "bigint":
-                    data = data.withColumn(
-                        "Timestamp",
-                        F.timestamp_micros(F.expr("Timestamp div 1000")),
-                    )
-        finally:
-            if prev is None:
-                spark.conf.unset(conf_key)
-            else:
-                spark.conf.set(conf_key, prev)
+    # pandas-written bundles (like the reference's expander.parquet)
+    # carry timestamp[ns]
+    data = read_parquet_ts(spark, pq_files, "Timestamp")
     return {
         "data": data,
         "labels": read_labels_csv(

@@ -102,22 +102,73 @@ BENCH_QUERIES = [
 ]
 
 
-def run_one(spark, sf_dir: str, name: str) -> float:
-    t0 = time.time()
-    df = q.QUERIES[name](spark, sf_dir)
-    # drain through the noop sink: every output COLUMN materializes, no
-    # rows ship to python.  count() — the r1-r5 drain — lets Catalyst
-    # prune any subtree no row-count depends on, silently under-measuring
-    # queries whose expensive work feeds only values (discovered in r6:
-    # semantic_dedup_cells' whole pair kernel vanished under count();
-    # map-only queries lost their projections).  docs/BENCH_AB_r6.md §3
-    # records the count-vs-noop A/B for cross-round comparability.
-    # BASELINE: BENCH_r06 is the first noop-lineage artifact and the
-    # reference point for the 2x regression gate from r7 on — never
-    # compare noop numbers against the r1-r5 count-mode series
-    # (BASELINE.md "r7: bench gate re-baselined").
+def drain(df) -> None:
+    """Materialize every output column of ``df`` through the noop sink;
+    no rows ship to python.  count() — the r1-r5 drain — lets Catalyst
+    prune any subtree no row-count depends on, silently under-measuring
+    queries whose expensive work feeds only values (discovered in r6:
+    semantic_dedup_cells' whole pair kernel vanished under count();
+    map-only queries lost their projections).  docs/BENCH_AB_r6.md §3
+    records the count-vs-noop A/B for cross-round comparability.
+    BASELINE: BENCH_r06 is the first noop-lineage artifact and the
+    reference point for the 2x regression gate from r7 on — never
+    compare noop numbers against the r1-r5 count-mode series
+    (BASELINE.md "r7: bench gate re-baselined")."""
     df.write.format("noop").mode("overwrite").save()
-    return time.time() - t0
+
+
+def run_one(spark, sf_dir: str, name: str) -> None:
+    """Build registered query ``name`` on ``sf_dir`` and drain it."""
+    drain(q.QUERIES[name](spark, sf_dir))
+
+
+def warm_up(spark, names) -> None:
+    """One pass over ``names`` at the smallest SF: JIT, parquet footer
+    caches, and the generated code of every plan that is the same at
+    both scales.  A query that fails here fails again when timed, where
+    its error is recorded."""
+    for name in names:
+        try:
+            run_one(spark, "/root/testdata/sf0.001", name)
+        except Exception:
+            pass
+
+
+def measure(
+    spark, label: str, action, reps: int, *, keep_cache: bool = False
+) -> list[float]:
+    """The one timed-rep loop of every harness: run ``action()`` ``reps``
+    times and return each rep's wall seconds.
+
+    Every rep starts from an empty cache, so an action that persists
+    without releasing is never timed on its own earlier rep's cache
+    (``keep_cache=True`` is for callers that persist their fixtures
+    before timing, where a clearCache would pull fixture synthesis into
+    the timed region), and with GC debt drained: measured cuts of 2x+
+    on the worst min-of-3 outliers (a full GC landing mid-rep taxes
+    whichever action is running).  Two gc passes: the first drops
+    exchange/broadcast references, which queues their shuffle files on
+    the ContextCleaner; the second (after a beat) collects what the
+    cleanup itself freed.  Each rep's Spark jobs carry ``label`` as
+    their job description; the caller's description is restored after.
+    """
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    times = []
+    try:
+        for _ in range(reps):
+            if not keep_cache:
+                spark.catalog.clearCache()
+            sc._jvm.System.gc()
+            time.sleep(0.2)
+            sc._jvm.System.gc()
+            t0 = time.time()
+            action()
+            times.append(round(time.time() - t0, 3))
+    finally:
+        sc.setJobDescription(prev)
+    return times
 
 
 def _mem_total_mb() -> int | None:
@@ -154,13 +205,7 @@ def main() -> None:
     # third run read start=5.6 purely from its own warmup)
     load_prelaunch = [round(x, 2) for x in os.getloadavg()]
     spark = get_spark("bench")
-    # warm-up at the smallest SF (JIT, parquet footer caches, and the
-    # generated code of every plan that is the same at both scales)
-    for name in BENCH_QUERIES:
-        try:
-            run_one(spark, "/root/testdata/sf0.001", name)
-        except Exception:
-            pass
+    warm_up(spark, BENCH_QUERIES)
     # best-of-N: single runs are JIT/GC-noisy (observed 3-4x outliers that
     # can hit BOTH of 2 consecutive reps when a full GC lands mid-query);
     # min over 3 reps measures the plan, not the pauses
@@ -173,22 +218,9 @@ def main() -> None:
     load_start = [round(x, 2) for x in os.getloadavg()]
     for name in BENCH_QUERIES:
         try:
-            rep_times = []
-            for _ in range(reps):
-                # every rep starts from an empty cache, so a query that
-                # persists without releasing is never timed on its own
-                # earlier rep's cache, and with GC debt drained: measured
-                # cuts of 2x+ on the worst min-of-3 outliers (a full GC
-                # landing mid-rep taxes whichever query is running).  Two
-                # gc passes: the first drops exchange/broadcast
-                # references, which queues their shuffle files on the
-                # ContextCleaner; the second (after a beat) collects what
-                # the cleanup itself freed.
-                spark.catalog.clearCache()
-                spark.sparkContext._jvm.System.gc()
-                time.sleep(0.2)
-                spark.sparkContext._jvm.System.gc()
-                rep_times.append(round(run_one(spark, sf_dir, name), 3))
+            rep_times = measure(
+                spark, name, lambda: run_one(spark, sf_dir, name), reps
+            )
             # the artifact carries BOTH the min (the plan's cost — the
             # 2x-gate signal) and the raw reps: r12's single-number rows
             # were uninterpretable without a side variance addendum when

@@ -17,8 +17,7 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parent.parent
 HARNESSES = [
     "bench.py",
-    "tools/bench_sf1.py",
-    "tools/bench_skew.py",
+    "tools/ab.py",
     "tools/ab_twin.py",
     "tools/bench_stream_skew.py",
     "tools/bench_warc_shards.py",
@@ -45,6 +44,51 @@ def test_no_count_drain_in_timed_loops():
         "(the r9 cusum artifact, BASELINE.md r11 addendum).  Drain "
         "through df.write.format('noop') instead:\n" + "\n".join(offenders)
     )
+
+
+def test_one_rep_loop_across_harnesses():
+    """``bench.measure`` is the only timed-rep loop: every copy of the
+    protocol drifted on its own (the per-rep cache clear was fixed in
+    bench.py alone), so no other harness may run its own GC between
+    reps."""
+    with_gc = [
+        rel for rel in HARNESSES if "System.gc" in (ROOT / rel).read_text()
+    ]
+    assert with_gc == ["bench.py"], (
+        "a harness with its own rep loop — time through bench.measure"
+    )
+
+
+def test_measure_labels_each_rep_jobs(spark, sf_dir):
+    """Every job a measured rep launches carries the rep's label as its
+    job description, and the caller's description comes back after."""
+    from bench import measure, run_one
+
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+
+    def jobs():
+        # the status store fills from the listener bus, asynchronously
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        js = store.jobsList(None)
+        return {js.apply(i).jobId(): js.apply(i) for i in range(js.size())}
+
+    before = jobs()
+    sc.setJobDescription("outer")
+    try:
+        reps = measure(
+            spark, "label-probe", lambda: run_one(spark, sf_dir, "resample_mean"), 2
+        )
+        assert sc.getLocalProperty("spark.job.description") == "outer"
+    finally:
+        sc.setJobDescription(None)
+    assert len(reps) == 2
+    descs = [
+        j.description().get() if j.description().isDefined() else None
+        for i, j in jobs().items()
+        if i not in before
+    ]
+    assert descs and set(descs) == {"label-probe"}, descs
 
 
 def test_drain_audit_flags_known_elidable_query(spark):

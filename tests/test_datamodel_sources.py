@@ -116,6 +116,54 @@ def test_load_sample_bundle(spark, tmp_path):
     assert d["evaluation_end"] == "2024-01-01 00:05:00"
 
 
+def test_timestamp_ns_parquet_read_by_both_callers(spark, tmp_path):
+    """timestamp[ns] parquet (pandas' default) has no Spark type: the
+    registry's ``load`` and ``load_sample_bundle`` both fall back to the
+    legacy nanos-as-long read, truncate to microseconds, and leave the
+    session's nanos conf as they found it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from amazon_lookout_for_equipment_python_sdk_spark.plans.registry import (
+        load,
+    )
+
+    ns = [1_704_067_200_000_000_999, 1_704_067_260_123_456_789]
+    table = pa.table(
+        {"ts": pa.array(ns, pa.timestamp("ns")), "value": [1.0, 2.0]}
+    )
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    pq.write_table(table, sf / "events.parquet")
+    bundle = tmp_path / "bundle"
+    bundle.mkdir()
+    pq.write_table(
+        table.rename_columns(["Timestamp", "p1"]), bundle / "expander.parquet"
+    )
+    (bundle / "labels.csv").write_text("2024-01-01 00:00:00,2024-01-01 00:01:00\n")
+    (bundle / "tags_description.csv").write_text("Tag,Subsystem\np1,pump\n")
+    (bundle / "timeranges.txt").write_text("a\nb\nc\nd\n")
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    want = sorted(t // 1000 for t in ns)
+    for conf in ("false", None):
+        if conf is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, conf)
+        before = spark.conf.get(key, None)
+        events = load(spark, str(sf), "events")
+        data = load_sample_bundle(spark, str(bundle))["data"]
+        for df, col in ((events, "ts"), (data, "Timestamp")):
+            assert dict(df.dtypes)[col] == "timestamp"
+            got = sorted(
+                r[0] for r in df.select(F.unix_micros(col)).collect()
+            )
+            assert got == want, (col, got)
+        assert spark.conf.get(key, None) == before
+    spark.conf.unset(key)
+
+
 def test_component_csv_roundtrip_read(spark, tmp_path):
     out = str(tmp_path / "train_data")
     long_df = _long_df(spark)

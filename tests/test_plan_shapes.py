@@ -334,10 +334,10 @@ def test_bigram_queries_forced_big_path_scan_budget(spark, monkeypatch):
     above-crossover shape of the size-adaptive bigram-LM queries — was
     audit-pinned only at the OPERATOR level; the registered queries'
     big path had no pin because every sf0.001 audit sits below the 2 GiB
-    crossover.  SPARKGRAFT_BIGRAM_FORCE_BIG=1 forces the big path on the
-    small fixture; pinned budget (unique documents traversals — cached
-    relations reprint their child FileScan with identical text, genuine
-    recomputes carry fresh expression ids):
+    crossover.  Setting ``llmops._BIGRAM_PERSIST_BYTES`` to -1 forces the
+    big path on the small fixture; pinned budget (unique documents
+    traversals — cached relations reprint their child FileScan with
+    identical text, genuine recomputes carry fresh expression ids):
 
     - bigram_lm_perplexity: <= 2 (LM build feeding the cache + scoring)
     - perplexity_prune_counts: <= 3 (scorer's two + the source join;
@@ -346,9 +346,10 @@ def test_bigram_queries_forced_big_path_scan_budget(spark, monkeypatch):
       traversal — the naive shape measured 5 unique corpus scans)
 
     Both must show the LM cache (InMemoryTableScan).  Values stay
-    bit-identical to the recompute path — tools/check.py under the same
-    env var is the value-level twin of this shape pin."""
-    monkeypatch.setenv("SPARKGRAFT_BIGRAM_FORCE_BIG", "1")
+    bit-identical to the recompute path."""
+    from amazon_lookout_for_equipment_python_sdk_spark.plans import llmops
+
+    monkeypatch.setattr(llmops, "_BIGRAM_PERSIST_BYTES", -1)
     try:
         for name, budget in (
             ("bigram_lm_perplexity", 2),

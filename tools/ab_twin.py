@@ -10,9 +10,9 @@ families: tools/gen_cusum_xl.py (one hot event_type + two 1/5-sized
 cold keys, events schema) and tools/gen_pack_xl.py (one hot source
 group, documents schema).
 
-Protocol: BASELINE.md decade protocol — clearCache + double GC between
-reps, min-of-N, noop-sink drain (materializes every output column;
-never a row-count drain — the r11 elision lesson,
+Protocol: ``bench.measure`` (clearCache + double GC before every rep,
+min-of-N) over ``bench.drain`` (the noop sink: materializes every
+output column; never a row-count drain — the r11 elision lesson,
 tests/test_bench_drains.py):
 
     python tools/gen_cusum_xl.py && python tools/ab_twin.py ffill
@@ -30,12 +30,12 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench import drain, measure  # noqa: E402
 from amazon_lookout_for_equipment_python_sdk_spark.operators import (  # noqa: E402
     routing as rt,
 )
@@ -135,19 +135,6 @@ def main() -> None:
         "twin": lambda: fam.twin(**{**a, fam.bucket: arg}),
     }
 
-    def bench(make):
-        ts = []
-        for _ in range(opts.reps):
-            spark.catalog.clearCache()
-            spark.sparkContext._jvm.System.gc()
-            time.sleep(0.2)
-            spark.sparkContext._jvm.System.gc()
-            t0 = time.time()
-            make().write.format("noop").mode("overwrite").save()
-            ts.append(time.time() - t0)
-            print(f"  rep {ts[-1]:.1f}s", file=sys.stderr)
-        return round(min(ts), 2)
-
     out = {
         "family": opts.family,
         "fixture": name,
@@ -156,8 +143,11 @@ def main() -> None:
         fam.bucket: arg,
     }
     for variant, make in variants.items():
-        print(f"{variant}...", file=sys.stderr)
-        out[variant] = bench(make)
+        reps = measure(
+            spark, f"{opts.family} {variant}", lambda: drain(make()), opts.reps
+        )
+        print(f"{variant}: {reps}", file=sys.stderr)
+        out[variant] = min(reps)
     out["twin_over_plain"] = round(out["twin"] / out["plain"], 3)
     print(json.dumps(out))
 

@@ -3,9 +3,12 @@ URL canonicalization (row-local Arrow kernel), the robots.txt gate
 (rule-table join + distinct-probe verdicts), and sitemap parsing
 (one Arrow kernel over (host, blob) rows).
 
-Protocol: BASELINE.md decade protocol — clearCache + double GC between
-reps, min-of-N (SPARK_GRAFT_CRAWL_REPS, default 2), noop-sink drain of
-the full output (tests/test_bench_drains.py pins this harness).
+Protocol: ``bench.measure`` with ``keep_cache=True`` (a clearCache
+would unpersist the pre-materialized fixtures and pull their synthesis
+back inside the timed region) — double GC before every rep, min-of-N
+(SPARK_GRAFT_CRAWL_REPS, default 2) — over ``bench.drain``, the
+noop-sink drain of the full output (tests/test_bench_drains.py pins
+this harness).
 Fixtures are synthesized deterministically in-memory at two scales
 (default 100k and 1M URL rows over 1k hosts; sitemap corpus 1k/10k
 files of 200 locs each) — decade ratio = big/small per operator.
@@ -20,12 +23,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench import drain, measure  # noqa: E402
 from amazon_lookout_for_equipment_python_sdk_spark.operators import (  # noqa: E402
     frontier as FR,
 )
@@ -44,15 +47,6 @@ REPS = int(os.environ.get("SPARK_GRAFT_CRAWL_REPS", "2"))
 SMALL = int(os.environ.get("SPARK_GRAFT_CRAWL_SMALL", "100000"))
 BIG = int(os.environ.get("SPARK_GRAFT_CRAWL_BIG", "1000000"))
 N_HOSTS = 1000
-
-
-def _gc(spark) -> None:
-    # NO clearCache here (unlike bench.py): it would unpersist the
-    # pre-materialized fixtures and pull their synthesis back inside
-    # the timed region
-    spark.sparkContext._jvm.System.gc()
-    time.sleep(0.2)
-    spark.sparkContext._jvm.System.gc()
 
 
 def _urls(spark, n: int):
@@ -110,21 +104,14 @@ def _sitemap_corpus(spark, n_files: int, locs_per_file: int = 200):
     )
 
 
-def _time(spark, build) -> float:
-    best = None
-    for _ in range(REPS):
-        _gc(spark)
-        t0 = time.time()
-        build().write.format("noop").mode("overwrite").save()
-        el = time.time() - t0
-        best = el if best is None else min(best, el)
-    return round(best, 3)
+def _time(spark, label: str, build) -> float:
+    return min(measure(spark, label, lambda: drain(build()), REPS, keep_cache=True))
 
 
 def main() -> None:
     spark = get_spark("bench_crawl_ops")
     robots = _robots_corpus(spark).persist()
-    robots.write.format("noop").mode("overwrite").save()
+    drain(robots)
     out = {}
     # fixtures PERSIST and drain before any timing — synthesis must not
     # ride inside the measured region
@@ -133,7 +120,7 @@ def main() -> None:
         u = _urls(spark, n).persist()
         sm = _sitemap_corpus(spark, max(n // 100, 1)).persist()
         for df in (u, sm):
-            df.write.format("noop").mode("overwrite").save()
+            drain(df)
         fixtures[n] = (u, sm)
     # per-host rate table (r14): half the hosts carry an override —
     # the broadcast join the rated frontier adds over the plain one
@@ -149,7 +136,7 @@ def main() -> None:
         )
         .persist()
     )
-    rates.write.format("noop").mode("overwrite").save()
+    drain(rates)
     cases = {
         "canonicalize_url": lambda u, sm: U.canonicalize_url(u),
         "robots_filter": lambda u, sm: R.robots_filter(u, robots),
@@ -160,8 +147,8 @@ def main() -> None:
         ),
     }
     for name, build in cases.items():
-        small = _time(spark, lambda: build(*fixtures[SMALL]))
-        big = _time(spark, lambda: build(*fixtures[BIG]))
+        small = _time(spark, f"{name} {SMALL}", lambda: build(*fixtures[SMALL]))
+        big = _time(spark, f"{name} {BIG}", lambda: build(*fixtures[BIG]))
         out[name] = {
             "small": small,
             "big": big,

@@ -2,10 +2,12 @@
 extraction (row-local Arrow kernel), the host-graph fold (one count
 aggregate), and join-based PageRank (5 damped iterations).
 
-Protocol: BASELINE.md decade protocol — double GC between reps,
-min-of-N (SPARK_GRAFT_CRAWL_REPS, default 2), noop-sink drain of the
-full output (tests/test_bench_drains.py pins this harness).  Fixtures
-synthesize deterministically in-memory at two scales:
+Protocol: ``bench.measure`` with ``keep_cache=True`` (the fixtures are
+persisted before timing) — double GC before every rep, min-of-N
+(SPARK_GRAFT_CRAWL_REPS, default 2) — over ``bench.drain``, the
+noop-sink drain of the full output (tests/test_bench_drains.py pins
+this harness).  Fixtures synthesize deterministically in-memory at two
+scales:
 
 - page corpus (3 anchors each, 1k hosts): 100k and 1M pages —
   html_extract_links and the extract→host_graph chain;
@@ -22,12 +24,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench import drain, measure  # noqa: E402
 from amazon_lookout_for_equipment_python_sdk_spark.operators import (  # noqa: E402
     linkgraph as LG,
 )
@@ -38,12 +40,6 @@ SMALL = int(os.environ.get("SPARK_GRAFT_CRAWL_SMALL", "100000"))
 BIG = int(os.environ.get("SPARK_GRAFT_CRAWL_BIG", "1000000"))
 N_HOSTS = 1000
 ITERS = 5
-
-
-def _gc(spark) -> None:
-    spark.sparkContext._jvm.System.gc()
-    time.sleep(0.2)
-    spark.sparkContext._jvm.System.gc()
 
 
 def _pages(spark, n: int):
@@ -90,15 +86,8 @@ def _edges(spark, n_hosts: int, deg: int = 10):
     )
 
 
-def _time(spark, build) -> float:
-    best = None
-    for _ in range(REPS):
-        _gc(spark)
-        t0 = time.time()
-        build().write.format("noop").mode("overwrite").save()
-        el = time.time() - t0
-        best = el if best is None else min(best, el)
-    return round(best, 3)
+def _time(spark, label: str, build) -> float:
+    return min(measure(spark, label, lambda: drain(build()), REPS, keep_cache=True))
 
 
 def main() -> None:
@@ -108,7 +97,7 @@ def main() -> None:
         p = _pages(spark, n).persist()
         e = _edges(spark, max(n // 10, 1)).persist()
         for df in (p, e):
-            df.write.format("noop").mode("overwrite").save()
+            drain(df)
         fixtures[n] = (p, e)
 
     def chain(p):
@@ -134,8 +123,8 @@ def main() -> None:
     }
     out = {}
     for name, build in cases.items():
-        small = _time(spark, lambda: build(*fixtures[SMALL]))
-        big = _time(spark, lambda: build(*fixtures[BIG]))
+        small = _time(spark, f"{name} {SMALL}", lambda: build(*fixtures[SMALL]))
+        big = _time(spark, f"{name} {BIG}", lambda: build(*fixtures[BIG]))
         out[name] = {
             "small": small,
             "big": big,

@@ -22,8 +22,8 @@ to a noop-ish parquet sink in TMPDIR (fresh checkpoint per rep).
 Metrics per run: drain wall-clock, max ``numRowsTotal`` and max
 ``memoryUsedBytes`` across the state operator's progress events.
 
-Protocol: min-of-REPS (SPARK_GRAFT_STREAM_SKEW_REPS, default 2),
-clearCache + double GC between reps (BASELINE.md decade protocol).
+Protocol: ``bench.measure`` — min-of-REPS (SPARK_GRAFT_STREAM_SKEW_REPS,
+default 2), clearCache + double GC before every rep.
 """
 
 from __future__ import annotations
@@ -34,12 +34,12 @@ import os
 import shutil
 import sys
 import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench import measure  # noqa: E402
 from amazon_lookout_for_equipment_python_sdk_spark.session import get_spark  # noqa: E402
 from amazon_lookout_for_equipment_python_sdk_spark.streaming.stateful import (  # noqa: E402
     sessionize_stream,
@@ -65,15 +65,19 @@ OPERATORS = {
 }
 
 
-def _drain(spark, op_name, sf_dir):
-    """One replay: fresh checkpoint/output, ~N_BATCHES micro-batches,
-    availableNow; returns (wall_s, max_state_rows, max_state_bytes)."""
+def _replay(spark, op_name, sf_dir):
+    """REPS timed replays, each from a fresh checkpoint and output in
+    ~N_BATCHES availableNow micro-batches; returns (each rep's wall_s,
+    max_state_rows, max_state_bytes)."""
     src = os.path.join(sf_dir, "events.parquet")
     n_files = len(glob.glob(os.path.join(src, "*.parquet")))
     per_trigger = max(1, -(-n_files // N_BATCHES))
     schema = spark.read.parquet(src).schema
     work = tempfile.mkdtemp(prefix=f"sparkgraft_stream_skew_{op_name}_")
-    try:
+    done = []
+
+    def replay():
+        rep = os.path.join(work, str(len(done)))
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", per_trigger)
@@ -82,25 +86,28 @@ def _drain(spark, op_name, sf_dir):
         # decade fixtures ship ts as TIMESTAMP_NTZ; watermarks need
         # TIMESTAMP and the session runs UTC so the cast is value-safe
         stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-        t0 = time.time()
         q = (
             OPERATORS[op_name](stream)
             .writeStream.format("parquet")
-            .option("path", os.path.join(work, "out"))
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
+            .option("path", os.path.join(rep, "out"))
+            .option("checkpointLocation", os.path.join(rep, "ckpt"))
             .trigger(availableNow=True)
             .start()
         )
         q.awaitTermination()
-        wall = time.time() - t0
-        rows = mem = 0
-        for p in q.recentProgress:
-            for so in p.get("stateOperators", []):
-                rows = max(rows, so.get("numRowsTotal", 0) or 0)
-                mem = max(mem, so.get("memoryUsedBytes", 0) or 0)
-        return wall, rows, mem
+        done.append(q)
+
+    try:
+        walls = measure(spark, f"{op_name} {sf_dir}", replay, REPS)
     finally:
         shutil.rmtree(work, ignore_errors=True)
+    states = [
+        so for q in done for p in q.recentProgress
+        for so in p.get("stateOperators", [])
+    ]
+    rows = max((so.get("numRowsTotal", 0) or 0 for so in states), default=0)
+    mem = max((so.get("memoryUsedBytes", 0) or 0 for so in states), default=0)
+    return walls, rows, mem
 
 
 def main() -> None:
@@ -110,20 +117,12 @@ def main() -> None:
     out = {}
     for op in OPERATORS:
         for label, sf_dir in (("uniform", UNIFORM), ("skewed", SKEWED)):
-            walls, rows, mem = [], 0, 0
-            for _ in range(REPS):
-                spark.catalog.clearCache()
-                spark.sparkContext._jvm.System.gc()
-                time.sleep(0.2)
-                spark.sparkContext._jvm.System.gc()
-                w, r, m = _drain(spark, op, sf_dir)
-                walls.append(w)
-                rows, mem = max(rows, r), max(mem, m)
-                print(
-                    f"{op} {label}: rep {w:.1f}s state_rows={r} "
-                    f"state_bytes={m}",
-                    file=sys.stderr,
-                )
+            walls, rows, mem = _replay(spark, op, sf_dir)
+            print(
+                f"{op} {label}: reps {walls} state_rows={rows} "
+                f"state_bytes={mem}",
+                file=sys.stderr,
+            )
             out[f"{op}:{label}"] = {
                 "wall_s": round(min(walls), 2),
                 "max_state_rows": rows,

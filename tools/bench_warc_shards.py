@@ -6,11 +6,12 @@ writes it at several shard counts, and times the read+rollup at each —
 plus one pass against a deliberately CORRUPT shard to price the
 tolerant-resync path.
 
-Protocol: BASELINE.md decade protocol — clearCache + double GC between
-reps, min-of-N (SPARK_GRAFT_WARC_REPS, default 2), un-prunable
-noop-sink drain of the full per-lang rollup (count + char mass + hash
-sum — the whole decode lineage must evaluate;
-tests/test_bench_drains.py pins this harness).
+Protocol: ``bench.measure`` — clearCache + double GC before every rep,
+min-of-N (SPARK_GRAFT_WARC_REPS, default 2) — over ``bench.drain``, the
+un-prunable noop-sink drain of the full per-lang rollup (count + char
+mass + hash sum — the whole decode lineage must evaluate;
+tests/test_bench_drains.py pins this harness).  Each write rep writes a
+fresh directory; the reads time the last one.
 
     python tools/bench_warc_shards.py
     SPARK_GRAFT_WARC_REPL=20 SPARK_GRAFT_WARC_SHARDS=8,64 \
@@ -27,12 +28,12 @@ import json
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench import drain, measure  # noqa: E402
 from amazon_lookout_for_equipment_python_sdk_spark.session import get_spark  # noqa: E402
 from amazon_lookout_for_equipment_python_sdk_spark.sources.warc import (  # noqa: E402
     read_warc,
@@ -51,13 +52,6 @@ LOCAL = os.path.join(
     ".localdata",
     "warc_shards",
 )
-
-
-def _gc(spark) -> None:
-    spark.catalog.clearCache()
-    spark.sparkContext._jvm.System.gc()
-    time.sleep(0.2)
-    spark.sparkContext._jvm.System.gc()
 
 
 def _read_rollup(spark, shard_dir: str):
@@ -99,40 +93,40 @@ def main() -> None:
         docs.agg(F.count(F.lit(1)).alias("n")).collect()[0]["n"] * REPL
     )
     out: dict = {"rows": n_rows, "sf_dir": SF_DIR, "shard_counts": {}}
+    shutil.rmtree(LOCAL, ignore_errors=True)
 
     for n_shards in SHARDS:
-        shard_dir = os.path.join(LOCAL, f"s{n_shards}")
-        w_times, r_times = [], []
-        for _ in range(REPS):
-            shutil.rmtree(shard_dir, ignore_errors=True)
-            _gc(spark)
-            t0 = time.time()
-            write_warc(corpus, shard_dir, n_shards=n_shards)
-            w_times.append(time.time() - t0)
-            _gc(spark)
-            t0 = time.time()
-            _read_rollup(spark, shard_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            r_times.append(time.time() - t0)
+        written = []
+
+        def write():
+            written.append(os.path.join(LOCAL, f"s{n_shards}_{len(written)}"))
+            write_warc(corpus, written[-1], n_shards=n_shards)
+
+        w_times = measure(spark, f"warc write {n_shards}", write, REPS)
+        r_times = measure(
+            spark,
+            f"warc read {n_shards}",
+            lambda: drain(_read_rollup(spark, written[-1])),
+            REPS,
+        )
         out["shard_counts"][str(n_shards)] = {
-            "write": round(min(w_times), 3),
-            "read": round(min(r_times), 3),
+            "write": min(w_times),
+            "read": min(r_times),
         }
 
     # corrupt one shard of the LAST layout mid-file: the resync contract
     # says one garbage run costs error rows, not the shard (or the run)
-    shard_dir = os.path.join(LOCAL, f"s{SHARDS[-1]}")
+    shard_dir = written[-1]
     victim = os.path.join(shard_dir, "shard-00000.warc.gz")
     blob = open(victim, "rb").read()
     cut = len(blob) // 2
     open(victim, "wb").write(blob[:cut] + b"GARBAGE" * 64 + blob[cut:])
-    _gc(spark)
-    t0 = time.time()
-    _read_rollup(spark, shard_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    corrupt_read = time.time() - t0
+    (corrupt_read,) = measure(
+        spark,
+        "warc read corrupt",
+        lambda: drain(_read_rollup(spark, shard_dir)),
+        1,
+    )
     # correctness side-check (untimed): the corruption costs error rows,
     # never the shard or the run
     stats = {

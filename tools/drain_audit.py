@@ -6,7 +6,8 @@ row-count) and then ELIDE the now-unused upstream operators — the r9
 cusum A/B's plain side compiled to a bare ``distinct event_type`` with
 the whole window pipeline gone, which is why "plain won everywhere".
 bench.py was already switched to the noop sink in r6 for exactly this
-class; tools/bench_skew.py and tools/bench_sf1.py still counted.
+class; the sf1 and skew harnesses (now tools/ab.py's ``sf1`` and
+``skew`` sets) still counted.
 
 This tool makes the hazard visible per query: for each name it compares
 the optimized plan of the query AS WRITTEN (what a noop write executes)
@@ -15,7 +16,7 @@ old drain executed), counting load-bearing operator kinds.  Any kind
 whose count DROPS under the count() drain was (partially) elided and
 every published number measured through that drain under-measured it.
 
-    python tools/drain_audit.py                 # the two harnesses' lists
+    python tools/drain_audit.py                 # the harnesses' lists
     python tools/drain_audit.py name1 name2     # specific queries
 """
 

@@ -1,6 +1,6 @@
 """Generate the local sf1 bench fixture (~10x sf0.1) under
 .localdata/sf1/ — NOT driver data, NOT an oracle input; used only by
-tools/bench_sf1.py to measure scaling factors of the most expensive
+``tools/ab.py sf1`` to measure scaling factors of the most expensive
 queries (BASELINE.md section "sf1 self-bench").
 
 Construction: 10 id-shifted copies of the sf0.1 tables with per-copy

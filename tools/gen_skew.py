@@ -3,7 +3,7 @@ uniform sf1 fixture (run tools/gen_sf1.py first) — same row counts and
 byte volume, but with the HOT KEYS a real crawl / event stream has and
 the id-shifted decade fixtures are uniform-by-construction unable to
 produce (r8 verdict #3).  NOT driver data, NOT an oracle input; used
-only by tools/bench_skew.py to measure the skew-safe paths against
+only by ``tools/ab.py skew`` to measure the skew-safe paths against
 their plain twins under genuine key skew.
 
 - events: ~50% of rows (xxhash64 of event_id, deterministic) collapse

@@ -17,6 +17,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from amazon_lookout_for_equipment_python_sdk_spark.session import get_spark
+from amazon_lookout_for_equipment_python_sdk_spark.plans import llmops
 from amazon_lookout_for_equipment_python_sdk_spark.plans import queries as q
 
 #: the plans worth reading: heaviest + one representative per family
@@ -61,7 +62,7 @@ AUDIT_QUERIES = [
 
 #: queries whose plan is SIZE-ADAPTIVE: the sf0.001 audit captures only
 #: the below-crossover recompute path, so `--big` re-audits them with
-#: SPARKGRAFT_BIGRAM_FORCE_BIG=1 into docs/PLANS_LARGE.md — the
+#: llmops._BIGRAM_PERSIST_BYTES = -1 into docs/PLANS_LARGE.md — the
 #: persisted shape that actually runs at 100 TB (r8 verdict #2)
 BIG_PATH_QUERIES = [
     "bigram_lm_perplexity",
@@ -77,7 +78,7 @@ def main() -> None:
     names = argv or (BIG_PATH_QUERIES if big else AUDIT_QUERIES)
     sf_dir = os.environ.get("SF_DIR", "/root/testdata/sf0.001")
     if big:
-        os.environ["SPARKGRAFT_BIGRAM_FORCE_BIG"] = "1"
+        llmops._BIGRAM_PERSIST_BYTES = -1
     spark = get_spark("plan-audit", cpus=4)
     out_path = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -95,9 +96,10 @@ def main() -> None:
         header = (
             "# Physical-plan audit — ABOVE-crossover (big) paths\n\n"
             "Generated by `python tools/plan_audit.py --big` "
-            "(SPARKGRAFT_BIGRAM_FORCE_BIG=1 at sf0.001): the "
+            "(`llmops._BIGRAM_PERSIST_BYTES` set to -1 in-process, "
+            "at sf0.001): the "
             "persisted two-traversal shape the size-adaptive "
-            "bigram-LM queries take above the 2 GiB scan crossover "
+            "bigram-LM queries take above the ~1 MB scan crossover "
             "— the path that matters at 100 TB, which the default "
             "PLANS.md audit (below the crossover) cannot show.  "
             "Scan budgets pinned in tests/test_plan_shapes.py::"
