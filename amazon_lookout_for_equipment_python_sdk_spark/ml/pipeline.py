@@ -58,12 +58,6 @@ class ModelConfig:
     signal_subset: list[str] | None = None  # subset schema, model.py:210-223
     n_components: int | None = None  # PCA k; default d // 2, capped at d-1
     threshold_quantile: float = 0.99
-    #: transform-time missing-tag guard (see _prepare_wide); disable for
-    #: huge batch scoring runs where the single-partition count window on
-    #: the pivoted slot table would bottleneck.  DOCUMENTED TRADE: with
-    #: the guard off, a missing trained tag pivots to an all-null column
-    #: and na.drop() yields an EMPTY transform output instead of an error
-    validate_inputs: bool = True
     #: recorded for request parity (model.py:166-192); the training window
     #: is applied by fit() via training_start/end, the evaluation window by
     #: the caller when selecting transform() input
@@ -124,13 +118,11 @@ class AnomalyDetector:
         if cfg.signal_subset:
             df_long = df_long.filter(F.col("tag").isin(*cfg.signal_subset))
         filled = resample_ffill(df_long, rate, ts_col="ts", key_col="tag")
-        validate = False
+        validate = tags is not None
         if tags is None:
             tags = sorted(
                 r[0] for r in df_long.select("tag").distinct().collect()
             )
-        else:
-            validate = cfg.validate_inputs
         wide = (
             filled.groupBy("bucket_ts")
             .pivot("tag", tags)
@@ -140,10 +132,9 @@ class AnomalyDetector:
             # the guard window is keyless, i.e. single-partition — but it
             # runs over the PIVOTED table (one row per resample slot, not
             # per raw reading), post-aggregation; months of PT5M slots are
-            # ~10^4 rows.  cfg.validate_inputs opts out for huge scoring
-            # runs.  concat_ws skips nulls, so the message lists exactly
-            # the all-null (= absent) tags; 0-row input raises nothing
-            # (empty in, empty out).
+            # ~10^4 rows.  concat_ws skips nulls, so the message lists
+            # exactly the all-null (= absent) tags; 0-row input raises
+            # nothing (empty in, empty out).
             from pyspark.sql import Window
 
             w = Window.partitionBy()

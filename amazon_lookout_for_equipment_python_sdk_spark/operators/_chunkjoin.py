@@ -39,8 +39,9 @@ SCAN_OPS = ("sum", "last", "min_sum")
 RESERVED_INTERNAL = frozenset(
     {
         "_b", "_bstart", "_c", "_carry", "_cum", "_d", "_g", "_has_next",
-        "_lead", "_loc", "_m", "_med", "_n", "_ord", "_pmin", "_rn",
-        "_side", "_tbkt", "_xc", "_zn", "_zq", "_zs",
+        "_has_prev", "_lag", "_lead", "_loc", "_m", "_med", "_n", "_ord",
+        "_pmin", "_prev", "_rn", "_side", "_tbkt", "_xc", "_zn", "_zq",
+        "_zs",
     }
 )
 

@@ -70,24 +70,22 @@ def histogram(
     num_bins: int = 20,
     key_col: str = "tag",
     value_col: str = "value",
-    bounds: DataFrame | None = None,
-    dense: bool = True,
 ) -> DataFrame:
     """A5 — fixed-width bucketed count, density-normalized.
 
     Returns one row per (signal, bin) for ALL bins 0..num_bins-1 (numpy
     emits empty bins as zero counts): ``(key, bin, bin_start, count,
-    density)``.  ``bounds`` lets callers impose shared edges computed over a
-    wider set than ``df`` (the reference shares edges across normal/anomalous
-    subsets, evaluation.py:282-299).
+    density)``.  Edges span each signal's own min..max; histograms over
+    edges shared across subsets are :func:`.wasserstein.density_histograms`.
     """
     # null values carry no sample mass — unguarded they'd land in the LAST
     # bin, because F.least skips null arguments: least(floor(null), 19)=19
     df = df.filter(F.col(value_col).isNotNull())
-    if bounds is None:
-        bounds = signal_bounds(df, key_col, value_col)
+    bounds = signal_bounds(df, key_col, value_col)
     b = F.broadcast(widen_degenerate_bounds(bounds))
     width = (F.col("max_value") - F.col("min_value")) / F.lit(float(num_bins))
+    # every value lies within its own signal's min..max, so only the top
+    # edge (numpy's closed last bin) needs a clamp
     binned = (
         df.join(b, key_col)
         .withColumn(
@@ -117,9 +115,6 @@ def histogram(
     )
     w = (F.col("max_value") - F.col("min_value")) / F.lit(float(num_bins))
     out = out.withColumn("bin_start", F.col("min_value") + F.col("bin") * w)
-    if dense:
-        total = F.sum("count").over(Window.partitionBy(key_col))
-        out = out.withColumn("density", F.col("count") / (total * w))
-    return out.select(key_col, "bin", "bin_start", "count", *(
-        ["density"] if dense else []
-    ))
+    total = F.sum("count").over(Window.partitionBy(key_col))
+    out = out.withColumn("density", F.col("count") / (total * w))
+    return out.select(key_col, "bin", "bin_start", "count", "density")

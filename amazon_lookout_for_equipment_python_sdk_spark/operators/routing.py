@@ -12,7 +12,7 @@ and assembly):
 =============================  ====================================  ==========
 plain                          twin                                  crossover
 =============================  ====================================  ==========
-timeseries.sessionize          sessionize(skew_buckets=N)            ~1e5 rows/key
+timeseries.sessionize          timeseries.sessionize_chunked         ~1e5 rows/key
 stats.rolling_zscore           stats.rolling_zscore_chunked          ~1e5 rows/key
 stats.cusum_reflected          stats.cusum_reflected_chunked         ~1.5e5 rows/key
 timeseries.asof_join           timeseries.asof_join_chunked          ~1.5e6 rows/key (union of both tables — r11)
@@ -76,10 +76,9 @@ precomputed :class:`KeyProbe` via ``probe=`` to amortize the probe
 scan across several routed operators over the same frame (r10 verdict
 #4) — every row accepts the same probe shape (as-of wants one built
 over the two tables' union; a keyless call is the whole frame as one
-key).  Build a SHARED probe with ``ts_col=`` set: sessionize ignores
-the span fields, but every other row falls back to the plain form when
-the probe carries no event-time span (a time-bucketed twin is
-meaningless without one).
+key).  Build a SHARED probe with ``ts_col=`` set: every row falls
+back to the plain form when the probe carries no event-time span (a
+time-bucketed twin is meaningless without one).
 
 Probe overhead, measured: 0.94 s on the sf10 events fixture (10M rows,
 local[32], warm cache) — under 4% of the cheaper branch of the
@@ -475,9 +474,8 @@ def decide_range_twin(
 @dataclass(frozen=True)
 class Family:
     """One plain/twin pair.  The twin takes the plain form's parameters
-    plus ``bucket`` (sessionize is its own twin: ``skew_buckets=``), so
-    a row names only where the probe and the bucket argument come
-    from."""
+    plus ``bucket``, so a row names only where the probe and the bucket
+    argument come from."""
 
     plain: Callable[..., DataFrame]
     twin: Callable[..., DataFrame]
@@ -485,8 +483,8 @@ class Family:
     budget: int
     #: plain parameter naming the key column
     key: str = "key_col"
-    #: plain parameter naming the order axis (None: probe no span)
-    order: str | None = "ts_col"
+    #: plain parameter naming the order axis
+    order: str = "ts_col"
     #: the twin's bucket parameter
     bucket: str = "bucket_span_s"
     #: "key" (a keyless call probes the frame as one key), "union" (the
@@ -501,8 +499,8 @@ class Family:
 
 FAMILIES: dict[str, Family] = {
     "sessionize": Family(
-        _ts.sessionize, _ts.sessionize, WINDOW_BUDGET_ROWS,
-        bucket="skew_buckets", order=None, own_geometry=True,
+        _ts.sessionize, _ts.sessionize_chunked, WINDOW_BUDGET_ROWS,
+        own_geometry=True,
     ),
     "rolling_zscore": Family(
         _st.rolling_zscore, _st.rolling_zscore_chunked, WINDOW_BUDGET_ROWS,
@@ -565,16 +563,11 @@ def plan(
     would under-fan it to 14 tasks).  ``range_s`` is the range row's
     frame reach."""
     fam = FAMILIES[family]
-    if probe is None:
+    if probe is None or probe.lo_us is None:
         return "plain", None
     geom = budget_rows if fam.own_geometry else window_rows
-    if fam.bucket == "skew_buckets":
-        arg = _auto_buckets(probe, geom)
-    elif probe.lo_us is None:
-        return "plain", None
-    else:
-        unit = 1 if fam.probe == "ids" else 1_000_000
-        arg = _bucket_span(probe, geom, unit)
+    unit = 1 if fam.probe == "ids" else 1_000_000
+    arg = _bucket_span(probe, geom, unit)
     if fam.decide is decide_range_twin:
         # a frame may span at most one bucket boundary
         arg = max(arg, int(range_s))
@@ -587,7 +580,7 @@ def plan(
 def _probe(fam: Family, args: dict) -> KeyProbe:
     """The row's probe shape over the bound plain arguments."""
     key = args[fam.key]
-    ts = args[fam.order] if fam.order else None
+    ts = args[fam.order]
     if fam.probe == "ids":
         return probe_keys(args["df"], key, ts_col=ts, numeric_axis=True)
     if fam.probe == "union":

@@ -21,8 +21,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ._chunkjoin import NULL_TS_BUCKET as _NULL_TS_BUCKET
-from ._chunkjoin import bucket_axis, guard_internal, join_boundary, keyed_scan
+from ._chunkjoin import (
+    _keyed_scan,
+    bucket_axis,
+    guard_internal,
+    join_boundary,
+    keyed_scan,
+)
 from .._persist import note_persist as _note_persist
 
 # --- A1/A2: tumbling-window resample ---------------------------------------
@@ -170,27 +175,18 @@ def resample_ffill(
     ts_col: str = "ts",
     key_col: str = "tag",
     value_col: str = "value",
-    fill_span_s: int | None = None,
 ) -> DataFrame:
     """``resample(rule).mean()`` onto a complete grid, then forward-fill —
     the reference's slot-alignment idiom (dataset.py:524, plot.py:250-251).
 
     Returns ``(key_col, bucket_ts, value)`` with no interior nulls (leading
     buckets before a series' first observation keep null, as pandas does).
-
-    ``fill_span_s`` switches the fill to :func:`ffill_chunked` with that
-    bucket span — the skew-safe path when few tags carry decade-long
-    grids (identical rows, property-pinned)."""
+    When few tags carry decade-long grids, fill the joined grid with
+    :func:`ffill_chunked` (or ``operators.routing.route("ffill")``)
+    instead, as the ``flagship_ffill_chunked`` query does."""
     agg = resample_mean(df, rate_seconds, ts_col, key_col, value_col)
     grid = time_grid(df, rate_seconds, ts_col, key_col)
     joined = grid.join(agg, [key_col, "bucket_ts"], "left")
-    # `is not None`, not truthiness: fill_span_s=0 must reach
-    # ffill_chunked's validation, not silently take the plain path
-    if fill_span_s is not None:
-        return ffill_chunked(
-            joined, "avg_value", fill_span_s, "bucket_ts", key_col,
-            out_col="value",
-        ).drop("avg_value")
     return ffill(joined, "avg_value", "bucket_ts", key_col, out_col="value").drop(
         "avg_value"
     )
@@ -490,7 +486,6 @@ def sessionize(
     key_col: str = "user_id",
     gap_minutes: int = 30,
     tiebreak_col: str | None = None,
-    skew_buckets: int | None = None,
 ) -> DataFrame:
     """Gap-based sessionization: within each key, a new session starts
     whenever the gap to the previous event exceeds ``gap_minutes``.  Adds
@@ -503,105 +498,77 @@ def sessionize(
     session either way (gap 0), but lag order affects nothing else only
     when the tie-break makes it reproducible.
 
-    Scale: the default path is one shuffle — everything rides a single
-    per-key window (lag and the running sum share the same sort), parallel
-    across keys.  A skewed key (one user with billions of events) lands on
-    ONE task there; pass ``skew_buckets`` to enable the coarse
-    time-bucket pre-split: rows window within (key, time-bucket) — fanning
-    a hot key across ``skew_buckets`` tasks — then a per-(key, bucket)
-    summary (tiny: keys x buckets rows) decides which bucket-local first
-    sessions continue the previous bucket's last session and assigns each
-    bucket a session-number offset; a join back on (key, bucket) finalizes
-    the global ``session_seq``.  Identical output to the single-window
-    path (property-tested, ties at bucket boundaries included — ties
-    cannot straddle buckets since equal timestamps bucket together).
-    """
-    gap_us = gap_minutes * 60 * 1_000_000
+    Scale: one shuffle — everything rides a single per-key window (lag
+    and the running sum share the same sort), parallel across keys.  A
+    skewed key (one user with billions of events) lands on ONE task
+    there; :func:`sessionize_chunked` is the skew-safe twin
+    (``operators.routing.route("sessionize")`` routes on a probe)."""
+    order = [ts_col] + ([tiebreak_col] if tiebreak_col else [])
+    w = Window.partitionBy(key_col).orderBy(*order)
+    us = F.unix_micros(F.col(ts_col))
+    return df.withColumn(
+        "session_seq",
+        F.sum(_new_session(us, F.lag(us).over(w), gap_minutes)).over(
+            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        ),
+    )
+
+
+def sessionize_chunked(
+    df: DataFrame,
+    bucket_span_s: int,
+    ts_col: str = "ts",
+    key_col: str = "user_id",
+    gap_minutes: int = 30,
+    tiebreak_col: str | None = None,
+) -> DataFrame:
+    """Skew-safe :func:`sessionize`: identical output (property-tested,
+    ties at bucket boundaries, null keys and null timestamps included),
+    with the per-key walk parallel across (key, time-bucket) tasks — the
+    scale path when one hot key's history would otherwise serialize onto
+    a single task's window sort.
+
+    Two prefix scans (:func:`~._chunkjoin.keyed_scan`): a row's previous
+    timestamp is its bucket-local ``lag``, except on a bucket's first
+    row (found by ``lag(1)`` existence, as in :func:`lead_pairs_chunked`),
+    which takes the key's previous non-empty bucket's last timestamp
+    from a ``last`` scan's carry table; ``session_seq`` is the ``sum``
+    scan of the new-session flags.  Equal timestamps share a bucket, so
+    a tie never straddles a boundary; null-ts rows sit in the front
+    bucket, the plain window's nulls-first walk.  Building the plan
+    launches no Spark job."""
+    guard_internal(df)
     order = [ts_col] + ([tiebreak_col] if tiebreak_col else [])
     us = F.unix_micros(F.col(ts_col))
-    if not skew_buckets:
-        w = Window.partitionBy(key_col).orderBy(*order)
-        prev = F.lag(us).over(w)
-        new_session = (prev.isNull() | ((us - prev) > gap_us)).cast("long")
-        return df.withColumn(
-            "session_seq",
-            F.sum(new_session).over(
-                w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            ),
-        )
-    # --- skew path: (key, time-bucket) pre-split + boundary merge ----------
-    # Bucket width from the global time span: one scalar agg (metadata-sized
-    # driver read, off the row path).
-    lo, hi = df.select(F.min(us), F.max(us)).first()
-    if lo is None:
-        # all timestamps null: every row lands in the sentinel bucket
-        # below and the per-(key, bucket) window reproduces the plain
-        # path's nulls-first walk (each null-ts row opens a session,
-        # exactly like the plain lag's null prev)
-        lo, width = 0, 1
-    else:
-        width = max((hi - lo) // skew_buckets + 1, 1)
-    # null-ts rows go to the sentinel FRONT bucket (r11 review: a NULL
-    # bucket id would fail the summary equi-join and drop rows the
-    # plain window keeps nulls-first)
-    bkt = F.coalesce(
-        F.floor((us - F.lit(lo)) / F.lit(width)), F.lit(_NULL_TS_BUCKET)
+    rows = df.withColumn("_b", bucket_axis(ts_col, bucket_span_s, "s"))
+    # the carry needs each bucket's latest timestamp only: a hash
+    # aggregate to one row per (key, bucket) first, so the scan's
+    # struct-ordered bucket total sorts that table, not the rows
+    latest = rows.groupBy(key_col, "_b").agg(F.max(us).alias("_prev"))
+    last_before = _keyed_scan(
+        latest, [key_col], ["_prev"], {"_prev": ("last", "_prev")}
+    )[1]
+    wb = Window.partitionBy(key_col, "_b").orderBy(*order)
+    local = rows.withColumn("_lag", F.lag(us).over(wb)).withColumn(
+        "_has_prev", F.lag(F.lit(1)).over(wb)
     )
-    wb = Window.partitionBy(key_col, "_bkt").orderBy(*order)
-    prev = F.lag(F.col("_us")).over(wb)
-    new_flag = (
-        prev.isNull() | ((F.col("_us") - prev) > gap_us)
-    ).cast("long")
-    rows = (
-        df.withColumn("_us", us)
-        .withColumn("_bkt", bkt)
-        .withColumn("_new", new_flag)
-        .withColumn(
-            "_wseq",
-            F.sum("_new").over(
-                wb.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            ),
-        )
+    prev = F.when(F.col("_has_prev").isNotNull(), F.col("_lag")).otherwise(
+        F.col("_prev")
     )
-    # Per-(key, bucket) summary rides the same (key, bucket) partitioning
-    # the window just established; the per-key ordered walk over buckets is
-    # a window over keys x buckets rows only.
-    wk = Window.partitionBy(key_col).orderBy("_bkt")
-    prev_last = F.lag("_last").over(wk)
-    summ = (
-        rows.groupBy(key_col, "_bkt")
-        .agg(
-            F.min("_us").alias("_first"),
-            F.max("_us").alias("_last"),
-            F.sum("_new").alias("_n_new"),
-        )
-        .withColumn(
-            "_adj",
-            (
-                prev_last.isNotNull()
-                & ((F.col("_first") - prev_last) <= gap_us)
-            ).cast("long"),
-        )
-        .withColumn(
-            "_off",
-            F.coalesce(
-                F.sum(F.col("_n_new") - F.col("_adj")).over(
-                    wk.rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ),
-        )
+    out = keyed_scan(
+        join_boundary(local, last_before, [key_col], ["_b"], how="left"),
+        [key_col],
+        order,
+        {"session_seq": ("sum", _new_session(us, prev, gap_minutes))},
     )
-    # null-safe on the key (r11): a NULL-key group sessionizes like any
-    # other partition in the plain window — the summary join must not
-    # drop it
-    out = join_boundary(
-        rows, summ.select(key_col, "_bkt", "_adj", "_off"),
-        [key_col], ["_bkt"], broadcast=False,
-    )
-    return out.withColumn(
-        "session_seq", F.col("_off") + F.col("_wseq") - F.col("_adj")
-    ).drop("_bkt", "_us", "_new", "_wseq", "_adj", "_off")
+    return out.drop("_b", "_lag", "_has_prev", "_prev")
+
+
+def _new_session(us: Column, prev: Column, gap_minutes: int) -> Column:
+    """1 where a row opens a session: no previous timestamp, or a gap
+    beyond ``gap_minutes`` (exact integer microseconds)."""
+    gap_us = gap_minutes * 60 * 1_000_000
+    return (prev.isNull() | ((us - prev) > gap_us)).cast("long")
 
 
 # --- as-of join (pandas merge_asof / trades-and-quotes) ---------------------

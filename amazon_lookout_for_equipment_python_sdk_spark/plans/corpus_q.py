@@ -281,18 +281,20 @@ def sessionize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("sessionize_events_skew", _SESSION_SQL)
 def sessionize_skew_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The skew-safe sessionization path against the SAME oracle as
-    ``sessionize_events``: the (key, time-bucket) pre-split + boundary
-    merge must produce byte-identical sessions to the single-window plan
-    — oracle-checked here on driver data on top of the property test."""
+    """The skew-safe sessionization twin against the SAME oracle as
+    ``sessionize_events``: ``sessionize_chunked``'s (key, time-bucket)
+    prefix scans must produce byte-identical sessions to the
+    single-window plan — oracle-checked here on driver data on top of
+    the property test.  4-day buckets split the events' 30-day range
+    into about 8 per user."""
     ev = load(spark, sf_dir, "events")
-    s = ts_ops.sessionize(
+    s = ts_ops.sessionize_chunked(
         ev,
+        4 * 86400,
         ts_col="ts",
         key_col="user_id",
         gap_minutes=_GAP_MINUTES,
         tiebreak_col="event_id",
-        skew_buckets=8,
     )
     return s.groupBy("user_id", "session_seq").agg(
         F.min("ts").alias("session_start"),

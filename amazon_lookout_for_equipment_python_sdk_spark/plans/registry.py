@@ -61,13 +61,22 @@ def load_par(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """``load`` + guarantee at least ``defaultParallelism`` partitions.
 
     Small-SF parquet is one row group, so the scan is ONE partition and
-    every row-local stage downstream (md5 signatures, shingling) runs on a
-    single core of the 32-core local box.  A round-robin repartition of the
+    every row-local stage downstream (md5 signatures, shingling, vector
+    scoring) runs on a single core.  A round-robin repartition of the
     tiny input (<1 MB shuffle) buys full-width codegen parallelism.  At
     cluster scale the scan already exceeds core count, the condition is
     false, and this is a no-op — the check reads the planned partition
-    count, not a heuristic.  Use for compute-dense pipelines only; cheap
-    scan-bound queries lose more to the extra exchange than they gain."""
+    count, not a heuristic.
+
+    Use it for compute-dense pipelines only: all of its inputs are under
+    1 MB, so no size rule separates the cases; compute density does.
+    Measured at sf0.1 on 4 cores (``tools/ab.py``, min of 3, against
+    plain ``load``, two rounds): the fan-out wins 16 to 18 of its 22
+    registered queries, summed minima 41-45 s against 64-67 s
+    (``gopher_repetition_rules`` 3.7-4.2 vs 11.6-12.3 s,
+    ``duplicate_spans_k20`` 2.9-3.3 vs 7.4 s); plain ``load`` reads
+    faster in both rounds only on ``pq_adc_topk``, ``ivfpq_adc_topk``
+    and ``semantic_dedup_cells``."""
     df = load(spark, sf_dir, table)
     target = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:

@@ -295,18 +295,21 @@ LSH_PAIR_SCHEMA = "a string, b string, band int"
 LSH_STATE_SCHEMA = "ids array<string>, sigs array<long>"
 
 
+def _first_matching_band(sa, sb, bands: int, rpb: int) -> int:
+    """The first band whose ``rpb`` rows agree between two signatures —
+    the band that owns the pair (``bands`` when none does, unreachable
+    for a true bucket collision)."""
+    for b in range(bands):
+        if sa[b * rpb : (b + 1) * rpb] == sb[b * rpb : (b + 1) * rpb]:
+            return b
+    return bands
+
+
 def _lsh_bucket_batch(
     key, pdf_iter, state: GroupState, num_perm: int, bands: int, max_bucket: int
 ):
     band_val = int(key[0])
     rpb = num_perm // bands
-
-    def first_matching_band(sa, sb) -> int:
-        for b in range(bands):
-            if sa[b * rpb : (b + 1) * rpb] == sb[b * rpb : (b + 1) * rpb]:
-                return b
-        return bands  # unreachable for true bucket collisions
-
     if state.exists:
         ids, flat = state.get
         ids = list(ids)
@@ -323,7 +326,8 @@ def _lsh_bucket_batch(
                 # the two signatures — the exact batch rule, so cross-band
                 # duplicate pairs vanish with no global dedup state
                 for prev_id, prev_sig in zip(ids, sigs):
-                    if first_matching_band(sig, prev_sig) == band_val:
+                    owner = _first_matching_band(sig, prev_sig, bands, rpb)
+                    if owner == band_val:
                         a, b = sorted((str(doc_id), str(prev_id)))
                         out.append((a, b, band_val))
             ids.append(str(doc_id))
@@ -415,13 +419,6 @@ def _lsh_verify_batch(
 ):
     band_val = int(key[0])
     rpb = num_perm // bands
-
-    def first_matching_band(sa, sb) -> int:
-        for b in range(bands):
-            if sa[b * rpb : (b + 1) * rpb] == sb[b * rpb : (b + 1) * rpb]:
-                return b
-        return bands
-
     if state.exists:
         ids, flat, hlens, hpool = state.get
         ids = list(ids)
@@ -444,7 +441,8 @@ def _lsh_verify_batch(
             if len(ids) < max_bucket:
                 hset = set(ha)
                 for prev_id, prev_sig, prev_h in zip(ids, sigs, harrs):
-                    if first_matching_band(sig, prev_sig) != band_val:
+                    owner = _first_matching_band(sig, prev_sig, bands, rpb)
+                    if owner != band_val:
                         continue
                     # exact verify, batch-identical arithmetic:
                     # array_intersect dedups, sizes count raw arrays

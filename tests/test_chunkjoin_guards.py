@@ -96,6 +96,9 @@ def test_twin_entry_points_guard(spark, small_df):
         lambda: ts_ops.lead_pairs_chunked(
             poisoned, 3600, ts_col="ts", key_col="k"
         ),
+        lambda: ts_ops.sessionize_chunked(
+            poisoned, 3600, ts_col="ts", key_col="k"
+        ),
         lambda: ts_ops.restamp_positional_chunked(
             poisoned, "2024-01-01", 60, 3600, ts_col="ts", key_col="k"
         ),
@@ -131,9 +134,11 @@ def test_asof_both_forms_reject_side_column(spark, small_df):
                          ts_col="ts", key_col="k")
 
 
-#: every public ``*_chunked`` twin, and resample_ffill's chunked fill,
-#: called on ``(frame, docs, span)``
+#: every public ``*_chunked`` twin, called on ``(frame, docs, span)``
 _SPAN_CALLS = {
+    "sessionize": lambda f, d, s: ts_ops.sessionize_chunked(
+        f, s, ts_col="ts", key_col="k", tiebreak_col="eid"
+    ),
     "ffill": lambda f, d, s: ts_ops.ffill_chunked(
         f, "value", s, ts_col="ts", key_col="k"
     ),
@@ -167,9 +172,6 @@ _SPAN_CALLS = {
     ),
     "assemble_packs": lambda f, d, s: cp.assemble_packs_chunked(
         d, bucket_span_ids=s
-    ),
-    "resample_ffill": lambda f, d, s: ts_ops.resample_ffill(
-        f, 600, ts_col="ts", key_col="k", value_col="value", fill_span_s=s
     ),
 }
 

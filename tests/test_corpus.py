@@ -1,11 +1,13 @@
 """Corpus-preparation operators: decontamination, chunking, splits,
 sampling, vocabulary, quantiles, sessionization (operators/corpus.py +
-timeseries.sessionize).  Value-level correctness is driver/oracle-checked
-at sf0.01; these tests pin semantics and edge cases on tiny frames."""
+timeseries.sessionize and its twin sessionize_chunked).  Value-level
+correctness is driver/oracle-checked at sf0.01; these tests pin semantics
+and edge cases on tiny frames."""
 
 from __future__ import annotations
 
 import datetime as dt
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -13,6 +15,7 @@ from pyspark.sql import functions as F
 from amazon_lookout_for_equipment_python_sdk_spark.operators import corpus as cp
 from amazon_lookout_for_equipment_python_sdk_spark.operators.timeseries import (
     sessionize,
+    sessionize_chunked,
 )
 
 
@@ -145,9 +148,11 @@ def test_sessionize_plan_single_shuffle(spark):
 
 
 def test_sessionize_skew_path_equivalent(spark):
-    """Property: the skew_buckets split/merge path is row-identical to the
-    single-window path — sessions spanning bucket boundaries, timestamp
-    ties at boundaries, multiple keys, and varying bucket counts."""
+    """Property: the skew-safe twin ``sessionize_chunked`` is
+    row-identical to the single-window ``sessionize`` — sessions
+    spanning bucket boundaries, timestamp ties at boundaries, multiple
+    keys, and bucket spans from shorter than the 30-min gap to longer
+    than the data's whole range."""
     import random
 
     rng = random.Random(7)
@@ -170,37 +175,56 @@ def test_sessionize_skew_path_equivalent(spark):
             df, key_col="user_id", gap_minutes=30, tiebreak_col="event_id"
         ).collect()
     }
-    for nb in (1, 2, 7, 64):
-        skew = {
+    for span in (600, 1_800, 7_200, 86_400, 10_000_000):
+        got = {
             r["event_id"]: r["session_seq"]
-            for r in sessionize(
+            for r in sessionize_chunked(
                 df,
+                span,
                 key_col="user_id",
                 gap_minutes=30,
                 tiebreak_col="event_id",
-                skew_buckets=nb,
             ).collect()
         }
-        assert skew == base, f"skew_buckets={nb}"
+        assert got == base, f"bucket_span_s={span}"
 
 
 def test_sessionize_skew_fans_hot_key(spark):
-    """The skew path's row window partitions by (key, bucket) — a hot key's
+    """The twin's row windows partition by (key, bucket) — a hot key's
     rows no longer all hash to one task."""
     df = spark.createDataFrame(
         [(1, dt.datetime(2024, 1, 1) + dt.timedelta(minutes=i), i) for i in range(50)],
         "user_id long, ts timestamp, event_id long",
     )
     plan = (
-        sessionize(
-            df, key_col="user_id", gap_minutes=30, tiebreak_col="event_id",
-            skew_buckets=8,
+        sessionize_chunked(
+            df, 600, key_col="user_id", gap_minutes=30,
+            tiebreak_col="event_id",
         )
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
     )
-    assert "hashpartitioning(user_id" in plan and "_bkt" in plan, plan
+    assert re.search(r"hashpartitioning\(user_id#\d+L?, _b#", plan), plan
+
+
+def test_sessionize_chunked_builds_no_job(spark):
+    """Building the twin's plan launches no Spark job: its bucket width
+    is the caller's span, not a min/max read of the data."""
+    df = spark.createDataFrame(
+        [(1, dt.datetime(2024, 1, 1) + dt.timedelta(minutes=i), i) for i in range(50)],
+        "user_id long, ts timestamp, event_id long",
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("sessionize-build", "build the sessionize twin's plan")
+    try:
+        sessionize_chunked(
+            df, 600, key_col="user_id", gap_minutes=30,
+            tiebreak_col="event_id",
+        )._jdf.queryExecution().executedPlan()
+    finally:
+        sc.setJobGroup("sessionize-build-after", "")
+    assert list(sc.statusTracker().getJobIdsForGroup("sessionize-build")) == []
 
 
 def test_tfidf_top_terms_ranking(spark):

@@ -85,13 +85,14 @@ def test_sessionize_skew_null_key_group(spark, nullkey_df):
             tiebreak_col="eid",
         )
     )
-    got = seqs(
-        ts_ops.sessionize(
-            nullkey_df, ts_col="ts", key_col="k", gap_minutes=30,
-            tiebreak_col="eid", skew_buckets=12,
+    for span in (600, 3_600, 10_000_000):
+        got = seqs(
+            ts_ops.sessionize_chunked(
+                nullkey_df, span, ts_col="ts", key_col="k", gap_minutes=30,
+                tiebreak_col="eid",
+            )
         )
-    )
-    assert got == plain and len(got) == 160
+        assert got == plain and len(got) == 160, span
 
 
 def test_asof_chunked_null_key_group(spark, nullkey_df):
@@ -232,13 +233,14 @@ def test_sessionize_skew_null_ts_rows(spark, nullts_df):
             tiebreak_col="eid",
         )
     )
-    got = seqs(
-        ts_ops.sessionize(
-            nullts_df, ts_col="ts", key_col="k", gap_minutes=30,
-            tiebreak_col="eid", skew_buckets=12,
+    for span in (600, 3_600, 10_000_000):
+        got = seqs(
+            ts_ops.sessionize_chunked(
+                nullts_df, span, ts_col="ts", key_col="k", gap_minutes=30,
+                tiebreak_col="eid",
+            )
         )
-    )
-    assert got == plain and len(got) == 160
+        assert got == plain and len(got) == 160, span
     # null-ts rows each open a session (the plain lag's null prev) —
     # assert they're present, not just that the maps agree
     nulls = [r["eid"] for r in nullts_df.filter(F.col("ts").isNull()).collect()]
@@ -246,9 +248,9 @@ def test_sessionize_skew_null_ts_rows(spark, nullts_df):
 
 
 def test_sessionize_skew_all_null_ts(spark):
-    """All-null-ts frame: the skew path used to return NULL session_seq
-    where the plain path numbers each row as its own session — the
-    sentinel bucket now reproduces the plain walk."""
+    """All-null-ts frame: every row sits in the twin's sentinel front
+    bucket, which reproduces the plain walk (each row its own session;
+    an earlier skew path returned NULL session_seq here)."""
     df = spark.createDataFrame(
         [("a", None, i) for i in range(6)] + [("b", None, 6)],
         "k string, ts timestamp, eid long",
@@ -263,9 +265,8 @@ def test_sessionize_skew_all_null_ts(spark):
         )
     )
     got = seqs(
-        ts_ops.sessionize(
-            df, ts_col="ts", key_col="k", tiebreak_col="eid",
-            skew_buckets=4,
+        ts_ops.sessionize_chunked(
+            df, 3_600, ts_col="ts", key_col="k", tiebreak_col="eid"
         )
     )
     assert got == plain == {0: 1, 1: 2, 2: 3, 3: 4, 4: 5, 5: 6, 6: 1}

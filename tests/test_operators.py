@@ -731,19 +731,24 @@ def test_ffill_chunked_equals_plain(spark):
 
 
 def test_resample_ffill_chunked_matches_plain(spark, events):
-    """resample_ffill(fill_span_s=...) — the flagship idiom with the
-    skew-safe fill — returns exactly the plain rows on the fixture."""
+    """The flagship idiom with the skew-safe fill — ``time_grid`` joined
+    to the resample, then ``ffill_chunked`` — returns exactly
+    ``resample_ffill``'s rows on the fixture."""
     plain = {
         (r["event_type"], str(r["bucket_ts"])): r["value"]
         for r in ts_ops.resample_ffill(
             events, 300, key_col="event_type"
         ).collect()
     }
+    agg = ts_ops.resample_mean(events, 300, key_col="event_type")
+    grid = ts_ops.time_grid(events, 300, key_col="event_type")
+    filled = ts_ops.ffill_chunked(
+        grid.join(agg, ["event_type", "bucket_ts"], "left"),
+        "avg_value", 6 * 3600, "bucket_ts", "event_type", out_col="value",
+    )
     got = {
         (r["event_type"], str(r["bucket_ts"])): r["value"]
-        for r in ts_ops.resample_ffill(
-            events, 300, key_col="event_type", fill_span_s=6 * 3600
-        ).collect()
+        for r in filled.collect()
     }
     assert got == plain
 
@@ -795,14 +800,9 @@ def test_rolling_range_chunked_equals_plain(spark):
     # raise cleanly, not DIVIDE_BY_ZERO at collect (review fix)
     with pytest.raises(ValueError, match="positive"):
         ts_ops.rolling_range_chunked(df, 0, aggs, 0, ts_col="ts")
-    # fill_span_s=0 reaches ffill_chunked's validation instead of
-    # silently taking the plain path (review fix)
-    ev2 = df.withColumnRenamed("ts", "tts")
+    # a zero fill span raises while the plan is built (review fix)
     with pytest.raises(ValueError, match="positive"):
-        ts_ops.resample_ffill(
-            ev2, 600, ts_col="tts", key_col="k", value_col="v",
-            fill_span_s=0,
-        ).collect()
+        ts_ops.ffill_chunked(df, "v", 0, ts_col="ts", key_col="k")
 
 
 def test_lead_restamp_chunked_plan_shapes(spark):

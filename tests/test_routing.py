@@ -948,20 +948,23 @@ RANGE_CASES = {
 #: this table replaced, called with the same probe and budgets (the
 #: bucket argument of a plain decision is the one those routers passed
 #: their twin when its decision was forced).  "string_ids" is a
-#: non-numeric id axis, which the router never probes.
+#: non-numeric id axis, which the router never probes.  The sessionize
+#: rows carry a bucket span since its twin became ``sessionize_chunked``;
+#: their paths are the old router's except ``no_span``, which now routes
+#: plain like every span-bucketed row.
 PLAN_PINS = {
-    ('sessionize', 'below'): ('plain', 2),
-    ('sessionize', 'at'): ('plain', 2),
-    ('sessionize', 'above'): ('twin', 2),
-    ('sessionize', 'hot_hour'): ('twin', 20),
-    ('sessionize', 'capped'): ('twin', 256),
-    ('sessionize', 'caller_budget'): ('twin', 20),
-    ('sessionize', 'big_window'): ('twin', 5),
-    ('sessionize', 'no_span'): ('twin', 20),
-    ('sessionize', 'carry_floor'): ('twin', 20),
-    ('sessionize', 'over_carry_keys'): ('plain', 20),
-    ('sessionize', 'keyless'): ('twin', 20),
-    ('sessionize', 'empty'): ('plain', 2),
+    ('sessionize', 'below'): ('plain', 43200),
+    ('sessionize', 'at'): ('plain', 43200),
+    ('sessionize', 'above'): ('twin', 43200),
+    ('sessionize', 'hot_hour'): ('twin', 180),
+    ('sessionize', 'capped'): ('twin', 337),
+    ('sessionize', 'caller_budget'): ('twin', 4320),
+    ('sessionize', 'big_window'): ('twin', 17280),
+    ('sessionize', 'no_span'): ('plain', None),
+    ('sessionize', 'carry_floor'): ('twin', 172800),
+    ('sessionize', 'over_carry_keys'): ('plain', 864000),
+    ('sessionize', 'keyless'): ('twin', 43200),
+    ('sessionize', 'empty'): ('plain', None),
     ('rolling_zscore', 'below'): ('plain', 43200),
     ('rolling_zscore', 'at'): ('plain', 43200),
     ('rolling_zscore', 'above'): ('twin', 43200),
@@ -1105,8 +1108,8 @@ def test_plan_pins_the_replaced_routers():
 def test_every_twin_has_one_row():
     """Each public ``*_chunked`` operator is exactly one row's twin, and
     every twin takes its plain form's parameters plus the row's bucket
-    parameter (sessionize is its own twin), which is what lets ``route``
-    bind a call once against the plain signature."""
+    parameter, which is what lets ``route`` bind a call once against the
+    plain signature."""
     import importlib
     import inspect
     import pkgutil
@@ -1125,11 +1128,11 @@ def test_every_twin_has_one_row():
             ):
                 twins[f"{m.name}.{name}"] = fn
     rows = [fam.twin for fam in rt.FAMILIES.values()]
-    assert len(rows) == len(twins) + 1  # sessionize is its own twin
+    assert len(rows) == len(twins)
     for name, fn in twins.items():
         assert rows.count(fn) == 1, name
     for family, fam in rt.FAMILIES.items():
         plain = set(inspect.signature(fam.plain).parameters)
         twin = set(inspect.signature(fam.twin).parameters)
         assert twin == plain | {fam.bucket}, family
-        assert {fam.key, fam.order} - {None} <= plain, family
+        assert {fam.key, fam.order} <= plain, family
