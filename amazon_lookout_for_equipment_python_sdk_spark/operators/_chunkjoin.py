@@ -210,7 +210,11 @@ def _keyed_scan(df, keys, order, scans) -> "tuple[DataFrame, DataFrame]":
 
     # 2. bucket totals, then their exclusive prefix per key ("min" holds
     #    each bucket's own min of the global running sum until the last
-    #    pass turns it into the exclusive prefix min)
+    #    pass turns it into the exclusive prefix min).  The totals
+    #    aggregate the rows rather than read each bucket's last local
+    #    row: a `sum` total over raw columns lets Catalyst prune the local
+    #    window from this branch, where a last-row filter adds row sorts
+    #    and measured slower (ROADMAP item 3)
     def total(op, c, f):
         if op == "last":
             return F.max_by(c, F.when(c.isNotNull(), F.struct(*order)))

@@ -31,9 +31,11 @@ twin: one cheap probe (a single corpus scan whose map-side-combined
 output is one row per key, reduced to a few scalars), then the pure
 :func:`plan`.  Output is identical either way (every twin is
 property-pinned equal to its plain form); only the physical plan
-differs.  The registered driver queries keep calling the explicit
-forms — those are the oracle shapes; ``route`` is the deployment
-convenience.  ``tools/ab_twin.py <family>`` times the two forms at the
+differs.  The registered plain/twin query pairs are built by
+``plans.registry.register_twins`` from the rows of :data:`FAMILIES`
+(one body per pair, run on the plain form and on the twin at a fixed
+bucket span); ``route`` is the deployment convenience.
+``tools/ab_twin.py <family>`` times the two forms at the
 bucket argument :func:`plan` returns, which is how the budgets below
 were calibrated.
 

@@ -28,6 +28,7 @@ from .registry import (
     load,
     qfloor,
     register,
+    register_twins,
     sql_det_avg,
     sql_qfloor,
 )
@@ -51,32 +52,19 @@ FROM scored WHERE abs({sql_qfloor('z')}) > {_ZTHR}
 """
 
 
-@register("rolling_zscore_anomalies", _Z_SQL)
-def rolling_zscore_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@register_twins(
+    "rolling_zscore",
+    "rolling_zscore_anomalies",
+    "rolling_zscore_anomalies_chunked",
+    _Z_SQL,
+    6 * 3600,
+)
+def rolling_zscore_q(spark: SparkSession, sf_dir: str, op) -> DataFrame:
     """Point outliers: |rolling z| > 3 against the trailing 100 readings of
     the same signal.  One per-key window shuffle; the anomaly filter keeps
     the result tiny regardless of corpus size."""
     events = load(spark, sf_dir, "events")
-    scored = st.rolling_zscore(events, _ZW)
-    zq = qfloor(F.col("zscore"))
-    return (
-        scored.withColumn("zscore", zq)
-        .filter(F.abs(F.col("zscore")) > F.lit(_ZTHR))
-        .select("event_id", "event_type", "ts", "value", "zscore")
-    )
-
-
-@register("rolling_zscore_anomalies_chunked", _Z_SQL)
-def rolling_zscore_chunked_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The skew-safe variant of ``rolling_zscore_anomalies`` (identical
-    rows, same oracle): time-bucket sharding + offset-derived context
-    replication parallelizes the trailing-row window across (key, bucket)
-    tasks — the shape that survives 5 signals x 20 years, where the plain
-    per-key window serializes onto 5 tasks.  Slower at small SF (extra
-    tiny agg + broadcast join), faster when per-key history >> one
-    executor's sort budget."""
-    events = load(spark, sf_dir, "events")
-    scored = st.rolling_zscore_chunked(events, _ZW, bucket_span_s=6 * 3600)
+    scored = op(events, _ZW)
     zq = qfloor(F.col("zscore"))
     return (
         scored.withColumn("zscore", zq)
@@ -119,39 +107,20 @@ FROM s GROUP BY 1
 """
 
 
-@register("cusum_drift_flags", _CUSUM_SQL)
-def cusum_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@register_twins(
+    "cusum_reflected",
+    "cusum_drift_flags",
+    "cusum_drift_flags_chunked",
+    _CUSUM_SQL,
+    6 * 3600,
+)
+def cusum_q(spark: SparkSession, sf_dir: str, op) -> DataFrame:
     """Mean-drift detection: one-sided CUSUM against each signal's own
     median via the reflected-walk identity (operators/stats.py
     cusum_reflected — two stacked windows, ONE shuffle), rolled up to
     per-signal alarm counts + peak statistic."""
     events = load(spark, sf_dir, "events")
-    cus = st.cusum_reflected(events)
-    return cus.groupBy("event_type").agg(
-        F.count(F.when(F.col("cusum") > F.lit(_CUSUM_H), 1)).alias("n_over"),
-        qfloor(F.max("cusum")).alias("max_cusum"),
-    )
-
-
-@register("cusum_drift_flags_chunked", _CUSUM_SQL)
-def cusum_chunked_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The skew-safe variant of ``cusum_drift_flags`` (identical rows,
-    same oracle — the rolling_zscore_anomalies_chunked precedent): the
-    reflected walk as a keyed prefix scan (operators/stats.py
-    cusum_reflected_chunked; see ``_chunkjoin.keyed_scan``).
-
-    Registered in r11, when the honest-drain re-measurement showed this
-    IS the production path at scale: the r9 "plain wins everywhere"
-    crossover table was a count-drain elision artifact (BASELINE.md r11
-    addendum) — the true crossover is 300k-600k rows/key at 0.9
-    GiB/task, the twin winning 1.8x at sf10's 2M rows/key and 12.7x at
-    50M.  The plain row above stays registered as the small-key fast
-    path the router (operators/routing.py route("cusum_reflected"))
-    picks below ~150k rows/key; the randomized property test
-    (tests/test_stats.py) additionally pins the two forms row-for-row
-    equal."""
-    events = load(spark, sf_dir, "events")
-    cus = st.cusum_reflected_chunked(events, bucket_span_s=6 * 3600)
+    cus = op(events)
     return cus.groupBy("event_type").agg(
         F.count(F.when(F.col("cusum") > F.lit(_CUSUM_H), 1)).alias("n_over"),
         qfloor(F.max("cusum")).alias("max_cusum"),
@@ -918,8 +887,14 @@ WHERE CAST(epoch(bucket_ts) AS BIGINT) % (16 * {RATE}) = 0
 """
 
 
-@register("ewma_chart", _EWMA_SQL)
-def ewma_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@register_twins(
+    "ewma",
+    "ewma_chart",
+    "ewma_chart_chunked",
+    _EWMA_SQL,
+    6 * 3600,
+)
+def ewma_q(spark: SparkSession, sf_dir: str, op) -> DataFrame:
     """EWMA smoothing of each signal's 5-min bucket means
     (operators/stats.py ewma — Horner fold over the ordered window
     array, so the float op sequence is fixed and engine-portable).
@@ -934,47 +909,7 @@ def ewma_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             / (F.col("n").cast("double") * F.lit(100.0))
         ).alias("avg_value"),
     )
-    out = st.ewma(series, _EWMA_A, _EWMA_W)
-    return (
-        out.filter(
-            F.unix_timestamp("bucket_ts") % F.lit(16 * RATE) == 0
-        )
-        .select(
-            "event_type",
-            "bucket_ts",
-            (F.floor(F.col("ewma") * F.lit(1e4)) / F.lit(1e4)).alias("ewma"),
-        )
-    )
-
-
-@register("ewma_chart_chunked", _EWMA_SQL)
-def ewma_chunked_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The skew-safe variant of ``ewma_chart`` (identical rows, same
-    oracle): the per-key trailing-64-row window decomposed through the
-    shared rows-frame machinery (operators/stats.py
-    ``_chunked_rows_frame`` — the zscore twin's offsets + context
-    replication) with the SAME Horner-fold expression, so the float op
-    sequence is bit-identical by construction.  The ninth routed
-    family (operators/routing.py ``route("ewma")``; measured crossover in
-    BASELINE.md r11 addendum 8).  Like the flagship fill, ewma's scale
-    case is span-bounded, not skew-bound: it runs over resampled
-    series, so a decade of 5-min buckets is ~1M rows per key
-    regardless of event volume.  Bit-equality across geometries
-    (buckets thinner than the window, null values/keys/order-ts)
-    pinned in tests/test_stats.py."""
-    events = load(spark, sf_dir, "events")
-    sums = _bucket_cent_sums(events)
-    series = sums.select(
-        "event_type",
-        "bucket_ts",
-        (
-            F.col("sc").cast("double")
-            / (F.col("n").cast("double") * F.lit(100.0))
-        ).alias("avg_value"),
-    )
-    out = st.ewma_chunked(
-        series, _EWMA_A, bucket_span_s=6 * 3600, window=_EWMA_W
-    )
+    out = op(series, _EWMA_A, window=_EWMA_W)
     return (
         out.filter(
             F.unix_timestamp("bucket_ts") % F.lit(16 * RATE) == 0

@@ -9,8 +9,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators import corpus as cp
-from ..operators import timeseries as ts_ops
-from .registry import det_sum, load, load_par, qfloor, register, sql_det_sum
+from .registry import (
+    det_sum, load, load_par, qfloor, register, register_twins, sql_det_sum,
+)
 
 #: DuckDB word-5-gram shingle expression (1-based inclusive slice [i:i+4])
 _SHINGLE5_SQL = (
@@ -253,44 +254,20 @@ FROM t GROUP BY 1, 2
 """
 
 
-@register("sessionize_events", _SESSION_SQL)
-def sessionize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@register_twins(
+    "sessionize",
+    "sessionize_events",
+    "sessionize_events_skew",
+    _SESSION_SQL,
+    4 * 86400,  # splits the events' 30-day range into about 8 per user
+)
+def sessionize_q(spark: SparkSession, sf_dir: str, op) -> DataFrame:
     """Gap-based sessionization of the event stream (8-h inactivity gap):
     lag + running-sum run ids on one per-user window, then per-session
     rollup — the W1-style idiom generalized to user analytics."""
     ev = load(spark, sf_dir, "events")
-    s = ts_ops.sessionize(
+    s = op(
         ev,
-        ts_col="ts",
-        key_col="user_id",
-        gap_minutes=_GAP_MINUTES,
-        tiebreak_col="event_id",
-    )
-    return s.groupBy("user_id", "session_seq").agg(
-        F.min("ts").alias("session_start"),
-        F.max("ts").alias("session_end"),
-        F.count(F.lit(1)).alias("n_events"),
-        (
-            (F.unix_micros(F.max("ts")) - F.unix_micros(F.min("ts")))
-            / F.lit(1000000.0)
-        ).alias("duration_s"),
-        F.sum((F.col("event_type") == "error").cast("long")).alias("n_errors"),
-        det_sum(F.col("value")).alias("value_sum"),
-    )
-
-
-@register("sessionize_events_skew", _SESSION_SQL)
-def sessionize_skew_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The skew-safe sessionization twin against the SAME oracle as
-    ``sessionize_events``: ``sessionize_chunked``'s (key, time-bucket)
-    prefix scans must produce byte-identical sessions to the
-    single-window plan — oracle-checked here on driver data on top of
-    the property test.  4-day buckets split the events' 30-day range
-    into about 8 per user."""
-    ev = load(spark, sf_dir, "events")
-    s = ts_ops.sessionize_chunked(
-        ev,
-        4 * 86400,
         ts_col="ts",
         key_col="user_id",
         gap_minutes=_GAP_MINUTES,
@@ -394,41 +371,21 @@ FROM (
 """
 
 
-@register("pack_documents", _PACK_SQL)
-def pack_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@register_twins(
+    "pack_documents",
+    "pack_documents",
+    "pack_documents_chunked",
+    _PACK_SQL,
+    40,  # many buckets per source at driver SF: exercises the carries
+)
+def pack_q(spark: SparkSession, sf_dir: str, op) -> DataFrame:
     """Sequence-packing plan at a 512-token budget, grouped by source:
     integer window cumsum -> pack ids (boundary-crossing rule; see
     operators/corpus.pack_documents for the exact-greedy trade)."""
     docs = load(spark, sf_dir, "documents")
-    out = cp.pack_documents(
+    out = op(
         docs, budget_tokens=512, group_col="source",
         text_col="text", id_col="doc_id",
-    )
-    return out.select(
-        "doc_id", "source", "n_tokens",
-        F.col("pack_offset").cast("long").alias("pack_offset"),
-        "pack_id",
-    )
-
-
-@register("pack_documents_chunked", _PACK_SQL)
-def pack_chunked_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skew-safe twin of ``pack_documents`` (r12 — tenth routed family,
-    closing the serialized-sort-cliff class, r11 verdict #4): identical
-    semantics (same oracle SQL), with the per-source token cumsum as a
-    keyed prefix scan over (source, id-bucket) tasks
-    (operators/corpus.pack_documents_chunked; see
-    ``_chunkjoin.keyed_scan``).  The 40-id
-    bucket span forces many buckets per group at driver SF so the
-    boundary machinery is actually exercised.
-
-    Registry budget: twin row follows the r11 chunked-twin pattern
-    (shares the plain row's oracle; certifies the decomposition's
-    driver-hash equality, not new semantics)."""
-    docs = load(spark, sf_dir, "documents")
-    out = cp.pack_documents_chunked(
-        docs, budget_tokens=512, bucket_span_ids=40,
-        group_col="source", text_col="text", id_col="doc_id",
     )
     return out.select(
         "doc_id", "source", "n_tokens",

@@ -24,10 +24,12 @@ Conventions:
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.routing import FAMILIES
 from ..sources.readers import read_parquet_ts
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -86,10 +88,36 @@ def load_par(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
 
 def register(name: str, oracle: str | None = None):
     def deco(fn):
+        if name in QUERIES:
+            raise ValueError(f"query {name!r} is already registered")
         QUERIES[name] = fn
         if oracle is not None:
             ORACLE_SQL[name] = oracle
         return fn
+
+    return deco
+
+
+def register_twins(
+    family: str, name: str, twin_name: str, oracle: str, span: int
+):
+    """Register ``build(spark, sf_dir, op=...)`` twice with one oracle:
+    as ``name`` with ``op`` = ``FAMILIES[family]``'s plain operator, and
+    as ``twin_name`` with ``op`` = its skew-safe twin at bucket span
+    ``span``.  The body calls ``op`` as it would the plain form, passing
+    every argument after the leading ones both forms share by keyword:
+    the twin's bucket parameter follows those, so a further positional
+    argument would collide with it."""
+    fam = FAMILIES[family]
+    twin = functools.partial(fam.twin, **{fam.bucket: span})
+
+    def deco(build):
+        for n, op in ((name, fam.plain), (twin_name, twin)):
+            # the row keeps the body's name and module
+            # (perfbench/query_mix.py groups its rows by module)
+            row = functools.partial(build, op=op)
+            register(n, oracle)(functools.update_wrapper(row, build))
+        return build
 
     return deco
 

@@ -15,6 +15,7 @@ from .registry import (
     load,
     qfloor,
     register,
+    register_twins,
     sql_det_avg,
     sql_det_sum,
     sql_qfloor,
@@ -51,8 +52,14 @@ WINDOW w AS (PARTITION BY event_type ORDER BY bucket_ts
 """
 
 
-@register("flagship_resample_ffill_rolling", _FLAGSHIP_SQL)
-def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
+@register_twins(
+    "ffill",
+    "flagship_resample_ffill_rolling",
+    "flagship_ffill_chunked",
+    _FLAGSHIP_SQL,
+    6 * 3600,
+)
+def flagship(spark: SparkSession, sf_dir: str, op) -> DataFrame:
     """The reference's preprocessing spine (plot.py:232-253 + 533-535):
     5-min tumbling mean per signal -> complete grid + forward fill ->
     1-hour rolling average."""
@@ -61,50 +68,11 @@ def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", ts_ops.bucket(F.col("ts"), RATE).alias("bucket_ts")
     ).agg(det_avg(F.col("value")).alias("avg_value"))
     grid = ts_ops.time_grid(events, RATE, ts_col="ts", key_col="event_type")
-    filled = ts_ops.ffill(
+    filled = op(
         grid.join(agg, ["event_type", "bucket_ts"], "left"),
         "avg_value",
-        "bucket_ts",
-        "event_type",
-        out_col="value",
-    ).drop("avg_value")
-    rolled = ts_ops.rolling_mean(
-        filled, ROLL, "value", ts_col="bucket_ts", key_col="event_type"
-    )
-    return rolled.select(
-        "event_type",
-        "bucket_ts",
-        "value",
-        qfloor(F.col("rolling_avg")).alias("rolling_avg"),
-    )
-
-
-@register("flagship_ffill_chunked", _FLAGSHIP_SQL)
-def flagship_ffill_chunked_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The flagship spine with the skew-safe FILL (identical rows, same
-    oracle — the chunked-row precedent): ``ffill_chunked`` runs the
-    per-key last-non-null as a keyed prefix scan
-    (operators/timeseries.py; see ``_chunkjoin.keyed_scan``) — the
-    seventh routed family (operators/routing.py ``route("ffill")``;
-    measured crossover in BASELINE.md r11 addendum 6).  The grid the
-    fill runs over is span-bounded, not event-bounded — a decade of
-    5-min slots is ~1M rows PER KEY regardless of event volume, which
-    is exactly the few-keys-long-history shape the twins exist for.
-    Property equality (sparse gaps, all-null keys, null keys/ts) pinned
-    in tests/test_operators.py.  Built exactly like the plain flagship
-    (det_avg resample, not the operator's plain F.avg — the oracle's
-    float determinism contract) with only the fill swapped."""
-    events = load(spark, sf_dir, "events")
-    agg = events.groupBy(
-        "event_type", ts_ops.bucket(F.col("ts"), RATE).alias("bucket_ts")
-    ).agg(det_avg(F.col("value")).alias("avg_value"))
-    grid = ts_ops.time_grid(events, RATE, ts_col="ts", key_col="event_type")
-    filled = ts_ops.ffill_chunked(
-        grid.join(agg, ["event_type", "bucket_ts"], "left"),
-        "avg_value",
-        6 * 3600,
-        "bucket_ts",
-        "event_type",
+        ts_col="bucket_ts",
+        key_col="event_type",
         out_col="value",
     ).drop("avg_value")
     rolled = ts_ops.rolling_mean(
@@ -631,32 +599,17 @@ def _hourly_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).distinct()
 
 
-@register("lead_pairs_chunks", _LEAD_SQL)
-def lead_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@register_twins(
+    "lead_pairs",
+    "lead_pairs_chunks",
+    "lead_pairs_chunks_chunked",
+    _LEAD_SQL,
+    6 * 3600,
+)
+def lead_pairs_q(spark: SparkSession, sf_dir: str, op) -> DataFrame:
     """J5 — zip(splits[:-1], splits[1:]) chunking (reference dataset.py:527-531)."""
-    return ts_ops.lead_pairs(
+    return op(
         _hourly_buckets(spark, sf_dir), ts_col="bucket_ts", key_col="event_type"
-    ).select("event_type", "start_ts", "end_ts")
-
-
-@register("lead_pairs_chunks_chunked", _LEAD_SQL)
-def lead_pairs_chunked_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The skew-safe variant of ``lead_pairs_chunks`` (identical rows,
-    same oracle — the rolling_zscore_anomalies_chunked precedent): the
-    per-key lead window decomposed into (key, time-bucket) local pairs
-    plus a tiny next-bucket-first boundary table joined back broadcast
-    (operators/timeseries.py lead_pairs_chunked) — the shape that
-    survives one hot key's split history, where the plain per-key
-    window serializes it onto one task's sort.  Registered r11 with the
-    fifth routed family (operators/routing.py route("lead_pairs"); measured
-    crossover in BASELINE.md r11 addendum 5); the randomized property
-    test (tests/test_operators.py) additionally pins the two forms
-    multiset-equal, null timestamps included."""
-    return ts_ops.lead_pairs_chunked(
-        _hourly_buckets(spark, sf_dir),
-        6 * 3600,
-        ts_col="bucket_ts",
-        key_col="event_type",
     ).select("event_type", "start_ts", "end_ts")
 
 
@@ -690,42 +643,24 @@ FROM events
 """
 
 
-@register("positional_restamp", _RESTAMP_SQL)
-def positional_restamp_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@register_twins(
+    "restamp_positional",
+    "positional_restamp",
+    "positional_restamp_chunked",
+    _RESTAMP_SQL,
+    6 * 3600,
+)
+def positional_restamp_q(spark: SparkSession, sf_dir: str, op) -> DataFrame:
     """J6b — replace timestamps with a synthetic equal-length date_range
     (reference dataset.py:316-323): i-th row by ts order -> start + i*step.
     Per-key (the reference restamps one component at a time,
     dataset.py:303-323), so the row_number window partitions by event_type
     — no single-partition global sort at scale."""
     events = load(spark, sf_dir, "events")
-    out = ts_ops.restamp_positional(
+    out = op(
         events.select("event_id", "event_type", "ts"),
         "2025-01-01 00:00:00",
         60,
-        ts_col="ts",
-        key_col="event_type",
-        tiebreak_col="event_id",
-    )
-    return out.select("event_id", "event_type", F.col("ts").alias("new_ts"))
-
-
-@register("positional_restamp_chunked", _RESTAMP_SQL)
-def positional_restamp_chunked_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The skew-safe variant of ``positional_restamp`` (identical rows,
-    same oracle): the per-key row_number as a keyed prefix count
-    (operators/timeseries.py restamp_positional_chunked; see
-    ``_chunkjoin.keyed_scan``) — the sixth routed family
-    (operators/routing.py route("restamp_positional"); measured crossover
-    shared with lead_pairs, BASELINE.md r11 addendum 5).  Also the
-    distributed answer to the plain form's documented keyless
-    single-partition global sort.  Row-for-row equality (ties, null
-    timestamps, keyless) pinned in tests/test_operators.py."""
-    events = load(spark, sf_dir, "events")
-    out = ts_ops.restamp_positional_chunked(
-        events.select("event_id", "event_type", "ts"),
-        "2025-01-01 00:00:00",
-        60,
-        6 * 3600,
         ts_col="ts",
         key_col="event_type",
         tiebreak_col="event_id",
@@ -777,8 +712,14 @@ FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts >= r.ts
 """
 
 
-@register("asof_join_purchases", _ASOF_SQL)
-def asof_join_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
+@register_twins(
+    "asof_join",
+    "asof_join_purchases",
+    "asof_join_purchases_chunked",
+    _ASOF_SQL,
+    24 * 3600,
+)
+def asof_join_purchases(spark: SparkSession, sf_dir: str, op) -> DataFrame:
     """Two-stream as-of join (trades-and-quotes shape): every click event
     carries the value of the user's latest purchase at or before it.
     DuckDB's native ASOF LEFT JOIN is the oracle; Spark side is the
@@ -795,33 +736,8 @@ def asof_join_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id", "ts")
         .agg(F.max("value").alias("purchase_value"))
     )
-    return ts_ops.asof_join(
+    return op(
         left, right, ts_col="ts", key_col="user_id",
-        payload_cols=["purchase_value"],
-    ).select("event_id", "user_id", "ts", "purchase_value")
-
-
-@register("asof_join_purchases_chunked", _ASOF_SQL)
-def asof_join_purchases_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The skew-safe twin of ``asof_join_purchases`` (identical rows,
-    same oracle — the rolling_zscore/cusum chunked-row precedent): the
-    per-key forward fill as a keyed prefix scan
-    (operators/timeseries.py asof_join_chunked, r11; see
-    ``_chunkjoin.keyed_scan``).  Registered so the
-    driver certifies the twin's lineage every rotation — it is the form
-    ``route("asof_join")`` routes to when one hot key (the heavily-traded
-    symbol) would serialize both tables' history onto one task."""
-    events = load(spark, sf_dir, "events")
-    left = events.filter(F.col("event_type") == "click").select(
-        "user_id", "ts", "event_id"
-    )
-    right = (
-        events.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id", "ts")
-        .agg(F.max("value").alias("purchase_value"))
-    )
-    return ts_ops.asof_join_chunked(
-        left, right, 24 * 3600, ts_col="ts", key_col="user_id",
         payload_cols=["purchase_value"],
     ).select("event_id", "user_id", "ts", "purchase_value")
 
@@ -1159,8 +1075,14 @@ FROM (
 """
 
 
-@register("rolling_1h_range_frame", _RANGE_FRAME_SQL)
-def range_frame_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@register_twins(
+    "rolling_range",
+    "rolling_1h_range_frame",
+    "rolling_1h_range_frame_chunked",
+    _RANGE_FRAME_SQL,
+    6 * 3_600,
+)
+def range_frame_q(spark: SparkSession, sf_dir: str, op) -> DataFrame:
     """Event-TIME range frame (§2.5): each event's trailing-1-hour count
     and exact-cents sum over its signal, framed by actual timestamps
     (``RANGE BETWEEN 3600 PRECEDING``), not row counts — irregular
@@ -1173,52 +1095,20 @@ def range_frame_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     evaluates the RANGE frame by RESCANNING it per row, so cost is
     rows x frame_rows — density-dependent, which is why this query has
     a chunked twin routed on a compute product
-    (``rolling_1h_range_frame_chunked`` below).  The frame orders on MICROSECOND
+    (``rolling_1h_range_frame_chunked``).  The frame orders on MICROSECOND
     epochs (unix_timestamp would truncate to seconds and admit extra
     rows at the boundary vs the oracle); same-instant ties share a frame
     by definition on BOTH engines (RANGE semantics), so the exact
     integer sums need no tie-break."""
-    from pyspark.sql import Window
-
-    events = load(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy(F.unix_micros("ts"))
-        .rangeBetween(-3_600_000_000, 0)
-    )
-    cents = F.round(F.col("value") * 100).cast("long")
-    return events.select(
-        "event_id",
-        "event_type",
-        F.count(F.lit(1)).over(w).alias("n_1h"),
-        (F.sum(cents).over(w).cast("double") / F.lit(100.0)).alias("sum_1h"),
-    )
-
-
-@register("rolling_1h_range_frame_chunked", _RANGE_FRAME_SQL)
-def range_frame_chunked_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The skew-safe variant of ``rolling_1h_range_frame`` (identical
-    rows, same oracle): a trailing time frame reaches back at most
-    ``range_s``, so with bucket span >= range every frame crosses at
-    most one bucket boundary — rows in each bucket's last hour
-    replicate once into the next bucket as non-emitting context and
-    the frame runs entirely within (key, bucket), parallel across the
-    hot signal's history (operators/timeseries.py
-    ``rolling_range_chunked``; no carry table, no join — the eighth
-    routed family, operators/routing.py ``route("rolling_range")``,
-    measured crossover in BASELINE.md r11 addendum 7).  Property
-    equality incl. same-instant ties, null keys and null timestamps
-    pinned in tests/test_operators.py."""
     events = load(spark, sf_dir, "events")
     cents = F.round(F.col("value") * 100).cast("long")
-    out = ts_ops.rolling_range_chunked(
+    out = op(
         events.select("event_id", "event_type", "ts", "value"),
         3_600,
         lambda w: {
             "n_1h": F.count(F.lit(1)).over(w),
             "sum_1h": F.sum(cents).over(w).cast("double") / F.lit(100.0),
         },
-        bucket_span_s=6 * 3_600,
         ts_col="ts",
         key_col="event_type",
     )

@@ -576,3 +576,80 @@ def test_package_kernels_pickle_by_value():
         capture_output=True, text=True, cwd="/tmp",
     )
     assert "BYVALUE_OK" in r.stdout, (r.stdout, r.stderr[-500:])
+
+
+#: the registered plain/twin pairs: routing family -> (plain row, twin row)
+_TWIN_ROWS = {
+    "ffill": ("flagship_resample_ffill_rolling", "flagship_ffill_chunked"),
+    "lead_pairs": ("lead_pairs_chunks", "lead_pairs_chunks_chunked"),
+    "restamp_positional": ("positional_restamp", "positional_restamp_chunked"),
+    "asof_join": ("asof_join_purchases", "asof_join_purchases_chunked"),
+    "rolling_range": (
+        "rolling_1h_range_frame",
+        "rolling_1h_range_frame_chunked",
+    ),
+    "rolling_zscore": (
+        "rolling_zscore_anomalies",
+        "rolling_zscore_anomalies_chunked",
+    ),
+    "cusum_reflected": ("cusum_drift_flags", "cusum_drift_flags_chunked"),
+    "ewma": ("ewma_chart", "ewma_chart_chunked"),
+    "sessionize": ("sessionize_events", "sessionize_events_skew"),
+    "pack_documents": ("pack_documents", "pack_documents_chunked"),
+}
+
+
+def test_twin_rows_run_their_plain_body():
+    """Each registered twin row is its plain row's body, run on the
+    family's twin operator against the plain row's oracle, and no plans
+    module names a ``*_chunked`` operator itself: a twin row can only
+    come from ``register_twins``, so the two rows of a pair cannot
+    drift apart."""
+    import ast
+    import glob
+    import os
+
+    from amazon_lookout_for_equipment_python_sdk_spark.operators.routing import (
+        FAMILIES,
+    )
+    from amazon_lookout_for_equipment_python_sdk_spark.plans import (
+        queries as q,
+    )
+
+    for family, (plain, twin) in _TWIN_ROWS.items():
+        fam = FAMILIES[family]
+        p, t = q.QUERIES[plain], q.QUERIES[twin]
+        assert t.func is p.func, family
+        assert q.ORACLE_SQL[twin] == q.ORACLE_SQL[plain], family
+        assert p.keywords["op"] is fam.plain, family
+        assert t.keywords["op"].func is fam.twin, family
+    named = []
+    for path in glob.glob(os.path.join(os.path.dirname(q.__file__), "*.py")):
+        for node in ast.walk(ast.parse(open(path).read())):
+            name = getattr(node, "attr", None) or getattr(node, "id", None)
+            if isinstance(name, str) and name.endswith("_chunked"):
+                named.append(f"{os.path.basename(path)}:{node.lineno} {name}")
+    assert not named, named
+
+
+def test_register_refuses_a_duplicate_name():
+    """A second registration under a taken name raises instead of
+    silently replacing the first row and its oracle."""
+    import pytest
+
+    from amazon_lookout_for_equipment_python_sdk_spark.plans.registry import (
+        ORACLE_SQL,
+        QUERIES,
+        register,
+    )
+
+    name = "_duplicate_registration_probe"
+    assert name not in QUERIES
+    try:
+        register(name, "SELECT 1")(lambda spark, sf_dir: None)
+        with pytest.raises(ValueError, match=name):
+            register(name, "SELECT 2")(lambda spark, sf_dir: None)
+        assert ORACLE_SQL[name] == "SELECT 1"
+    finally:
+        QUERIES.pop(name, None)
+        ORACLE_SQL.pop(name, None)

@@ -6,6 +6,8 @@ Writes ``plans/<tag>/<query>.txt`` for each named query (default: every
 entry in bench.BENCH_QUERIES).  Plans are captured at sf0.001 by default
 (override with SF_DIR) — plan SHAPE (exchanges, join strategy, pushed
 filters, Python-eval nodes) is what the files pin; sizes differ by SF.
+Expression ids (``#N``) and ``plan_id=N`` are written normalized, so two
+dumps of the same queries diff clean across sessions and commits.
 
 Queries that eagerly execute machinery while BUILDING the frame
 (streaming replays) still only dump the plan of the returned frame.
@@ -14,6 +16,7 @@ Queries that eagerly execute machinery while BUILDING the frame
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -41,6 +44,7 @@ def main() -> None:
                     "formatted"
                 )
             )
+            plan = re.sub(r"plan_id=\d+", "plan_id=N", re.sub(r"#\d+", "#N", plan))
         except Exception as e:  # noqa: BLE001
             plan = f"ERROR: {type(e).__name__}: {e}"
         with open(os.path.join(out_dir, f"{name}.txt"), "w") as fh:
